@@ -52,14 +52,14 @@ def _graph(spark: SparkSession, sf_dir: str):
 
 
 def _harden(spark: SparkSession) -> None:
-    """Defensive session confs for whoever owns the session: Cypher null
-    semantics need non-ANSI, and date_trunc/timestamp rendering must agree
-    with the DuckDB oracle's UTC-naive timestamps."""
-    try:
-        spark.conf.set("spark.sql.ansi.enabled", "false")
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
-    except Exception:
-        pass
+    """Defensive session confs for whoever owns the session: the engine's
+    runtime confs (Cypher null semantics need non-ANSI), and
+    date_trunc/timestamp rendering must agree with the DuckDB oracle's
+    UTC-naive timestamps."""
+    from cypher_for_apache_spark_spark.session import _spark_tuning
+
+    _spark_tuning(spark)
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
 
 
 def _cypher(query: str) -> Callable[[SparkSession, str], DataFrame]:

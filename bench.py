@@ -27,8 +27,13 @@ Modes:
                                   with "reps": 3 are NOT comparable to the
                                   pre-r8 single-rep BENCH_local_iso_* files;
                                   both SFs were re-baselined in r8.
-  python bench.py --one NAME      (internal) time a single query in this
-                                  process; prints {"name", "sec"}
+  python bench.py --one NAME      time a single query in this process
+                                  (also the --isolate worker); prints
+                                  {"name", "sec", "reps"}, where reps
+                                  lists each timed rep's Spark jobs,
+                                  stages and tasks. Per-layer splits of
+                                  the benchmark workloads come from
+                                  perfbench/run.py --trace 1
 
 METHODOLOGY — FROZEN since round 2 (commit 5ac75a0) so cross-round
 numbers stay comparable; do not change without re-baselining every prior
@@ -66,6 +71,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from pyspark.sql import SparkSession
 
 import __spark_entry__ as E
+from cypher_for_apache_spark_spark import build_spark_session
 
 
 def _jvm_stats(spark) -> tuple[int, int, int]:
@@ -93,21 +99,19 @@ def _jvm_stats(spark) -> tuple[int, int, int]:
 
 
 def _build_session(cpus: str) -> SparkSession:
-    return (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("cypher-spark-bench")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.ansi.enabled", "false")
-        .config("spark.sql.crossJoin.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_MEM", "48g"))
-        # 32 distinct query shapes generate enough classes to exhaust the
-        # default 240m JIT code cache mid-run, after which execution falls
-        # back to the interpreter and late queries stall for seconds
-        .config(
-            "spark.driver.extraJavaOptions",
+    # the engine's own confs (dataFrameDebugging off, ANSI off, cross
+    # joins, AQE) come from build_spark_session; only the bench's are here
+    return build_spark_session(
+        master=f"local[{cpus}]",
+        app_name="cypher-spark-bench",
+        extra_confs={
+            "spark.sql.shuffle.partitions": cpus,
+            "spark.sql.session.timeZone": "UTC",
+            "spark.driver.memory": os.environ.get("SPARK_GRAFT_MEM", "48g"),
+            # 32 distinct query shapes generate enough classes to exhaust
+            # the default 240m JIT code cache mid-run, after which
+            # execution falls back to the interpreter and late queries
+            # stall for seconds.
             # 2g: 78 warmed query shapes' compiled methods no longer fit
             # in 1g, and once UseCodeCacheFlushing starts evicting, hot
             # nested-loop methods run interpreted (measured: the cosine
@@ -121,24 +125,18 @@ def _build_session(cpus: str) -> SparkSession:
             # random reps (measured r9: cc_order_chains 5.5-28.6s across
             # identical reps with 0.3-1.6s GC inside; with 32m regions
             # 4.9-6.1s with <0.2s GC — both variance and floor improve)
-            "-XX:ReservedCodeCacheSize=2g -XX:+UseCodeCacheFlushing "
-            "-XX:G1HeapRegionSize=32m",
-        )
-        # the generated-class cache defaults to 100 entries; 41 warmed query
-        # shapes à several codegen units thrash the LRU and the biggest
-        # classes (32-agg minhash, shingle transforms) recompile mid-run,
-        # with Janino contending against 32 busy cores
-        .config("spark.sql.codegen.cache.maxEntries", "5000")
-        # PySpark 4's DataFrame-debugging wrapper pays ~3 py4j round trips
-        # per DataFrame API call (getActiveSession + conf.get + origin
-        # set/clear) purely to enrich error messages with the Python call
-        # site. Plan building is driver-side Python; measured 3x faster
-        # plan builds with it off (5080 -> 1880 py4j calls / 10 plans).
-        # Static conf, so it must be set at session build. Scale-neutral:
-        # this removes constant per-call driver overhead, changes no plan.
-        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+            "spark.driver.extraJavaOptions": (
+                "-XX:ReservedCodeCacheSize=2g -XX:+UseCodeCacheFlushing "
+                "-XX:G1HeapRegionSize=32m"
+            ),
+            # the generated-class cache defaults to 100 entries; 41 warmed
+            # query shapes à several codegen units thrash the LRU and the
+            # biggest classes (32-agg minhash, shingle transforms)
+            # recompile mid-run, with Janino contending against 32 busy
+            # cores
+            "spark.sql.codegen.cache.maxEntries": "5000",
+            "spark.ui.enabled": "false",
+        },
     )
 
 
@@ -186,15 +184,37 @@ def _drain_jit(spark, max_wait: float, stable_polls: int = 3, poll_s: float = 0.
         return 0.0
 
 
-def _time_query(spark: SparkSession, fn, sf_dir: str) -> float | None:
+def _job_counts(spark, group: str) -> dict[str, int]:
+    """Jobs, stages and tasks the job group ran (statusTracker; stages
+    skipped by shuffle reuse report no tasks)."""
+    st = spark.sparkContext.statusTracker()
+    jobs = st.getJobIdsForGroup(group) or []
+    stages = tasks = 0
+    for j in jobs:
+        ji = st.getJobInfo(j)
+        for sid in ji.stageIds if ji is not None else ():
+            si = st.getStageInfo(sid)
+            if si is not None:
+                stages += 1
+                tasks += si.numTasks
+    return {"jobs": len(jobs), "stages": stages, "tasks": tasks}
+
+
+def _time_query(spark: SparkSession, fn, sf_dir: str):
     """Frozen per-query methodology: best-of-2, gc + cache-clear + JVM gc
-    nudge before each timed run (see module docstring / round-2 notes)."""
+    nudge before each timed run (see module docstring / round-2 notes).
+    Returns (best seconds or None, per-rep Spark job/stage/task counts);
+    each rep runs in its own job group, set before ``t0``."""
     best = None
-    for _ in range(2):
+    counts: list[dict[str, int]] = []
+    sc = spark.sparkContext
+    for rep in range(2):
         gc.collect()
         spark.catalog.clearCache()
-        spark.sparkContext._jvm.System.gc()
+        sc._jvm.System.gc()
         _drain_jit(spark, max_wait=2.0)
+        group = f"bench-rep{rep}"
+        sc.setJobGroup(group, group)
         t0 = time.time()
         try:
             df = fn(spark, sf_dir)
@@ -205,14 +225,18 @@ def _time_query(spark: SparkSession, fn, sf_dir: str) -> float | None:
                 f"# bench error: {type(ex).__name__}: {str(ex)[:200]}",
                 file=sys.stderr,
             )
-            return None
+            return None, counts
+        finally:
+            sc.setJobGroup(None, None)
+        counts.append(_job_counts(spark, group))
         best = dt if best is None else min(best, dt)
-    return best
+    return best, counts
 
 
 def _run_one(name: str, sf_dir: str, cpus: str) -> None:
     """Isolated-mode worker: fresh JVM, warm only this query, time it,
-    print a one-line JSON {"name", "sec"}."""
+    print a one-line JSON {"name", "sec", "reps"}; ``reps`` holds the
+    jobs/stages/tasks of each timed rep."""
     queries = E.queries()
     if name not in queries:
         print(json.dumps({"name": name, "sec": None, "err": "unknown query"}))
@@ -228,9 +252,10 @@ def _run_one(name: str, sf_dir: str, cpus: str) -> None:
     gc.collect()
     spark.catalog.clearCache()
     _drain_jit(spark, max_wait=30.0)
-    best = _time_query(spark, fn, sf_dir)
+    best, counts = _time_query(spark, fn, sf_dir)
     print(
-        json.dumps({"name": name, "sec": None if best is None else round(best, 3)}),
+        json.dumps({"name": name, "sec": None if best is None else round(best, 3),
+                    "reps": counts}),
         flush=True,
     )
     try:

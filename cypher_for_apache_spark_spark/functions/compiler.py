@@ -1946,12 +1946,6 @@ def _percentile_disc(arg: Column, p_expr: A.Expr, ctx: CompileCtx) -> Column:
     return F.element_at(arr, idx)
 
 
-def is_aggregate(e: A.Expr) -> bool:
-    return isinstance(e, A.CountStar) or (
-        isinstance(e, A.FuncCall) and e.name in AGGREGATES
-    )
-
-
 _COMPILERS = {
     A.Var: _var,
     A.Lit: _lit,

@@ -100,14 +100,3 @@ class EntityMeta:
 
 
 Header = Dict[str, EntityMeta]
-
-
-def header_columns(header: Header) -> List[str]:
-    out: List[str] = []
-    seen = set()
-    for meta in header.values():
-        for c in meta.columns():
-            if c not in seen:
-                seen.add(c)
-                out.append(c)
-    return out

@@ -29,7 +29,31 @@ needs.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession, functions as F
+
+# Size and width policy. Every gate that picks a plan from a MEASURED size
+# reads these at call time (never as bound defaults), so one place sets
+# the regime and tests can force the at-scale branches by patching them.
+
+# per-round frames (deltas, frontiers, label maps) broadcast at or below
+# this many rows
+BROADCAST_ROW_LIMIT = 1_000_000
+# a loop-invariant step side (var-length / shortest-path scans) is decided
+# once per loop, so it may be twice as large
+STATIC_BROADCAST_ROW_LIMIT = 2_000_000
+# static_loop_frame: ~2M slim long-key rows per cached partition
+STATIC_ROWS_PER_PARTITION = 2_000_000
+# loop_width: ~25k rows per task for the per-round aggregations
+LOOP_ROWS_PER_PARTITION = 25_000
+# expands over rel frames whose Catalyst size estimate is at least this
+# many bytes run the degree-skew sniff (plans/planner.py _auto_salt_factor)
+SALT_SNIFF_MIN_BYTES = 64 << 20
+
+
+def parallelism(spark: SparkSession) -> int:
+    """The session's configured shuffle width, the cap of every measured
+    width in the package."""
+    return max(1, int(spark.conf.get("spark.sql.shuffle.partitions")))
 
 
 def _reset_stats(df: DataFrame) -> DataFrame:
@@ -44,16 +68,16 @@ def _reset_stats(df: DataFrame) -> DataFrame:
     megabit BigIntegers and the driver spends minutes in stats estimation
     (measured: 0.9s -> 3.3s -> 52s per round). Rebuilding the DataFrame from
     the already-checkpointed InternalRow RDD resets the estimate to the
-    session default and keeps every round's planning cost flat."""
-    try:
-        jdf = df._jdf  # classic API only; no-op elsewhere
-        spark = df.sparkSession
-        new_jdf = spark._jsparkSession.internalCreateDataFrame(
-            jdf.queryExecution().toRdd(), jdf.schema(), False
-        )
-        return DataFrame(new_jdf, spark)
-    except Exception:
-        return df
+    session default and keeps every round's planning cost flat.
+
+    Needs the classic (JVM-backed) DataFrame API: any failure raises
+    instead of silently returning the frame with its inherited stats."""
+    spark = df.sparkSession
+    jdf = df._jdf
+    new_jdf = spark._jsparkSession.internalCreateDataFrame(
+        jdf.queryExecution().toRdd(), jdf.schema(), False
+    )
+    return DataFrame(new_jdf, spark)
 
 
 def materialize(df: DataFrame) -> DataFrame:
@@ -74,17 +98,13 @@ def materialize_count(df: DataFrame):
     explicit JVM-side count over the same internal RDD (no Python row
     traffic, no AQE re-planning), capturing the number the eager path
     throws away. Returns ``(frame, row_count)``."""
-    try:
-        ckpt = df.localCheckpoint(eager=False)
-        # toRdd() is the lazily-checkpointed internal RDD's scan; counting
-        # it computes + persists the checkpoint blocks (lineage truncates
-        # on first computation) and is the same single job the eager path
-        # runs internally.
-        n = int(ckpt._jdf.queryExecution().toRdd().count())
-        return _reset_stats(ckpt), n
-    except Exception:
-        m = materialize(df)
-        return m, m.count()
+    ckpt = df.localCheckpoint(eager=False)
+    # toRdd() is the lazily-checkpointed internal RDD's scan; counting it
+    # computes + persists the checkpoint blocks (lineage truncates on first
+    # computation) and is the same single job the eager path runs
+    # internally.
+    n = int(ckpt._jdf.queryExecution().toRdd().count())
+    return _reset_stats(ckpt), n
 
 
 def materialize_lazy(df: DataFrame) -> DataFrame:
@@ -103,10 +123,7 @@ def materialize_lazy(df: DataFrame) -> DataFrame:
     broadcast build): concurrent first consumers of an unmaterialized
     lazy checkpoint would race to compute it (per-block locks make that
     a wait locally, but a cluster can compute a partition twice)."""
-    try:
-        return _reset_stats(df.localCheckpoint(eager=False))
-    except Exception:
-        return materialize(df)
+    return _reset_stats(df.localCheckpoint(eager=False))
 
 
 def materialize_agg(df: DataFrame, *aggs):
@@ -120,17 +137,12 @@ def materialize_agg(df: DataFrame, *aggs):
     its blocks and truncates lineage, exactly like materialize_count's
     RDD count), so the scalar comes out of the job the loop already pays.
     Returns ``(frame, first_row_of_agg)``."""
-    try:
-        ckpt = df.localCheckpoint(eager=False)
-        row = ckpt.agg(*aggs).collect()[0]
-        return _reset_stats(ckpt), row
-    except Exception:
-        m = materialize(df)
-        return m, m.agg(*aggs).collect()[0]
+    ckpt = df.localCheckpoint(eager=False)
+    row = ckpt.agg(*aggs).collect()[0]
+    return _reset_stats(ckpt), row
 
 
-def static_loop_frame(df: DataFrame, key: str, rows_per_part: int = 2_000_000,
-                      multiplier: int = 1):
+def static_loop_frame(df: DataFrame, key: str, multiplier: int = 1):
     """Materialize a frame that an iterative loop equi-joins on ``key``
     every round, re-keyed into a scale-adaptive number of hash partitions.
 
@@ -145,8 +157,9 @@ def static_loop_frame(df: DataFrame, key: str, rows_per_part: int = 2_000_000,
     moves.
 
     The partition count is derived from the frame's measured row count
-    (scale-adaptive: ~2M long-key rows per partition), capped at the
-    session's configured shuffle parallelism — at bench scale a 150k-row
+    (scale-adaptive: ``STATIC_ROWS_PER_PARTITION`` long-key rows per
+    partition), capped at the session's configured shuffle parallelism —
+    at bench scale a 150k-row
     graph collapses to one partition (removing per-round task fan-out,
     measured ~25% on pagerank), at cluster scale the cap keeps the
     configured width. ``multiplier`` (capped by callers) scales the width
@@ -160,17 +173,10 @@ def static_loop_frame(df: DataFrame, key: str, rows_per_part: int = 2_000_000,
     RETURNED plan of their operator does not reference the frame after
     calling unpersist() (per-round state is checkpointed, so in the
     frontier loops it never does)."""
-    from pyspark.sql import functions as F  # noqa: F401  (parity import)
-
+    per = STATIC_ROWS_PER_PARTITION
     m, rows = materialize_count(df)
-    spark = df.sparkSession
-    try:
-        cap = max(1, int(spark.conf.get("spark.sql.shuffle.partitions")))
-    except Exception:
-        cap = 200
-    parts = int(
-        max(1, min(cap, (rows * max(1, multiplier) + rows_per_part - 1) // rows_per_part))
-    )
+    cap = parallelism(df.sparkSession)
+    parts = int(max(1, min(cap, (rows * max(1, multiplier) + per - 1) // per)))
     if parts >= cap:
         # big-data regime: the checkpoint is already the right shape and
         # an extra cached copy would double storage for no width change
@@ -179,7 +185,7 @@ def static_loop_frame(df: DataFrame, key: str, rows_per_part: int = 2_000_000,
     return p, rows, p.unpersist
 
 
-def loop_width(df: DataFrame, rows: int, rows_per_part: int = 25_000) -> int:
+def loop_width(df: DataFrame, rows: int) -> int:
     """Partition width for a loop's per-round aggregation, derived from a
     MEASURED row count (the loops' termination probes).
 
@@ -189,28 +195,31 @@ def loop_width(df: DataFrame, rows: int, rows_per_part: int = 25_000) -> int:
     round's aggregation, anti-join and checkpoint into ONE task and the loop
     serializes (measured 0.6-0.9 s per round single-threaded at sf0.1). An
     explicit ``repartition(loop_width(df, n), *keys)`` before the round's
-    aggregation pins ~25k rows per task instead; capped at the configured
-    shuffle parallelism so big rounds at cluster scale keep the configured
-    width."""
-    try:
-        cap = max(1, int(df.sparkSession.conf.get("spark.sql.shuffle.partitions")))
-    except Exception:
-        cap = 200
-    return int(min(cap, max(1, (rows + rows_per_part - 1) // rows_per_part)))
+    aggregation pins ``LOOP_ROWS_PER_PARTITION`` rows per task instead;
+    capped at the configured shuffle parallelism so big rounds at cluster
+    scale keep the configured width."""
+    per = LOOP_ROWS_PER_PARTITION
+    return int(min(parallelism(df.sparkSession), max(1, (rows + per - 1) // per)))
 
 
-def maybe_broadcast(df: DataFrame, rows, limit: int = 1_000_000):
-    """Broadcast-hint a per-round delta frame when its MEASURED row count
-    is small. Checkpointed frames carry no usable stats, so Catalyst plans
-    sort-merge joins whose per-round cost is a full merge scan of the
-    static side; with the delta broadcast, the static side is probed in
+def broadcastable(rows, loop_invariant: bool = False) -> bool:
+    """Whether a frame of MEASURED size ``rows`` is small enough to
+    broadcast: ``BROADCAST_ROW_LIMIT`` for per-round frames,
+    ``STATIC_BROADCAST_ROW_LIMIT`` for a loop-invariant step side whose
+    join strategy is decided once per loop."""
+    limit = STATIC_BROADCAST_ROW_LIMIT if loop_invariant else BROADCAST_ROW_LIMIT
+    return rows is not None and rows <= limit
+
+
+def maybe_broadcast(df: DataFrame, rows, loop_invariant: bool = False):
+    """Broadcast-hint a frame when its MEASURED row count is small (see
+    ``broadcastable``). Checkpointed frames carry no usable stats, so
+    Catalyst plans sort-merge joins whose per-round cost is a full merge
+    scan of the static side; with the delta broadcast, the static side is
+    probed in
     place — no exchange, no sort, parallel over its cached partitions.
     The gate is an actual count (the loops' termination probes), never an
     estimate, so an adversarial graph whose wave is O(V) falls back to the
     shuffle join instead of OOMing the driver — the same measured-size
     discipline AQE applies."""
-    from pyspark.sql import functions as F
-
-    if rows is not None and rows <= limit:
-        return F.broadcast(df)
-    return df
+    return F.broadcast(df) if broadcastable(rows, loop_invariant) else df

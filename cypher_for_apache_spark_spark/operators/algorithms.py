@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, Window, functions as F
 
 from cypher_for_apache_spark_spark.graph import PropertyGraph
 from cypher_for_apache_spark_spark.materialize import (
+    broadcastable as _broadcastable,
     loop_width as _loop_width,
     materialize as _checkpoint,
     materialize_agg as _checkpoint_agg,
@@ -271,7 +272,7 @@ def connected_components_edges(
         # the big-wave SMJ fallback the two join sides would race the
         # unmaterialized checkpoint (possible duplicate compute on a
         # cluster), so that regime keeps the eager form.
-        lbl = _checkpoint_lazy(lbl) if v_bound <= 1_000_000 else _checkpoint(lbl)
+        lbl = _checkpoint_lazy(lbl) if _broadcastable(v_bound) else _checkpoint(lbl)
         # rewrite edges on the contracted graph. Both endpoint lookups
         # join the SAME checkpointed label map — alias it twice instead of
         # projecting two renamed copies, so the two broadcast exchanges
@@ -451,8 +452,8 @@ def k_core(
     # the canonical frame itself: the per-round "neighbours of the wave"
     # lookup becomes ONE equi-join on a single key instead of a src-branch
     # + dst-branch pair. The peel runs MANY rounds, so the static side is
-    # cached at parallelism width (~250k rows/partition) and each round's
-    # wave joins it broadcast (see _maybe_broadcast): the adjacency is
+    # cached at 8x the static-frame width (~250k rows/partition) and each
+    # round's wave joins it broadcast (see _maybe_broadcast): the adjacency is
     # probed in place every round — no exchange, no sort, parallel probe —
     # instead of a full sort-merge pass per round
     adj, _, drop_adj = _static_loop_frame(
@@ -463,7 +464,7 @@ def k_core(
             ["id", "nbr"],
         ),
         "id",
-        rows_per_part=250_000,
+        multiplier=8,
     )
     # delta-only iteration: degrees are aggregated ONCE; every later round
     # materializes nothing but the (tiny) per-round wave, the cumulative

@@ -344,13 +344,14 @@ def line_dedup(
     - reassembly is the single unavoidable text shuffle: one groupBy on
       the doc id with sort_array(collect_list(struct(pos, line))).
 
-    Returns (id, text, n_lines_kept, n_lines_removed) with cleaned text.
+    Returns (id, text, n_lines_kept, n_lines_removed) with cleaned text,
+    one row per input document; NULL text is treated as "".
     """
     lines = df.select(
         F.col(id_col),
-        F.posexplode(F.split(F.col(text_col), F.lit(delimiter), -1)).alias(
-            "_pos", "_line"
-        ),
+        F.posexplode(
+            F.split(F.coalesce(F.col(text_col), F.lit("")), F.lit(delimiter), -1)
+        ).alias("_pos", "_line"),
     ).withColumn("_h", portable_hash60(F.col("_line")))
     heavy = (
         lines.groupBy("_h")

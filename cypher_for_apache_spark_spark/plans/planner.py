@@ -36,10 +36,12 @@ from cypher_for_apache_spark_spark.functions.compiler import (
 )
 from cypher_for_apache_spark_spark.graph import PropertyGraph
 from cypher_for_apache_spark_spark.header import EntityMeta, Header, fresh
+from cypher_for_apache_spark_spark import materialize as _policy
 from cypher_for_apache_spark_spark.materialize import (
     loop_width,
     materialize,
     materialize_count,
+    maybe_broadcast,
 )
 from cypher_for_apache_spark_spark.plans.record import Record
 
@@ -78,25 +80,19 @@ class Planner:
         spark: SparkSession,
         graph: Optional[PropertyGraph],
         params: Optional[dict] = None,
-        cache_varlength_scans: bool = True,
         catalog: Optional[dict] = None,
         driving_table: Optional[DataFrame] = None,
         views: Optional[dict] = None,
         graph_params: Optional[dict] = None,
-        expand_salt_factor: int = 0,
-        expand_salt_auto_min_bytes: int = 64 << 20,
         procedures=None,
     ):
         self.spark = spark
         self.graph = graph
         self.params = params or {}
-        self.cache_varlength_scans = cache_varlength_scans
         self.catalog = catalog or {}
         self.driving_table = driving_table
         self.views = views if views is not None else {}
         self.graph_params = graph_params or {}
-        self.expand_salt_factor = expand_salt_factor
-        self.expand_salt_auto_min_bytes = expand_salt_auto_min_bytes
         self._procedures = procedures
         self._uid = itertools.count()
 
@@ -113,10 +109,10 @@ class Planner:
         return f"{var}@{next(self._uid)}"
 
     def _auto_salt_factor(self, rdf, near_col: str, memo_key) -> int:
-        """Auto-trigger for supernode salting when ``expand_salt_factor``
-        is left at its 0 default: for rel frames whose Catalyst size
-        estimate exceeds ``expand_salt_auto_min_bytes`` (stats-only — no
-        job; small graphs like TCK fixtures never pay anything), run the
+        """Salt factor for an expand (0 = plain join): for rel frames whose
+        Catalyst size estimate is at least ``SALT_SNIFF_MIN_BYTES``
+        (materialize.py; stats-only — no job, so small graphs like TCK
+        fixtures never pay anything), run the
         bounded degree-skew sniff (skew.degree_skew_factor: one narrow job
         over a 100k-row sample) and salt when one endpoint id dominates.
         The verdict is memoized on the graph per (rel types, direction),
@@ -135,16 +131,14 @@ class Planner:
             size = int(str(stats.sizeInBytes()))
         except Exception:
             size = None
-        if self.expand_salt_auto_min_bytes <= 0:
-            big = True  # gate disabled: always sniff
-        elif size is None or size >= (1 << 62):
+        if size is None or size >= (1 << 62):
             # stats unavailable or Catalyst's defaultSizeInBytes sentinel
             # (in-memory frames report Long.MaxValue) — don't burn a sniff
             # job on frames whose size we can't actually see; file-backed
             # scans (the at-scale case) report real sizes
             big = False
         else:
-            big = size >= self.expand_salt_auto_min_bytes
+            big = size >= _policy.SALT_SNIFF_MIN_BYTES
         if big:
             from cypher_for_apache_spark_spark.operators.skew import (
                 degree_skew_factor,
@@ -1117,10 +1111,10 @@ class Planner:
                 self.spark,
                 None,
                 self.params,
-                self.cache_varlength_scans,
                 catalog=self.catalog,
                 views=self.views,
                 graph_params=bound,
+                procedures=self.procedures,
             )
             res = sub.plan(inner)
             if res.graph is None:
@@ -1644,14 +1638,13 @@ class Planner:
                 # joined once per BFS round — materialize or Spark rescans
                 # (checkpoint + size probe fused into one job)
                 step, n_step = materialize_count(step)
-                if n_step <= 2_000_000:
-                    # the loop's join strategy is decided once — broadcast
-                    # a small step side (checkpointed scans are opaque to
-                    # AQE's stats), as in var_length_expand; r8: applied
-                    # to bounded hi too, which previously re-exchanged and
-                    # re-sorted the step frame in every one of its hi
-                    # rounds (plan-verified: 2 exchanges/round -> 0)
-                    step = F.broadcast(step)
+                # the loop's join strategy is decided once — broadcast a
+                # small step side (checkpointed scans are opaque to AQE's
+                # stats), as in var_length_expand; r8: applied to bounded
+                # hi too, which previously re-exchanged and re-sorted the
+                # step frame in every one of its hi rounds (plan-verified:
+                # 2 exchanges/round -> 0)
+                step = maybe_broadcast(step, n_step, loop_invariant=True)
         else:
             step = None
 
@@ -2537,23 +2530,19 @@ class Planner:
             branch_rdf = rdf
             if dedup_self_loops:
                 branch_rdf = rdf.filter(F.col(rmeta.src_col) != F.col(rmeta.dst_col))
-            salt_factor = self.expand_salt_factor
-            if salt_factor == 0:
-                salt_factor = self._auto_salt_factor(
-                    branch_rdf, near, (frozenset(rel.types or ()), direction)
-                )
-            if salt_factor > 1:
+            factor = self._auto_salt_factor(
+                branch_rdf, near, (frozenset(rel.types or ()), direction)
+            )
+            if factor > 1:
                 # supernode salting (operators/skew.py rationale): a hub
                 # node's relationship rows all land on one reducer in the
                 # plain equi-join — salt the REL side by (near id, rel id)
                 # and replicate the record side over the salt range so
                 # each hot node spreads across `factor` reducers. AQE's
                 # skew split covers sort-merge spills, but not a broadcast
-                # or window downstream keyed on the same hub id. Forced
-                # via expand_salt_factor > 1, or auto-triggered by the
-                # degree-skew sniff (_auto_salt_factor) when the factor is
-                # left at 0; expand_salt_factor=1 disables salting.
-                factor = salt_factor
+                # or window downstream keyed on the same hub id. The
+                # factor comes from the degree-skew sniff
+                # (_auto_salt_factor).
                 sl, sr = fresh("salt"), fresh("salt")
                 salted = branch_rdf.withColumn(
                     sr,
@@ -2729,9 +2718,6 @@ class Planner:
         lo, hi = rel.var_length
         if lo < 0 or (hi is not None and hi < lo):
             raise CypherPlanningError(f"bad var-length range *{lo}..{hi}")
-        if hi == 0 and lo == 0 and tgt.var == src_var:
-            pass  # zero-length self: handled below
-
         rel_var = rel.var or self._anon()
         src_meta = rec.header[src_var]
 
@@ -2771,7 +2757,6 @@ class Planner:
             ]
             return d.select(sel)
 
-        n_step = None
         if rdf is not None:
             if rel.direction == "out":
                 step = orient(rdf, rmeta.src_col, rmeta.dst_col, rmeta.id_col, True)
@@ -2786,7 +2771,7 @@ class Planner:
                      F.col(rmeta.id_col), F.lit(False)],
                     ["_near", "_far", "_rid", "_fwd"],
                 )
-            if self.cache_varlength_scans and (hi is None or hi > 1):
+            if hi is None or hi > 1:
                 # the same oriented scan is joined up to ``hi`` times —
                 # materialize it or Spark recomputes the scan per branch
                 # (reference: RelationalOptimizer.scala
@@ -2795,12 +2780,12 @@ class Planner:
                 # unlike the round-2 persist() that accumulated CacheManager
                 # entries across queries in a long-lived session.
                 step, n_step = materialize_count(step)
-                if hi is not None and n_step <= 2_000_000:
-                    # r8: small step sides broadcast in the BOUNDED unroll
-                    # too (the unbounded fixpoint already did) — each of
-                    # the hi chained joins previously re-exchanged and
-                    # re-sorted the step frame
-                    step = F.broadcast(step)
+                # the loop's join strategy is decided once: the checkpointed
+                # scan is opaque to AQE's stats, so hint broadcast when it
+                # is comfortably small — every chained join (bounded
+                # unroll) or fixpoint round (unbounded) then probes it in
+                # place instead of re-exchanging and re-sorting it
+                step = maybe_broadcast(step, n_step, loop_invariant=True)
         else:
             step = None
 
@@ -2822,15 +2807,6 @@ class Planner:
             levels.append(starts.select(*zsel))
 
         if step is not None and (hi is None or hi >= 1):
-            if hi is None:
-                # the fixpoint's join strategy is decided once: the step
-                # scan is checkpointed (opaque to AQE's stats), so hint
-                # broadcast explicitly when it's comfortably small — the
-                # whole loop then never shuffles the step side. The size
-                # comes free from the fused materialize_count above when
-                # the scan was cached; only the uncached path counts here.
-                if (n_step if n_step is not None else step.count()) <= 2_000_000:
-                    step = F.broadcast(step)
             s1sel = [
                 F.col("_near"),
                 F.array(F.col("_rid")).alias(ids_col),
@@ -2906,26 +2882,19 @@ class Planner:
                 # ...and that width is inherited from however the starts
                 # scan happened to split — a frontier born of a one-split
                 # scan serializes EVERY chunk of the loop into one task.
-                # Make it scale-adaptive like the other loop frames
-                # (static_loop_frame discipline): derive from the MEASURED
-                # entry count (path rows carry growing arrays and pay
-                # O(depth) work per extend, so ~25k rows/partition), cap
-                # at the configured shuffle width; widen only (a frontier
-                # already wider than the target keeps its layout — no
-                # pure-waste exchange at cluster scale). One lazy
-                # round-robin exchange of the slim entry rows, absorbed
-                # into chunk 1's checkpoint job. Measured on
+                # Make it scale-adaptive like the other loop frames:
+                # loop_width of the MEASURED entry count (path rows carry
+                # growing arrays and pay O(depth) work per extend, so the
+                # per-round row target), capped at the configured shuffle
+                # width; widen only (a frontier already wider than the
+                # target keeps its layout — no pure-waste exchange at
+                # cluster scale). One lazy round-robin exchange of the
+                # slim entry rows, absorbed into chunk 1's checkpoint
+                # job. Measured on
                 # varlength_unbounded_chain (sf0.1, 135k entry rows,
                 # 1-split orders scan): 1 -> 6 loop partitions,
                 # 7.3 s -> 3.0 s isolated.
-                try:
-                    width_cap = max(
-                        1,
-                        int(cur.sparkSession.conf.get("spark.sql.shuffle.partitions")),
-                    )
-                except Exception:
-                    width_cap = 200
-                want_parts = min(width_cap, max(1, (n_cur + 24_999) // 25_000))
+                want_parts = loop_width(cur, n_cur)
                 if want_parts > entry_parts:
                     entry_parts = want_parts
                     cur = cur.repartition(entry_parts)

@@ -64,9 +64,11 @@ def build_spark_session(
     extra_confs: Optional[Mapping[str, str]] = None,
 ) -> SparkSession:
     """Build a SparkSession with the static configuration this library's
-    workloads want. ``CypherSession`` accepts any session, but STATIC confs
-    cannot be set after the session exists — use this builder (or copy its
-    confs) so product sessions get them too, not just the bench harness.
+    workloads want, plus ``extra_confs``, then apply the runtime confs of
+    ``_spark_tuning``. ``CypherSession`` accepts any session, but STATIC
+    confs cannot be set after the session exists — build through this
+    function (or copy its confs) so product sessions get them too, not
+    just the bench harness.
 
     - ``spark.python.sql.dataFrameDebugging.enabled=false``: PySpark 4's
       DataFrame-debugging wrapper pays ~3 py4j round trips per DataFrame
@@ -76,60 +78,45 @@ def build_spark_session(
       measured 3x faster plan builds with it off (5080 -> 1880 py4j calls
       per 10 plans). Physical plans are bit-identical — the only loss is
       error-message call-site enrichment.
-
-    Runtime confs (ANSI off, cross joins, AQE) are applied here too, but
-    those are also re-applied per-session by ``CypherSession``.
     """
     b = SparkSession.builder.appName(app_name)
     if master is not None:
         b = b.master(master)
-    b = (
-        b.config("spark.python.sql.dataFrameDebugging.enabled", "false")
-        .config("spark.sql.ansi.enabled", "false")
-        .config("spark.sql.crossJoin.enabled", "true")
-        .config("spark.sql.adaptive.enabled", "true")
-    )
+    b = b.config("spark.python.sql.dataFrameDebugging.enabled", "false")
     for k, v in (extra_confs or {}).items():
         b = b.config(k, v)
-    return b.getOrCreate()
+    spark = b.getOrCreate()
+    _spark_tuning(spark)
+    return spark
 
 
 def _spark_tuning(spark: SparkSession) -> None:
-    """Session-level settings Cypher semantics rely on. All are
-    runtime-settable SQL confs."""
-    try:
-        # Cypher ternary logic wants null-on-error, not ANSI errors
-        spark.conf.set("spark.sql.ansi.enabled", "false")
-        # OPTIONAL MATCH with disjoint patterns needs cross joins (reference:
-        # MorpheusSession.scala:104 sets spark.sql.crossJoin.enabled)
-        spark.conf.set("spark.sql.crossJoin.enabled", "true")
-        spark.conf.set("spark.sql.adaptive.enabled", "true")
-    except Exception:
-        pass
+    """The runtime SQL confs Cypher semantics rely on — the one place the
+    package sets them (reference: MorpheusSession.scala:104)."""
+    # Cypher ternary logic wants null-on-error, not ANSI errors
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    # OPTIONAL MATCH with disjoint patterns needs cross joins
+    spark.conf.set("spark.sql.crossJoin.enabled", "true")
+    spark.conf.set("spark.sql.adaptive.enabled", "true")
 
 
 class CypherSession:
-    def __init__(
-        self,
-        spark: SparkSession,
-        expand_salt_factor: int = 0,
-        expand_salt_auto_min_bytes: int = 64 << 20,
-    ):
-        """``expand_salt_factor``: skew salting for pattern expands on
-        supernode-heavy graphs (hub nodes whose degree pins one reducer).
-        0 (default) = AUTO — rel frames whose Catalyst size estimate
-        exceeds ``expand_salt_auto_min_bytes`` get a one-off bounded
+    def __init__(self, spark: SparkSession):
+        """Wrap ``spark`` (any SparkSession; ``build_spark_session`` adds
+        the static confs) and apply the runtime confs Cypher needs.
+
+        Pattern expands over supernode-heavy graphs are salted
+        automatically: rel frames whose Catalyst size estimate reaches
+        ``materialize.SALT_SNIFF_MIN_BYTES`` get a one-off bounded
         degree-skew sniff (memoized per graph/type/direction), and expands
-        over a dominant hub are salted automatically; 1 = off; N>1 forces
-        spreading each hot node's relationship rows over N reducers
-        (operators/skew.py rationale). The salted result is plan-asserted
-        equal to the unsalted expand in tests."""
+        over a dominant hub spread each hot node's relationship rows over
+        the sniffed number of reducers (operators/skew.py rationale). The
+        salted result is plan-asserted equal to the unsalted expand in
+        tests."""
         self.spark = spark
         _spark_tuning(spark)
         self.catalog: Dict[str, PropertyGraph] = {}
         self.views: Dict[str, tuple] = {}  # name -> (params, query AST)
-        self.expand_salt_factor = expand_salt_factor
-        self.expand_salt_auto_min_bytes = expand_salt_auto_min_bytes
         from cypher_for_apache_spark_spark.procedures import ProcedureRegistry
 
         self.procedures = ProcedureRegistry()
@@ -236,8 +223,6 @@ class CypherSession:
             catalog=self.catalog,
             driving_table=driving_table,
             views=self.views,
-            expand_salt_factor=self.expand_salt_factor,
-            expand_salt_auto_min_bytes=self.expand_salt_auto_min_bytes,
             procedures=self.procedures,
         )
         result = planner.plan(ast)

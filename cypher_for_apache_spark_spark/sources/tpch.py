@@ -30,6 +30,7 @@ from cypher_for_apache_spark_spark.graph import (
     TripletTable,
     build_triplet_frame,
 )
+from cypher_for_apache_spark_spark.materialize import parallelism
 
 S = 1 << 40  # id stride per entity class
 
@@ -142,10 +143,7 @@ def load_tpch_graph(
     # CPU-bound per row, so a few-MB input serialized the whole build
     # into one task (measured 2x on the rebuild either way at sf0.1;
     # every cache-cleared rerun pays it).
-    try:
-        _width = max(1, int(spark.conf.get("spark.sql.shuffle.partitions")))
-    except Exception:
-        _width = 200
+    _width = parallelism(spark)
     nxt = (
         orders.repartition(_width, "o_custkey")
         .select(

@@ -183,15 +183,3 @@ def from_spark_type(dt: T.DataType, nullable: bool = True) -> CypherType:
     if isinstance(dt, T.NullType):
         return CTNull
     return CTAny.with_nullable(nullable)
-
-
-def cypher_compatible_column(df_schema: T.StructType, name: str):
-    """Return (needs_cast, target_spark_type) to lift a column into the
-    engine's canonical physical types: integer-ish -> long, float -> double
-    (reference: withCypherCompatibleTypes, SparkTable.scala:456-467)."""
-    f = df_schema[name]
-    if isinstance(f.dataType, (T.ByteType, T.ShortType, T.IntegerType)):
-        return True, T.LongType()
-    if isinstance(f.dataType, T.FloatType):
-        return True, T.DoubleType()
-    return False, f.dataType

@@ -73,11 +73,6 @@ def to_zeppelin_table(result, limit: int = 1000) -> str:
     return "\n".join(lines)
 
 
-def print_table(result, limit: int = 1000) -> None:
-    """Prints ``%table`` + the TSV body (ZeppelinSupport printTable)."""
-    print("%table\n" + to_zeppelin_table(result, limit))
-
-
 def _node_json(s: dict) -> dict:
     labels = list(s.get("labels") or [])
     props = {
@@ -140,8 +135,3 @@ def to_zeppelin_graph_json(result, limit: int = 1000) -> str:
         indent=2,
         default=str,
     )
-
-
-def print_graph(result, limit: int = 1000) -> None:
-    """Prints ``%network`` + the graph JSON (ZeppelinSupport printGraph)."""
-    print("%network\n" + to_zeppelin_graph_json(result, limit))

@@ -11,15 +11,18 @@ from __future__ import annotations
 
 from pyspark.sql import SparkSession
 
+from cypher_for_apache_spark_spark import build_spark_session
+
 
 def local_session() -> SparkSession:
-    return (
-        SparkSession.builder.master("local[*]")
-        .appName("examples")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+    return build_spark_session(
+        master="local[*]",
+        app_name="examples",
+        extra_confs={
+            "spark.sql.shuffle.partitions": "8",
+            "spark.sql.session.timeZone": "UTC",
+            "spark.ui.enabled": "false",
+        },
     )
 
 

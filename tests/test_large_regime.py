@@ -1,0 +1,132 @@
+"""The at-scale branches of the size/width policy, forced on a small graph.
+
+Every gate that picks a plan from a measured size reads its threshold from
+``materialize.py`` at call time. Local test data never crosses those
+thresholds, so the shuffle joins (per-round frames above the broadcast
+limits), the full-width static loop frames and the widest loop rounds
+would otherwise run only on a cluster. Here the thresholds are patched to
+force those branches (broadcast limits 0, one row per partition, salt
+gate 0, Catalyst's own broadcast threshold off), and each operator must
+return exactly the rows of the default regime.
+"""
+
+import pytest
+
+from cypher_for_apache_spark_spark import materialize
+from cypher_for_apache_spark_spark.operators import algorithms as alg
+from cypher_for_apache_spark_spark.session import CypherSession
+from cypher_for_apache_spark_spark.sources import edgelist
+
+
+# 60 nodes: a directed chain 0 -> ... -> 39 with chords, a 3-cycle, a
+# tail, and a separate 10-node ring (two components, cycles, and vertices
+# of degree 1 for k_core to peel)
+_EDGES = (
+    [(i, i + 1, float(1 + i % 3)) for i in range(39)]
+    + [(i, i + 7, 9.0) for i in range(0, 30, 5)]
+    + [(40 + i, 40 + (i + 1) % 10, 1.0) for i in range(10)]
+    + [(3, 1, 1.0), (55, 56, 2.0)]
+)
+
+
+@pytest.fixture(scope="module")
+def graph(spark):
+    return edgelist.from_edge_df(spark.createDataFrame(_EDGES, "src long, dst long, w double"))
+
+
+@pytest.fixture()
+def forced(spark, monkeypatch):
+    """Force the at-scale regime; returns the verdicts ``maybe_broadcast``
+    reached so a test can check that the shuffle branch really ran."""
+    monkeypatch.setattr(materialize, "BROADCAST_ROW_LIMIT", 0)
+    monkeypatch.setattr(materialize, "STATIC_BROADCAST_ROW_LIMIT", 0)
+    monkeypatch.setattr(materialize, "STATIC_ROWS_PER_PARTITION", 1)
+    monkeypatch.setattr(materialize, "LOOP_ROWS_PER_PARTITION", 1)
+    monkeypatch.setattr(materialize, "SALT_SNIFF_MIN_BYTES", 0)
+    verdicts = []
+    gate = materialize.broadcastable
+
+    def spy(rows, loop_invariant=False):
+        verdicts.append((rows, gate(rows, loop_invariant)))
+        return verdicts[-1][1]
+
+    monkeypatch.setattr(materialize, "broadcastable", spy)
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    yield verdicts
+    spark.conf.set(key, old)
+
+
+def _rows(df, digits=None):
+    out = []
+    for r in df.collect():
+        t = tuple(r)
+        if digits is not None:
+            t = tuple(round(v, digits) if isinstance(v, float) else v for v in t)
+        out.append(t)
+    return sorted(out)
+
+
+def _same_in_both_regimes(request, run, digits=None):
+    default = _rows(run(), digits)
+    assert default, "the fixture must give the operator something to return"
+    verdicts = request.getfixturevalue("forced")
+    assert _rows(run(), digits) == default
+    return verdicts
+
+
+def _shuffled(verdicts):
+    """The forced run reached a size gate and took its shuffle branch."""
+    assert verdicts and not any(ok for rows, ok in verdicts if rows)
+
+
+def test_pagerank(request, graph):
+    # ranks are float sums whose order follows the partitioning
+    v = _same_in_both_regimes(request, lambda: alg.pagerank(graph, iterations=10), 9)
+    _shuffled(v)
+
+
+def test_connected_components(request, graph):
+    v = _same_in_both_regimes(request, lambda: alg.connected_components(graph))
+    _shuffled(v)
+
+
+def test_k_core(request, graph):
+    v = _same_in_both_regimes(request, lambda: alg.k_core(graph, k=2))
+    _shuffled(v)
+
+
+def test_sssp(request, graph):
+    v = _same_in_both_regimes(request, lambda: alg.sssp(graph, [0, 40], weight_prop="w"))
+    _shuffled(v)
+
+
+def test_bfs(request, graph):
+    v = _same_in_both_regimes(request, lambda: alg.bfs_distances(graph, [20, 45], undirected=True))
+    _shuffled(v)
+
+
+@pytest.fixture(scope="module")
+def cypher_graph(spark):
+    ids = sorted({n for s, d, _ in _EDGES for n in (s, d)})
+    nodes = spark.createDataFrame([(i, f"n{i}") for i in ids], "id long, name string")
+    rels = spark.createDataFrame(
+        [(rid, s, d) for rid, (s, d, _) in enumerate(_EDGES)], "id long, src long, dst long"
+    )
+    return CypherSession(spark).read_from({"N": nodes}, {"E": rels})
+
+
+def test_unbounded_var_length(request, cypher_graph):
+    q = ("MATCH (a:N)-[:E*]->(b:N) WHERE a.name IN ['n0', 'n30', 'n41'] "
+         "RETURN a.name AS a, b.name AS b, count(*) AS paths")
+    v = _same_in_both_regimes(request, lambda: cypher_graph.cypher(q).df)
+    _shuffled(v)
+
+
+def test_shortest_path(request, cypher_graph):
+    q = ("MATCH p = shortestPath((a:N)-[:E*]->(b:N)) "
+         "WHERE a.name = 'n0' AND b.name IN ['n20', 'n39'] "
+         "RETURN b.name AS b, length(p) AS hops")
+    v = _same_in_both_regimes(request, lambda: cypher_graph.cypher(q).df)
+    _shuffled(v)

@@ -115,6 +115,28 @@ def test_parameterized_view(catalog_session):
     assert "lucky_ones" not in catalog_session.views
 
 
+def test_view_body_calls_session_procedure(catalog_session):
+    """A view body plans with the session's procedure registry, like the
+    same body under CATALOG CREATE GRAPH."""
+    catalog_session.register_procedure(
+        "my.one", lambda ctx: ctx.spark.range(1).selectExpr("1 AS x"), ["x"]
+    )
+    body = """FROM GRAPH {g}
+             MATCH (p:Person) WHERE p.luckyNumber = 8
+             CALL my.one() YIELD x
+             WITH p, x WHERE x = 1
+             CONSTRUCT CLONE p
+             RETURN GRAPH"""
+    catalog_session.cypher(f"CATALOG CREATE GRAPH ones {{ {body.format(g='team')} }}")
+    catalog_session.cypher(f"CATALOG CREATE VIEW ones_of($g) {{ {body.format(g='$g')} }}")
+    want = [{"c": 2}]
+    q = "FROM GRAPH {} MATCH (n) RETURN count(*) AS c"
+    assert catalog_session.cypher(q.format("ones")).to_maps() == want
+    assert catalog_session.cypher(q.format("ones_of(team)")).to_maps() == want
+    catalog_session.cypher("CATALOG DELETE VIEW ones_of")
+    catalog_session.cypher("CATALOG DELETE GRAPH ones")
+
+
 def test_union_graphs(team_graph):
     u = union_graphs(team_graph, team_graph)
     assert u.cypher("MATCH (n:Person) RETURN count(*) AS c").to_maps() == [{"c": 10}]

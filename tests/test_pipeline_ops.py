@@ -440,10 +440,14 @@ def test_line_dedup_removes_corpus_boilerplate(spark):
             (2, f"unique two\n{boiler}"),
             (3, f"{boiler}"),
             (4, "untouched doc"),
+            (5, None),
         ],
         "doc_id long, text string",
     )
     out = {r["doc_id"]: r for r in text.line_dedup(df, max_count=2).collect()}
+    # every input document yields one row; NULL text cleans to ""
+    assert sorted(out) == [1, 2, 3, 4, 5]
+    assert out[5]["text"] == "" and out[5]["n_lines_removed"] == 0
     # 4 occurrences > max_count=2 -> stripped everywhere, order preserved
     assert out[1]["text"] == "unique one\nmiddle"
     assert out[1]["n_lines_kept"] == 2 and out[1]["n_lines_removed"] == 2

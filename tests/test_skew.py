@@ -66,117 +66,99 @@ def test_unsupported_how_rejected(skewed, dim):
         salted_join(skewed, dim, ["k"], how="full")
 
 
-def test_salted_expand_matches_plain_on_hub_graph(spark):
-    """90%-skew graph (one hub node owns 90% of the edges): the salted
-    expand must return exactly the plain expand's rows, and its physical
-    plan must join on the widened (id, salt) key."""
-    from cypher_for_apache_spark_spark.session import CypherSession
+# Salted expands: the planner salts an expand when the rel frame's
+# Catalyst size estimate reaches materialize.SALT_SNIFF_MIN_BYTES and the
+# degree-skew sniff finds a dominant hub. The fixtures are parquet-backed
+# because file scans report real sizes (in-memory frames report Catalyst's
+# unknown-size sentinel and are never sniffed); the tests reach the salted
+# and the unsalted plan by patching the gate.
 
+_Q = ("MATCH (a:Person)-[r:FOLLOWS]->(b:Person) "
+      "RETURN a.name AS a, id(r) AS r, b.name AS b")
+
+
+def _parquet(spark, tmp_path, name, rows, schema):
+    path = str(tmp_path / name)
+    spark.createDataFrame(rows, schema).write.parquet(path)
+    return spark.read.parquet(path)
+
+
+def _hub_graph(spark, tmp_path, n=40, hub_edges=180, other_edges=20):
+    """One hub node (0) owns ``hub_edges`` of the edges."""
     import random
 
     rng = random.Random(4)
-    n = 40
-    people = spark.createDataFrame(
-        [(i, f"p{i}") for i in range(n)], "id long, name string"
-    )
-    edges = []
-    rid = 0
-    for _ in range(180):  # 90% from hub node 0
-        edges.append((rid, 0, rng.randrange(1, n))); rid += 1
-    for _ in range(20):
-        edges.append((rid, rng.randrange(1, n), rng.randrange(1, n))); rid += 1
-    rels = spark.createDataFrame(edges, "id long, src long, dst long")
-
-    q = ("MATCH (a:Person)-[r:FOLLOWS]->(b:Person) "
-         "RETURN a.name AS a, id(r) AS r, b.name AS b")
-
-    plain_sess = CypherSession(spark)
-    g1 = plain_sess.read_from({"Person": people}, {"FOLLOWS": rels})
-    plain = sorted(map(tuple, (d.values() for d in g1.cypher(q).to_maps())))
-
-    salted_sess = CypherSession(spark, expand_salt_factor=8)
-    g2 = salted_sess.read_from({"Person": people}, {"FOLLOWS": rels})
-    res = g2.cypher(q)
-    salted = sorted(map(tuple, (d.values() for d in res.to_maps())))
-
-    assert salted == plain
-    assert len(plain) == 200
-    # plan assertion: the expand's equi-join carries the salt column
-    plan = res.df._jdf.queryExecution().executedPlan().toString()
-    assert "salt#" in plan
-
-
-def _hub_graph(spark, n=40, hub_edges=180, other_edges=20):
-    import random
-
-    rng = random.Random(4)
-    people = spark.createDataFrame(
-        [(i, f"p{i}") for i in range(n)], "id long, name string"
-    )
+    people = _parquet(spark, tmp_path, "people",
+                      [(i, f"p{i}") for i in range(n)], "id long, name string")
     edges, rid = [], 0
     for _ in range(hub_edges):
         edges.append((rid, 0, rng.randrange(1, n))); rid += 1
     for _ in range(other_edges):
         edges.append((rid, rng.randrange(1, n), rng.randrange(1, n))); rid += 1
-    rels = spark.createDataFrame(edges, "id long, src long, dst long")
+    rels = _parquet(spark, tmp_path, "rels", edges, "id long, src long, dst long")
     return people, rels
 
 
-def test_auto_salt_triggers_on_skewed_graph(spark):
-    """Default session (expand_salt_factor=0 = auto): a supernode graph
-    gets the salted plan WITHOUT the caller passing a factor. The size
-    gate is lowered to 0 so the sniff runs on this small fixture; the
-    sniff's hot-share/min-hub thresholds are exercised for real."""
+def _rows(res):
+    return sorted(map(tuple, (d.values() for d in res.to_maps())))
+
+
+def _plan(res):
+    return res.df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_auto_salt_triggers_on_skewed_graph(spark, tmp_path, monkeypatch):
+    """With the size gate at 0 a supernode graph gets the salted plan
+    without the caller asking for it (the sniff's hot-share/min-hub
+    thresholds are exercised for real), and its rows equal the unsalted
+    plan's rows at the default gate."""
+    from cypher_for_apache_spark_spark import materialize
     from cypher_for_apache_spark_spark.session import CypherSession
 
-    people, rels = _hub_graph(spark)
-    sess = CypherSession(spark, expand_salt_auto_min_bytes=0)
-    g = sess.read_from({"Person": people}, {"FOLLOWS": rels})
-    q = ("MATCH (a:Person)-[r:FOLLOWS]->(b:Person) "
-         "RETURN a.name AS a, id(r) AS r, b.name AS b")
-    res = g.cypher(q)
-    plan = res.df._jdf.queryExecution().executedPlan().toString()
-    assert "salt#" in plan  # auto-salted
-    # results still exactly match a plain (salting-disabled) session
-    plain_sess = CypherSession(spark, expand_salt_factor=1)
-    g2 = plain_sess.read_from({"Person": people}, {"FOLLOWS": rels})
-    plain = sorted(map(tuple, (d.values() for d in g2.cypher(q).to_maps())))
-    got = sorted(map(tuple, (d.values() for d in res.to_maps())))
-    assert got == plain and len(got) == 200
-    # decision memoized per (graph, types, direction): second compile
-    # reuses the verdict
+    people, rels = _hub_graph(spark, tmp_path)
+    plain_g = CypherSession(spark).read_from({"Person": people}, {"FOLLOWS": rels})
+    plain = plain_g.cypher(_Q)
+    assert "salt#" not in _plan(plain)
+
+    monkeypatch.setattr(materialize, "SALT_SNIFF_MIN_BYTES", 0)
+    g = CypherSession(spark).read_from({"Person": people}, {"FOLLOWS": rels})
+    res = g.cypher(_Q)
+    # the expand's equi-join carries the salt column
+    assert "salt#" in _plan(res)
+    got = _rows(res)
+    assert got == _rows(plain) and len(got) == 200
+    # decision memoized per (graph, types, direction): later compiles
+    # reuse the verdict
     assert g._expand_salt_memo[(frozenset({"FOLLOWS"}), "out")] > 1
 
 
-def test_auto_salt_skips_uniform_graph(spark):
-    """Uniform degree distribution: the sniff runs (gate lowered) but must
+def test_auto_salt_skips_uniform_graph(spark, tmp_path, monkeypatch):
+    """Uniform degree distribution: the sniff runs (gate at 0) but must
     NOT salt — no hub holds the hot share."""
+    from cypher_for_apache_spark_spark import materialize
     from cypher_for_apache_spark_spark.session import CypherSession
 
-    people = spark.createDataFrame(
-        [(i, f"p{i}") for i in range(100)], "id long, name string"
-    )
-    rels = spark.createDataFrame(
-        [(i, i % 100, (i + 1) % 100) for i in range(400)],
-        "id long, src long, dst long",
-    )
-    sess = CypherSession(spark, expand_salt_auto_min_bytes=0)
-    g = sess.read_from({"Person": people}, {"FOLLOWS": rels})
+    monkeypatch.setattr(materialize, "SALT_SNIFF_MIN_BYTES", 0)
+    people = _parquet(spark, tmp_path, "people",
+                      [(i, f"p{i}") for i in range(100)], "id long, name string")
+    rels = _parquet(spark, tmp_path, "rels",
+                    [(i, i % 100, (i + 1) % 100) for i in range(400)],
+                    "id long, src long, dst long")
+    g = CypherSession(spark).read_from({"Person": people}, {"FOLLOWS": rels})
     res = g.cypher("MATCH (a:Person)-[r:FOLLOWS]->(b) RETURN id(r) AS r")
-    plan = res.df._jdf.queryExecution().executedPlan().toString()
-    assert "salt#" not in plan
+    assert "salt#" not in _plan(res)
+    assert g._expand_salt_memo[(frozenset({"FOLLOWS"}), "out")] == 0
     assert res.df.count() == 400
 
 
-def test_auto_salt_stats_gate_spares_small_graphs(spark):
-    """Default threshold (64 MB): tiny graphs never pay the sniff job —
-    the memo stays empty because the stats gate short-circuits to 0."""
+def test_auto_salt_stats_gate_spares_small_graphs(spark, tmp_path):
+    """Default gate (64 MiB): a graph far below it never pays the sniff
+    job — the verdict is 0 although the graph has a hub."""
     from cypher_for_apache_spark_spark.session import CypherSession
 
-    people, rels = _hub_graph(spark)
-    sess = CypherSession(spark)  # default auto + default 64 MB gate
-    g = sess.read_from({"Person": people}, {"FOLLOWS": rels})
+    people, rels = _hub_graph(spark, tmp_path)
+    g = CypherSession(spark).read_from({"Person": people}, {"FOLLOWS": rels})
     res = g.cypher("MATCH (a:Person)-[r:FOLLOWS]->(b) RETURN id(r) AS r")
-    plan = res.df._jdf.queryExecution().executedPlan().toString()
-    assert "salt#" not in plan  # hub exists, but the frame is far below the gate
+    assert "salt#" not in _plan(res)  # hub exists, but the frame is far below the gate
+    assert g._expand_salt_memo[(frozenset({"FOLLOWS"}), "out")] == 0
     assert res.df.count() == 200

@@ -19,9 +19,9 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
-from pyspark.sql import SparkSession
 
 import __spark_entry__ as E
+from cypher_for_apache_spark_spark import build_spark_session
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders",
@@ -55,13 +55,14 @@ def main():
         del argv[i : i + 2]
     sf_dir = argv[0] if argv else "/root/testdata/sf0.01"
     only = set(argv[1:])
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("oracle-check")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+    spark = build_spark_session(
+        master="local[8]",
+        app_name="oracle-check",
+        extra_confs={
+            "spark.sql.shuffle.partitions": "8",
+            "spark.sql.session.timeZone": "UTC",
+            "spark.ui.enabled": "false",
+        },
     )
     spark.sparkContext.setLogLevel("ERROR")
     con = duckdb.connect()

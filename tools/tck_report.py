@@ -20,9 +20,7 @@ from collections import defaultdict
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession
-
-from cypher_for_apache_spark_spark import CypherSession
+from cypher_for_apache_spark_spark import CypherSession, build_spark_session
 from cypher_for_apache_spark_spark.tck import parse_feature, run_scenario
 from cypher_for_apache_spark_spark.tck.runner import load_blacklist, load_tck_directory
 
@@ -46,14 +44,14 @@ def main() -> int:
     if os.path.exists(off_bl):
         blacklist |= load_blacklist(off_bl)
 
-    spark = (
-        SparkSession.builder.master("local[4]")
-        .appName("tck-report")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.ansi.enabled", "false")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+    spark = build_spark_session(
+        master="local[4]",
+        app_name="tck-report",
+        extra_confs={
+            "spark.sql.shuffle.partitions": "4",
+            "spark.sql.session.timeZone": "UTC",
+            "spark.ui.enabled": "false",
+        },
     )
     spark.sparkContext.setLogLevel("ERROR")
     session = CypherSession(spark)
