@@ -35,7 +35,9 @@ def _session(spark: SparkSession):
 
 
 def _graph(spark: SparkSession, sf_dir: str):
-    key = (id(spark), sf_dir)
+    # keyed on the application, not id(spark): a restarted session must
+    # never get frames bound to a stopped SparkContext
+    key = (spark.sparkContext.applicationId, sf_dir)
     if key not in _GRAPH_CACHE:
         from cypher_for_apache_spark_spark.sources.tpch import load_tpch_graph
 

@@ -99,8 +99,9 @@ def _jvm_stats(spark) -> tuple[int, int, int]:
 
 
 def _build_session(cpus: str) -> SparkSession:
-    # the engine's own confs (dataFrameDebugging off, ANSI off, cross
-    # joins, AQE) come from build_spark_session; only the bench's are here
+    # the engine's own confs (dataFrameDebugging off, the generated-class
+    # cache size, ANSI off, cross joins, AQE) come from build_spark_session;
+    # only the bench's are here
     return build_spark_session(
         master=f"local[{cpus}]",
         app_name="cypher-spark-bench",
@@ -129,12 +130,6 @@ def _build_session(cpus: str) -> SparkSession:
                 "-XX:ReservedCodeCacheSize=2g -XX:+UseCodeCacheFlushing "
                 "-XX:G1HeapRegionSize=32m"
             ),
-            # the generated-class cache defaults to 100 entries; 41 warmed
-            # query shapes à several codegen units thrash the LRU and the
-            # biggest classes (32-agg minhash, shingle transforms)
-            # recompile mid-run, with Janino contending against 32 busy
-            # cores
-            "spark.sql.codegen.cache.maxEntries": "5000",
             "spark.ui.enabled": "false",
         },
     )
@@ -161,11 +156,19 @@ def _drain_jit(spark, max_wait: float, stable_polls: int = 3, poll_s: float = 0.
     why 8-core suite totals beat 32-core ones in round 8). Draining the
     queue between warmup and timing (and briefly between reps) makes the
     timed region measure the query, not the JIT backlog. The timed region
-    itself is unchanged: same warmup pass, same best-of-2, same collect()."""
+    itself is unchanged: same warmup pass, same best-of-2, same collect().
+
+    An idle queue returns after one 50 ms window with no compile-time
+    growth, not after ``stable_polls`` full polls (~0.9 s per rep)."""
     try:
         cmx = spark.sparkContext._jvm.java.lang.management.ManagementFactory.getCompilationMXBean()
         t0 = time.time()
         prev = cmx.getTotalCompilationTime()
+        time.sleep(0.05)
+        cur = cmx.getTotalCompilationTime()
+        if cur == prev:
+            return time.time() - t0
+        prev = cur
         stable = 0
         while time.time() - t0 < max_wait:
             time.sleep(poll_s)

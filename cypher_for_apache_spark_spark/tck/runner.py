@@ -436,9 +436,10 @@ def register_tck_procedure(session, sig: str, rows: List[List[str]]) -> None:
 # alone), and a built PropertyGraph is read-only — the engine never
 # mutates element tables — so rebuilding the same fixture graph per
 # scenario paid ~740 redundant createDataFrame round-trip sets per suite
-# run for identical frames. Keyed on the session id + the exact
-# statement text; entries are tiny local-relation frames.
-_GRAPH_MEMO: Dict[Tuple[int, str], object] = {}
+# run for identical frames. Keyed on the Spark application id (a restarted
+# session must never get frames bound to a stopped SparkContext) + the
+# exact statement text; entries are tiny local-relation frames.
+_GRAPH_MEMO: Dict[Tuple[str, str], object] = {}
 
 
 def run_scenario(session, spark, scenario: Scenario, tck_root: Optional[str] = None) -> None:
@@ -454,7 +455,7 @@ def run_scenario(session, spark, scenario: Scenario, tck_root: Optional[str] = N
     if scenario.named_graph:
         init.insert(0, named_graph_statements(scenario.named_graph, tck_root))
     stmts = ";".join(init)
-    memo_key = (id(spark), stmts)
+    memo_key = (spark.sparkContext.applicationId, stmts)
     graph = _GRAPH_MEMO.get(memo_key)
     if graph is None:
         graph = graph_from_create(spark, stmts)

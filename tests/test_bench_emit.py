@@ -43,3 +43,31 @@ def test_emit_isolated_writes_separate_side_file(tmp_path, monkeypatch, capsys):
     assert len(line) < 500
     side = json.load(open(tmp_path / "BENCH_local_isolated.json"))
     assert side["isolated"] is True
+
+
+def _fake_jit(times):
+    """A stand-in session whose JIT compile-time counter reads ``times`` in
+    order (repeating the last value)."""
+    import itertools
+    from types import SimpleNamespace
+
+    seq = itertools.chain(times, itertools.repeat(times[-1]))
+    cmx = SimpleNamespace(getTotalCompilationTime=lambda: next(seq))
+    mf = SimpleNamespace(getCompilationMXBean=lambda: cmx)
+    jvm = SimpleNamespace(java=SimpleNamespace(lang=SimpleNamespace(management=SimpleNamespace(ManagementFactory=mf))))
+    return SimpleNamespace(sparkContext=SimpleNamespace(_jvm=jvm))
+
+
+def test_drain_jit_returns_at_once_when_queue_is_idle():
+    import bench
+
+    waited = bench._drain_jit(_fake_jit([500]), max_wait=2.0)
+    assert waited < 0.3
+
+
+def test_drain_jit_waits_for_a_busy_queue_to_settle():
+    import bench
+
+    # compile time grows by 100 ms per sample for three samples, then stops
+    waited = bench._drain_jit(_fake_jit([0, 100, 200, 300]), max_wait=5.0, poll_s=0.05)
+    assert 0.15 < waited < 1.0
