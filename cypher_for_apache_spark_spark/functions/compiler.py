@@ -17,6 +17,7 @@ import re
 from dataclasses import dataclass, field
 from typing import Callable, Dict, Optional
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, functions as F, types as T
 
 from cypher_for_apache_spark_spark import ast as A
@@ -59,13 +60,78 @@ class CompileCtx:
 def _dtype(ctx: CompileCtx, col: Column) -> Optional[T.DataType]:
     """Spark type of a compiled column against the current frame (plan-time
     introspection; returns None inside lambda bodies where resolution is
-    impossible)."""
+    impossible). Each call analyzes a probe DataFrame; ``_expr_type``
+    avoids it where the AST already tells the type."""
     if ctx.df is None:
         return None
     try:
         return ctx.df.select(col.alias("_t")).schema[0].dataType
-    except Exception:
+    except AnalysisException:
         return None
+
+
+def _bare_column(e: A.Expr, ctx: CompileCtx) -> Optional[str]:
+    """The frame column ``e`` compiles to when it is a bare column
+    reference (a variable, or a stored property of a node/relationship
+    variable), else None. A property absent from the schema compiles to a
+    null literal and is not a column."""
+    if isinstance(e, A.Var) and e.name not in ctx.lambda_vars:
+        meta = ctx.scope.get(e.name)
+        if meta is not None and meta.kind in ("value", "node", "rel"):
+            return meta.col if meta.kind == "value" else meta.id_col
+    if isinstance(e, A.Prop) and isinstance(e.subject, A.Var):
+        if e.subject.name not in ctx.lambda_vars:
+            meta = ctx.scope.get(e.subject.name)
+            if meta is not None and meta.kind in ("node", "rel"):
+                return meta.prop_cols.get(e.key)
+    return None
+
+
+def _expr_type(ctx: CompileCtx, e: A.Expr, col: Column) -> Optional[T.DataType]:
+    """Spark type of ``col``, the compilation of ``e``, without a probe
+    DataFrame where the AST suffices: literals and ``$params`` are typed
+    from their values, a comparison is boolean, and a bare column is read
+    from the frame's schema (fetched once per frame, then cached by
+    PySpark). Composite expressions fall back to ``_dtype``."""
+    if isinstance(e, A.Lit) and e.value is None:
+        return T.NullType()
+    if isinstance(e, (A.Lit, A.Param)):
+        t = _static_type(e, ctx)
+        if t is not None:
+            return t
+    elif isinstance(e, A.Cmp):
+        return T.BooleanType()
+    else:
+        name = _bare_column(e, ctx)
+        t = _frame_type(ctx, name) if name is not None else None
+        if t is not None:
+            return t
+    return _dtype(ctx, col)
+
+
+def _frame_type(ctx: CompileCtx, name: str) -> Optional[T.DataType]:
+    """Type of the frame column ``name`` from the frame's schema (None
+    inside lambda bodies or when the frame has no such column)."""
+    if ctx.df is None:
+        return None
+    for f in ctx.df.schema.fields:
+        if f.name == name:
+            return f.dataType
+    return None
+
+
+def _value_type(v) -> Optional[T.DataType]:
+    """Spark type ``F.lit(v)`` gives a scalar parameter value (None for
+    any other value)."""
+    if isinstance(v, bool):
+        return T.BooleanType()
+    if isinstance(v, int):
+        return T.IntegerType() if -(1 << 31) <= v < (1 << 31) else T.LongType()
+    if isinstance(v, float):
+        return T.DoubleType()
+    if isinstance(v, str):
+        return T.StringType()
+    return None
 
 
 def _is(dt, *classes) -> bool:
@@ -74,8 +140,9 @@ def _is(dt, *classes) -> bool:
 
 def _static_type(e: A.Expr, ctx: CompileCtx) -> Optional[T.DataType]:
     """AST-level type inference for positions where frame probes can't
-    resolve (lambda bodies): literals, known-typed lambda variables, and
-    string/list-producing operators. None = unknown."""
+    resolve (lambda bodies) or aren't needed: literals, scalar
+    ``$params``, known-typed lambda variables, and string/list-producing
+    operators. None = unknown."""
     if isinstance(e, A.Lit):
         v = e.value
         if isinstance(v, bool):
@@ -87,6 +154,8 @@ def _static_type(e: A.Expr, ctx: CompileCtx) -> Optional[T.DataType]:
         if isinstance(v, str):
             return T.StringType()
         return None
+    if isinstance(e, A.Param):
+        return _value_type(ctx.params.get(e.name))
     if isinstance(e, A.Var):
         return ctx.lambda_types.get(e.name)
     if isinstance(e, A.ListLit):
@@ -236,7 +305,7 @@ def _prop(e: A.Prop, ctx: CompileCtx) -> Column:
         )
     else:
         base = compile_expr(e.subject, ctx)
-    dt = _dtype(ctx, base)
+    dt = _expr_type(ctx, e.subject, base)
     if _is(dt, T.DateType, T.TimestampType, T.TimestampNTZType, T.DayTimeIntervalType):
         return _temporal_accessor(base, e.key, dt)
     if _is(dt, T.MapType):
@@ -388,7 +457,10 @@ def _xor(e: A.Xor, ctx: CompileCtx) -> Column:
 
 def _cmp(e: A.Cmp, ctx: CompileCtx) -> Column:
     l, r = compile_expr(e.lhs, ctx), compile_expr(e.rhs, ctx)
-    if not _statically_comparable(ctx, l, r):
+    # operand types, once: unknown types (unresolvable inside lambdas)
+    # defer to Spark
+    lt, rt = _expr_type(ctx, e.lhs, l), _expr_type(ctx, e.rhs, r)
+    if lt is not None and rt is not None and not _statically_comparable_types(lt, rt):
         # openCypher comparability: ordering across incomparable types is
         # null; equality across incomparable types is false (null operands
         # stay null). Without this Spark fails analysis (e.g. true > 0).
@@ -397,7 +469,6 @@ def _cmp(e: A.Cmp, ctx: CompileCtx) -> Column:
             return F.when(l.isNull() | r.isNull(), F.lit(None).cast("boolean")).otherwise(neq)
         return F.lit(None).cast("boolean")
     if e.op in ("=", "<>"):
-        lt, rt = _dtype(ctx, l), _dtype(ctx, r)
         if _is(lt, T.ArrayType, T.StructType) and _is(rt, T.ArrayType, T.StructType):
             # container equality is ternary per element (openCypher
             # Equality: a definite mismatch is false, any null-valued
@@ -431,17 +502,9 @@ _NUMERIC_T = (
 _TEMPORAL_T = (T.DateType, T.TimestampType, T.TimestampNTZType)
 
 
-def _statically_comparable(ctx: CompileCtx, l: Column, r: Column) -> bool:
-    """Plan-time comparability check: numbers compare with numbers,
-    temporals with temporals, otherwise only same-kind types. Unknown
-    types (unresolvable inside lambdas) defer to Spark."""
-    lt, rt = _dtype(ctx, l), _dtype(ctx, r)
-    if lt is None or rt is None:
-        return True
-    return _statically_comparable_types(lt, rt)
-
-
 def _statically_comparable_types(lt: T.DataType, rt: T.DataType) -> bool:
+    """Plan-time comparability check: numbers compare with numbers,
+    temporals with temporals, otherwise only same-kind types."""
     if _is(lt, T.NullType) or _is(rt, T.NullType):
         return True
     if _is(lt, *_NUMERIC_T) and _is(rt, *_NUMERIC_T):
@@ -535,7 +598,7 @@ def _string_pred(e: A.StringPred, ctx: CompileCtx) -> Column:
     # property/variable columns resolve here, lambda bodies keep the
     # lenient behavior.
     for side, col in ((e.lhs, l), (e.rhs, r)):
-        dt = _dtype(ctx, col) or _static_type(side, ctx)
+        dt = _expr_type(ctx, side, col) or _static_type(side, ctx)
         if dt is not None and not isinstance(dt, (T.StringType, T.NullType)):
             return F.lit(None).cast("boolean")
     if e.op == "startswith":
@@ -573,14 +636,14 @@ def _in(e: A.In, ctx: CompileCtx) -> Column:
         return F.lit(False)
     l = compile_expr(e.lhs, ctx)
     r = compile_expr(e.rhs, ctx)
-    rt = _dtype(ctx, r)
+    rt = _expr_type(ctx, e.rhs, r)
     if _is(rt, T.NullType):
         # x IN null is unknown for every x (openCypher)
         return F.lit(None).cast("boolean")
     if _is(rt, T.ArrayType) and isinstance(rt.elementType, T.NullType):
         # list of only-null literals: containment is unknown
         return F.lit(None).cast("boolean")
-    lt = _dtype(ctx, l)
+    lt = _expr_type(ctx, e.lhs, l)
     if _is(lt, T.NullType) and _is(rt, T.ArrayType):
         # a bare null lhs reaches array_contains as VOID, which it rejects
         l = l.cast(rt.elementType)
@@ -750,7 +813,7 @@ def _fn_datetime(e: A.FuncCall, ctx: CompileCtx) -> Column:
         instant = F.to_utc_timestamp(local.cast("timestamp"), zone)
         return _dtz(instant, zone)
     c = compile_expr(arg, ctx)
-    dt = _dtype(ctx, c)
+    dt = _expr_type(ctx, arg, c)
     if _is_dtz(dt):
         return c
     if _is(dt, T.StringType):
@@ -795,7 +858,7 @@ def _fn_time(e: A.FuncCall, ctx: CompileCtx) -> Column:
             off = F.lit(0)
         return _tmz(local, off)
     c = compile_expr(arg, ctx)
-    dt = _dtype(ctx, c)
+    dt = _expr_type(ctx, arg, c)
     if _is_tmz(dt):
         return c
     if _is_dtz(dt):
@@ -933,7 +996,7 @@ def _fn_datetime_truncate(e: A.FuncCall, ctx: CompileCtx) -> Column:
     value's zone, keep the zone."""
     unit = _require_str_lit(e.args[0], ctx).lower()
     v = compile_expr(e.args[1], ctx)
-    dt = _dtype(ctx, v)
+    dt = _expr_type(ctx, e.args[1], v)
     if not _is_dtz(dt):
         raise CypherCompileError("datetime.truncate() expects a zoned datetime")
     i, z = v.getField(_DTZ_INSTANT), v.getField(_DTZ_ZONE)
@@ -949,7 +1012,7 @@ def _fn_datetime_truncate(e: A.FuncCall, ctx: CompileCtx) -> Column:
 
 def _fn_tostring(e: A.FuncCall, ctx: CompileCtx) -> Column:
     c = compile_expr(e.args[0], ctx)
-    dt = _dtype(ctx, c)
+    dt = _expr_type(ctx, e.args[0], c)
     if _is_dtz(dt):
         return _dtz_to_string(c)
     if _is_tmz(dt):
@@ -963,8 +1026,8 @@ def _fn_tostring(e: A.FuncCall, ctx: CompileCtx) -> Column:
 def _bin(e: A.Bin, ctx: CompileCtx) -> Column:
     l, r = compile_expr(e.lhs, ctx), compile_expr(e.rhs, ctx)
     if e.op == "+":
-        lt = _dtype(ctx, l) or _static_type(e.lhs, ctx)
-        rt = _dtype(ctx, r) or _static_type(e.rhs, ctx)
+        lt = _expr_type(ctx, e.lhs, l) or _static_type(e.lhs, ctx)
+        rt = _expr_type(ctx, e.rhs, r) or _static_type(e.rhs, ctx)
         if _is(lt, T.StringType) or _is(rt, T.StringType):
             # Cypher `+` string concat (either side string -> string)
             return F.concat(
@@ -995,7 +1058,7 @@ def _bin(e: A.Bin, ctx: CompileCtx) -> Column:
             )
         return l + r
     if e.op == "-":
-        lt, rt = _dtype(ctx, l), _dtype(ctx, r)
+        lt, rt = _expr_type(ctx, e.lhs, l), _expr_type(ctx, e.rhs, r)
         if _is(lt, T.DateType) and _is(rt, T.DayTimeIntervalType):
             return (l.cast("timestamp") - r).cast("date")
         if _is_dtz(lt) and _is(rt, T.DayTimeIntervalType):
@@ -1014,7 +1077,7 @@ def _bin(e: A.Bin, ctx: CompileCtx) -> Column:
     if e.op == "*":
         return l * r
     if e.op == "/":
-        lt, rt = _dtype(ctx, l), _dtype(ctx, r)
+        lt, rt = _expr_type(ctx, e.lhs, l), _expr_type(ctx, e.rhs, r)
         if _is(lt, T.LongType) and _is(rt, T.LongType):
             # Cypher integer division truncates toward zero
             return (l / r).cast("long")
@@ -1040,7 +1103,7 @@ def _case(e: A.CaseExpr, ctx: CompileCtx) -> Column:
         cond = compile_expr(cond_e, ctx)
         if operand is not None:
             cond = operand == cond
-        elif _is(_dtype(ctx, cond), T.NullType):
+        elif _is(_expr_type(ctx, cond_e, cond), T.NullType):
             # searched CASE with a literal-null condition: Cypher treats a
             # null predicate as not-matched; Spark's CASE WHEN rejects a
             # VOID-typed condition outright (DATATYPE_MISMATCH)
@@ -1057,7 +1120,7 @@ def _case(e: A.CaseExpr, ctx: CompileCtx) -> Column:
 
 def _index(e: A.Index, ctx: CompileCtx) -> Column:
     base = compile_expr(e.subject, ctx)
-    dt = _dtype(ctx, base)
+    dt = _expr_type(ctx, e.subject, base)
     idx = compile_expr(e.index, ctx)
     if _is(dt, T.NullType):
         # null[i] is null; the VOID-typed literal would type-error in get()
@@ -1079,7 +1142,7 @@ def _index(e: A.Index, ctx: CompileCtx) -> Column:
 
 def _slice(e: A.Slice, ctx: CompileCtx) -> Column:
     base = compile_expr(e.subject, ctx)
-    if _is(_dtype(ctx, base), T.NullType):
+    if _is(_expr_type(ctx, e.subject, base), T.NullType):
         # null[a..b] is null; F.size on a VOID literal would type-error
         return F.lit(None)
     n = F.size(base)
@@ -1109,7 +1172,7 @@ def _elem_type(ctx: CompileCtx, src: Column) -> Optional[T.DataType]:
 
 def _list_comp(e: A.ListComp, ctx: CompileCtx) -> Column:
     src = compile_expr(e.source, ctx)
-    if _is(_dtype(ctx, src), T.NullType):
+    if _is(_expr_type(ctx, e.source, src), T.NullType):
         # [x IN null | ...] is null (openCypher); a VOID source would
         # type-error inside transform/filter at analysis
         return F.lit(None)
@@ -1128,7 +1191,7 @@ def _list_comp(e: A.ListComp, ctx: CompileCtx) -> Column:
 
 def _quantified(e: A.Quantified, ctx: CompileCtx) -> Column:
     src = compile_expr(e.source, ctx)
-    if _is(_dtype(ctx, src), T.NullType):
+    if _is(_expr_type(ctx, e.source, src), T.NullType):
         # any/all/none/single over a null list is null (openCypher)
         return F.lit(None).cast("boolean")
     et = _elem_type(ctx, src)
@@ -1148,15 +1211,15 @@ def _quantified(e: A.Quantified, ctx: CompileCtx) -> Column:
 
 def _reduce(e: A.Reduce, ctx: CompileCtx) -> Column:
     src = compile_expr(e.source, ctx)
-    if _is(_dtype(ctx, src), T.NullType):
+    if _is(_expr_type(ctx, e.source, src), T.NullType):
         # reduce over a null list is null (openCypher)
         return F.lit(None)
     init = compile_expr(e.init, ctx)
     # probe types OUTSIDE the lambda (the body can't) so the accumulator /
     # element get static types and `+` resolves its string/list overloads
     # (reduce(s = '', w IN [...] | s + w) must concat, not numeric-add)
-    init_t = _dtype(ctx, init) or _static_type(e.init, ctx)
-    src_t = _dtype(ctx, src)
+    init_t = _expr_type(ctx, e.init, init) or _static_type(e.init, ctx)
+    src_t = _expr_type(ctx, e.source, src)
     elem_t = src_t.elementType if _is(src_t, T.ArrayType) else None
 
     # an untyped init (`reduce(acc = [], ...)` compiles to array<void>,
@@ -1175,9 +1238,11 @@ def _reduce(e: A.Reduce, ctx: CompileCtx) -> Column:
         probe_ctx = CompileCtx(
             ctx.df, ctx.scope, ctx.params, lam.lambda_vars, lam.lambda_types
         )
+        # a body that only compiles with the real accumulator type raises
+        # here; keep the untyped init then, as when the probe finds nothing
         try:
             bt = _dtype(ctx, compile_expr(e.expr, probe_ctx))
-        except Exception:
+        except (AnalysisException, CypherCompileError):
             bt = None
         if (
             bt is not None
@@ -1199,7 +1264,7 @@ def _reduce(e: A.Reduce, ctx: CompileCtx) -> Column:
             )
             try:
                 bt2 = _dtype(ctx, compile_expr(e.expr, probe2_ctx))
-            except Exception:
+            except (AnalysisException, CypherCompileError):
                 bt2 = None
             if bt2 == bt:
                 init = casted
@@ -1224,7 +1289,7 @@ def path_nodes_array(metas, ctx: CompileCtx) -> Column:
     def typed_null(k: str) -> Column:
         for m in metas:
             if k in m.prop_cols:
-                dt = _dtype(ctx, F.col(m.prop_cols[k]))
+                dt = _frame_type(ctx, m.prop_cols[k])
                 if dt is not None:
                     return F.lit(None).cast(dt)
         return F.lit(None).cast("string")
@@ -1258,7 +1323,7 @@ def path_rels_array(metas, ctx: CompileCtx) -> Column:
     def typed_null(k: str) -> Column:
         for m in metas:
             if k in m.prop_cols:
-                dt = _dtype(ctx, F.col(m.prop_cols[k]))
+                dt = _frame_type(ctx, m.prop_cols[k])
                 if dt is not None:
                     return F.lit(None).cast(dt)
         return F.lit(None).cast("string")
@@ -1425,7 +1490,7 @@ def _fn_keys(e, ctx):
         return F.when(bound, F.array_compact(F.array(*items)))
     # keys() of a map value: struct fields are plan-time constants
     c = compile_expr(e.args[0], ctx)
-    dt = _dtype(ctx, c)
+    dt = _expr_type(ctx, e.args[0], c)
     if _is(dt, T.StructType):
         names = [f.name for f in dt.fields if f.name != "_empty"]
         return F.array(*[F.lit(n) for n in names]).cast("array<string>")
@@ -1485,14 +1550,14 @@ def _null_guarded_list(e, ctx, fn):
     """head/last/tail of a statically-null list is null (openCypher); the
     VOID literal would otherwise type-error at analysis."""
     c = compile_expr(e.args[0], ctx)
-    if _is(_dtype(ctx, c), T.NullType):
+    if _is(_expr_type(ctx, e.args[0], c), T.NullType):
         return F.lit(None)
     return fn(c)
 
 
 def _fn_size(e, ctx):
     c = compile_expr(e.args[0], ctx)
-    dt = _dtype(ctx, c)
+    dt = _expr_type(ctx, e.args[0], c)
     if _is(dt, T.NullType):
         return F.lit(None).cast("long")  # size(null) is null (openCypher)
     if _is(dt, T.StringType):
@@ -1507,7 +1572,7 @@ def _fn_isempty(e, ctx):
     structs in this engine, so map emptiness is a plan-time constant (the
     ``_empty`` marker field of the zero-key map literal does not count)."""
     c = compile_expr(e.args[0], ctx)
-    dt = _dtype(ctx, c)
+    dt = _expr_type(ctx, e.args[0], c)
     if _is(dt, T.StringType):
         return F.when(c.isNull(), F.lit(None)).otherwise(F.length(c) == 0)
     if _is(dt, T.StructType):
@@ -1565,7 +1630,7 @@ def _fn_round(e, ctx):
 
 def _fn_toboolean(e, ctx):
     c = compile_expr(e.args[0], ctx)
-    dt = _dtype(ctx, c)
+    dt = _expr_type(ctx, e.args[0], c)
     if _is(dt, T.StringType):
         # Cypher: only 'true'/'false' (case-insensitive) convert, anything
         # else is null — Spark's string->boolean cast also accepts
@@ -1577,7 +1642,7 @@ def _fn_toboolean(e, ctx):
 
 def _fn_tointeger(e, ctx):
     c = compile_expr(e.args[0], ctx)
-    dt = _dtype(ctx, c)
+    dt = _expr_type(ctx, e.args[0], c)
     if _is(dt, T.StringType):
         # toInteger('4.2') -> null in Cypher for non-int strings? Neo4j
         # truncates floats in strings; keep simple: try long, else via double
@@ -1800,9 +1865,9 @@ def _fn_duration_between(e, ctx):
         raise CypherCompileError("duration.between() expects two arguments")
     a, b = compile_expr(e.args[0], ctx), compile_expr(e.args[1], ctx)
     # zoned datetimes: the elapsed-time difference between the INSTANTS
-    if _is_dtz(_dtype(ctx, a)):
+    if _is_dtz(_expr_type(ctx, e.args[0], a)):
         a = a.getField(_DTZ_INSTANT)
-    if _is_dtz(_dtype(ctx, b)):
+    if _is_dtz(_expr_type(ctx, e.args[1], b)):
         b = b.getField(_DTZ_INSTANT)
     return b.cast("timestamp_ntz") - a.cast("timestamp_ntz")
 
@@ -1845,7 +1910,7 @@ def compile_weighted_aggregate(e: A.Expr, ctx: CompileCtx, weight: Column) -> Co
     if name in ("min", "max"):
         return compile_aggregate(e, ctx)
     if name == "sum":
-        dt = _dtype(ctx, arg)
+        dt = _expr_type(ctx, e.args[0], arg)
         if isinstance(dt, T.DayTimeIntervalType):
             raise WeightedAggUnsupported("sum(duration)")
         s = F.sum(arg * weight)
@@ -1855,7 +1920,7 @@ def compile_weighted_aggregate(e: A.Expr, ctx: CompileCtx, weight: Column) -> Co
             return F.coalesce(s, F.lit(0))
         return F.coalesce(s, F.lit(0).cast(dt))
     if name == "avg":
-        dt = _dtype(ctx, arg)
+        dt = _expr_type(ctx, e.args[0], arg)
         if isinstance(dt, T.DayTimeIntervalType):
             raise WeightedAggUnsupported("avg(duration)")
         return F.sum(arg * weight) / F.sum(
@@ -1883,7 +1948,7 @@ def compile_aggregate(e: A.Expr, ctx: CompileCtx) -> Column:
         # Cypher: sum over zero rows (or only nulls) is 0 — Spark's SUM
         # yields null. Coalesce with a zero of the argument's own type
         # (numeric 0, zero duration for interval sums).
-        dt = _dtype(ctx, arg)
+        dt = _expr_type(ctx, e.args[0], arg)
         if isinstance(dt, T.DayTimeIntervalType):
             return F.coalesce(s, F.expr("INTERVAL '0' SECOND").cast(dt))
         if isinstance(dt, T.NullType):

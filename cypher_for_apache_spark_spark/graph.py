@@ -355,6 +355,9 @@ class PropertyGraph:
         self.node_rel_tables: Dict[Tuple[str, FrozenSet[str], FrozenSet[str]], NodeRelTable] = {}
         self._schema: Optional[PropertyGraphSchema] = None
         self._session = None  # set by CypherSession.read_from / catalog
+        # id(table) -> (table, row count), filled by element_rows; holding
+        # the table keeps its id from being reused by another object
+        self._element_rows: Dict[int, Tuple[object, int]] = {}
 
     def add_triplet_table(self, tt: TripletTable) -> "PropertyGraph":
         """Register a pre-joined triplet for recognized-pattern scans.
@@ -427,6 +430,35 @@ class PropertyGraph:
             return [nt for c, nt in self.node_tables.items() if c == frozenset(want)]
         return [nt for c, nt in self.node_tables.items() if want <= c]
 
+    def matching_rel_tables(
+        self,
+        rel_types: Iterable[str] = (),
+        src_labels: Iterable[str] = (),
+        dst_labels: Iterable[str] = (),
+    ) -> List[RelationshipTable]:
+        """Relationship tables with type in ``rel_types`` (all types when
+        empty) whose endpoint-label hints admit the required labels."""
+        want = set(rel_types)
+        return [
+            rt
+            for t, rts in self.rel_tables.items()
+            if not want or t in want
+            for rt in rts
+            if rt.compatible(src_labels, dst_labels)
+        ]
+
+    def element_rows(self, tables: Iterable) -> int:
+        """Total row count of some of this graph's element tables. Each
+        table is counted by one Spark job the first time a plan asks for it
+        and remembered on the graph, so loading a graph never counts and a
+        repeated query shape never counts again."""
+        total = 0
+        for t in tables:
+            if id(t) not in self._element_rows:
+                self._element_rows[id(t)] = (t, t.df.count())
+            total += self._element_rows[id(t)][1]
+        return total
+
     def scan_nodes(
         self,
         labels: Iterable[str] = (),
@@ -479,14 +511,7 @@ class PropertyGraph:
         union at plan time (schema-aware scan pruning). ``prefer_layout``
         picks the dst-bucketed physical copy for reverse expands when one
         exists."""
-        want = set(rel_types)
-        tables = [
-            rt
-            for t, rts in self.rel_tables.items()
-            if not want or t in want
-            for rt in rts
-            if rt.compatible(src_labels, dst_labels)
-        ]
+        tables = self.matching_rel_tables(rel_types, src_labels, dst_labels)
         if not tables:
             return None
         prop_types = _common_prop_types([(t.df, t.property_columns) for t in tables])

@@ -48,6 +48,16 @@ LOOP_ROWS_PER_PARTITION = 25_000
 # expands over rel frames whose Catalyst size estimate is at least this
 # many bytes run the degree-skew sniff (plans/planner.py _auto_salt_factor)
 SALT_SNIFF_MIN_BYTES = 64 << 20
+# values of the constants above that put every gate on its at-scale branch
+# on any input, for checking those branches on small data
+# (tests/test_large_regime.py, tools/check_oracle.py --force-large-regime)
+LARGE_REGIME = {
+    "BROADCAST_ROW_LIMIT": 0,
+    "STATIC_BROADCAST_ROW_LIMIT": 0,
+    "STATIC_ROWS_PER_PARTITION": 1,
+    "LOOP_ROWS_PER_PARTITION": 1,
+    "SALT_SNIFF_MIN_BYTES": 0,
+}
 
 
 def parallelism(spark: SparkSession) -> int:

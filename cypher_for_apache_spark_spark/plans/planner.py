@@ -20,7 +20,7 @@ from __future__ import annotations
 
 import itertools
 from dataclasses import replace as dc_replace
-from typing import Dict, List, Optional, Sequence, Tuple
+from typing import Dict, FrozenSet, List, Optional, Sequence, Tuple
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F, types as T
 
@@ -159,7 +159,7 @@ class Planner:
 
     def _materialize(self, rec: Record) -> Record:
         if rec.df is None:
-            return Record(self._unit_df(), dict(rec.header))
+            return Record(self._unit_df(), dict(rec.header), rows=lambda: 1)
         return rec
 
     # ------------------------------------------------------------- entry point
@@ -314,6 +314,7 @@ class Planner:
         imports: List[str],
         clause: A.ProjectionClause,
         items_c,
+        nonnull: FrozenSet[str],
     ) -> Record:
         """Intermediate ``WITH <only aggregates>`` inside a correlated CALL:
         ``WITH count(q) AS c`` has no grouping keys in Neo4j, so EVERY
@@ -322,7 +323,12 @@ class Planner:
         grouping keys), LEFT-join the subquery's driving table back on the
         import identities, and fill the empty aggregates (count/sum 0,
         collect [], rest null). A WHERE on the WITH filters AFTER the
-        fill, exactly as Neo4j filters the aggregated row."""
+        fill, exactly as Neo4j filters the aggregated row.
+
+        The aggregate has one row per import combination, so the join back
+        keeps ``driving``'s rows and facts; it matches on ``==`` for the
+        ``nonnull`` driving keys (``_binding``) and goes through the
+        ``maybe_broadcast`` row-bound gate."""
         fills, comp_fills = self._agg_fill_specs(items_c, imports)
         aliases = [a for _, a in items_c]
         items_p = list(items_c)
@@ -365,10 +371,8 @@ class Planner:
         if comp_fills:
             marker = f"_m#call{next(self._uid)}"
             rdf = rdf.withColumn(marker, F.lit(True))
-        cond = None
-        for ok, ik in key_pairs:
-            e = F.col(ok).eqNullSafe(F.col(renames[ik]))
-            cond = e if cond is None else cond & e
+        rdf = maybe_broadcast(rdf, agg.row_bound())
+        cond = self._keys_match([(ok, renames[ik]) for ok, ik in key_pairs], nonnull)
         df = driving.df.join(rdf, cond, "left_outer").drop(*renames.values())
         header = {v: driving.header[v] for v in imports}
         for a in aliases:
@@ -399,7 +403,7 @@ class Planner:
                     F.when(F.col(marker).isNull(), fill).otherwise(F.col(c)),
                 )
             df = df.drop(marker)
-        out = Record(df, header)
+        out = driving.narrowed(df, header)
         if clause.where is not None:
             out = self.plan_where(out, clause.where)
         return out
@@ -487,16 +491,19 @@ class Planner:
         per-row semantics:
 
         - a leading import ``WITH`` (plain variables only) makes the call
-          CORRELATED: the inner query plans once against the DISTINCT
-          binding of the imported variables, then joins back on their
-          identities — the same distinct-binding discipline as OPTIONAL
-          MATCH / EXISTS, never a per-row loop;
+          CORRELATED: the inner query plans once against the binding of
+          the imported variables (``_binding``: DISTINCT unless an import
+          is unique), then joins back on their identities — ``==`` on
+          non-null keys, null-safe otherwise, the inner side through the
+          ``maybe_broadcast`` row-bound gate. The same binding discipline
+          as OPTIONAL MATCH / EXISTS, never a per-row loop;
         - imported variables become implicit grouping keys of the final
           RETURN, so inner aggregates aggregate per input row;
         - an aggregating subquery returns one row per input row even with
           zero matches (left join; count/sum -> 0, collect -> [] — the
-          openCypher empty-aggregate values); a row-returning subquery
-          with zero rows eliminates the input row (inner join);
+          openCypher empty-aggregate values) and keeps the input's facts
+          (``Record``); a row-returning subquery with zero rows
+          eliminates the input row (inner join) and drops them;
         - uncorrelated calls cross-join their result with the incoming
           rows (Catalyst turns it into a broadcast for small sides);
         - ORDER BY / SKIP / LIMIT on a correlated RETURN are per input
@@ -538,19 +545,9 @@ class Planner:
             raise CypherPlanningError("CALL subquery must end in RETURN")
 
         correlated = bool(imports) and rec.df is not None
+        nonnull: FrozenSet[str] = frozenset()
         if correlated:
-            join_cols: List[str] = []
-            key_cols: List[str] = []
-            for v in imports:
-                join_cols.extend(rec.header[v].columns())
-                key_cols.append(self._key_col(rec.header[v]))
-            seen = set()
-            join_cols = [c for c in join_cols if not (c in seen or seen.add(c))]
-            key_cols = sorted(set(key_cols))
-            inner = Record(
-                rec.df.select(*join_cols).dropDuplicates(key_cols),
-                {v: rec.header[v] for v in imports},
-            )
+            inner, _, nonnull = self._binding(rec, imports)
         else:
             imports = []
             inner = Record(None, {})
@@ -593,7 +590,7 @@ class Planner:
                         # subquery's DRIVING table back and fill the empty
                         # aggregates (count/sum 0, collect [], rest null).
                         inner = self._plan_correlated_agg_with(
-                            inner, driving, imports, c, items_c
+                            inner, driving, imports, c, items_c, nonnull
                         )
                         continue
                     aliases = [a for _, a in items_c]
@@ -709,11 +706,10 @@ class Planner:
                 cond = cond & (
                     F.col("_rn#call") <= F.lit(lo + self._int_value(ret.limit))
                 )
-            inner = Record(
+            inner = inner.narrowed(
                 inner.df.withColumn("_rn#call", F.row_number().over(w))
                 .filter(cond)
-                .drop("_rn#call"),
-                inner.header,
+                .drop("_rn#call")
             )
 
         out_header = {a: inner.header[a] for a in out_aliases}
@@ -769,10 +765,8 @@ class Planner:
             # zero-match rows are detected by a marker, never by coalesce
             marker = f"_m#call{next(self._uid)}"
             rdf = rdf.withColumn(marker, F.lit(True))
-        cond = None
-        for ok, ik in key_pairs:
-            e = F.col(ok).eqNullSafe(F.col(renames[ik]))
-            cond = e if cond is None else cond & e
+        rdf = maybe_broadcast(rdf, inner.row_bound())
+        cond = self._keys_match([(ok, renames[ik]) for ok, ik in key_pairs], nonnull)
         how = "left_outer" if all_agg else "inner"
         df = rec.df.join(rdf, cond, how).drop(*renames.values())
         if all_agg and fills:
@@ -807,6 +801,12 @@ class Planner:
             if a in imports:
                 continue  # the outer binding IS the subquery's value
             header[a] = out_header[a]
+        if all_agg and all(
+            a in imports or A.contains_aggregate(e) for e, a in proj_items
+        ):
+            # grouped by exactly the imports: at most one subquery row per
+            # input row, so the left join keeps the input's rows and facts
+            return rec.narrowed(df, header)
         return Record(df, header)
 
     def _plan_call_union(self, rec: Record, q: A.UnionQuery) -> Record:
@@ -1225,7 +1225,7 @@ class Planner:
         cond = conds[0]
         for c in conds[1:]:
             cond = cond & c
-        return Record(rec.df.filter(cond), rec.header)
+        return rec.narrowed(rec.df.filter(cond))
 
     @staticmethod
     def _flip_rel(rel: A.RelPat) -> A.RelPat:
@@ -2367,21 +2367,27 @@ class Planner:
                     df = df.filter(F.array_contains(F.col(meta.labels_col), l))
             simple, complex_ = self._split_props(npat.props)
             df = self._filter_prop_items(df, meta, simple + complex_, rec.header)
-            return Record(df, rec.header), var
+            return rec.narrowed(df), var
         sdf, meta = self.scan_node_record(var, npat.labels)
         simple, complex_ = self._split_props(npat.props)
         sdf = self._filter_prop_items(sdf, meta, simple, {})
         header = dict(rec.header)
         header[var] = meta
         if rec.df is None:
-            out = Record(sdf, header)
+            g, labels = self.graph, list(npat.labels)
+            out = Record(
+                sdf,
+                header,
+                unique=frozenset([var]),
+                rows=lambda: g.element_rows(g.matching_node_tables(labels)),
+            )
         else:
             # disconnected component -> cartesian product; Catalyst rewrites
             # cross+equality-filter into an equi-join (reference does this
             # itself: replaceCartesianWithValueJoin, LogicalOptimizer.scala:53)
             out = Record(rec.df.crossJoin(sdf), header)
         if complex_:
-            out = Record(self._filter_prop_items(out.df, meta, complex_, header), header)
+            out = out.narrowed(self._filter_prop_items(out.df, meta, complex_, header))
         return out, var
 
     # -- expand ----------------------------------------------------------------
@@ -2602,7 +2608,14 @@ class Planner:
         if tcomplex and not tgt_bound:
             df = self._filter_prop_items(df, tmeta, tcomplex, header)
         rel_ids.append((rmeta.id_col, rmeta.types, False))
-        return Record(df, header), tgt_var
+        rows = None
+        if src_var in rec.unique:
+            # each relationship row joins at most one input row (the source
+            # id is unique there) and one target node, per orientation
+            g, tables = self.graph, self.graph.matching_rel_tables(rel.types, *hints)
+            per = 2 if rel.direction == "both" else 1
+            rows = lambda: per * g.element_rows(tables)  # noqa: E731
+        return Record(df, header, rows=rows), tgt_var
 
     def _expand_bound_rel(self, rec: Record, src_var: str, rel: A.RelPat, tgt: A.NodePat):
         """Pattern reuses an already-bound relationship variable: constrain
@@ -3149,7 +3162,7 @@ class Planner:
     def plan_where(self, rec: Record, expr: A.Expr) -> Record:
         rec, expr = self._plan_pattern_predicates(rec, expr)
         ctx = self._ctx(rec)
-        return Record(rec.df.filter(compile_expr(expr, ctx)), rec.header)
+        return rec.narrowed(rec.df.filter(compile_expr(expr, ctx)))
 
     def _plan_pattern_predicates(self, rec: Record, expr: A.Expr) -> Tuple[Record, A.Expr]:
         """Materialize each PatternPredicate into a boolean column (or a
@@ -3190,6 +3203,46 @@ class Planner:
         row: element id for nodes/rels, the value column otherwise."""
         return meta.col if meta.kind == "value" else meta.id_col
 
+    def _binding(
+        self, rec: Record, names: Sequence[str]
+    ) -> Tuple[Record, List[str], FrozenSet[str]]:
+        """The driving binding of a correlated subpattern: ``rec`` projected
+        to the columns of the shared variables ``names``, one row per
+        distinct identity combination. Returns (binding, key_cols,
+        nonnull): the sorted identity columns the subpattern joins back
+        on, and those of them that are never null.
+
+        The DISTINCT (a hash-aggregate shuffle) is skipped when one of the
+        variables is unique in ``rec``: its id alone already makes every
+        row's combination distinct, so the binding keeps ``rec``'s rows,
+        its unique variables and its row bound. A unique variable's id is
+        also non-null, so the join back may use ``==`` on it instead of the
+        null-safe composite key (``_keys_match``)."""
+        join_cols: List[str] = []
+        for v in names:
+            join_cols.extend(rec.header[v].columns())
+        seen = set()
+        join_cols = [c for c in join_cols if not (c in seen or seen.add(c))]
+        key_cols = sorted({self._key_col(rec.header[v]) for v in names})
+        unique = rec.unique & frozenset(names)
+        nonnull = frozenset(self._key_col(rec.header[v]) for v in unique)
+        d = rec.df.select(*join_cols)
+        if not unique:
+            d = d.dropDuplicates(key_cols)
+        header = {v: rec.header[v] for v in names}
+        return Record(d, header, unique, rec.rows), key_cols, nonnull
+
+    @staticmethod
+    def _keys_match(pairs: Sequence[Tuple[str, str]], nonnull: FrozenSet[str]) -> Column:
+        """Join condition over (outer, inner) key column pairs: ``==`` where
+        the outer key is never null, null-safe equality elsewhere (a null
+        import must find the binding row it came from)."""
+        cond = None
+        for ok, ik in pairs:
+            e = F.col(ok) == F.col(ik) if ok in nonnull else F.col(ok).eqNullSafe(F.col(ik))
+            cond = e if cond is None else cond & e
+        return cond
+
     def _rhs_for_pattern(
         self,
         rec: Record,
@@ -3197,11 +3250,17 @@ class Planner:
         where: Optional[A.Expr],
         extra: Sequence[A.Expr] = (),
     ):
-        """Plan a pattern against the graph starting from the distinct
-        projection of the lhs variables it references. Returns
-        (rhs_record, key_cols: identity columns shared with the lhs).
-        ``extra``: additional expressions (e.g. a pattern comprehension's
-        projection) whose variable references must survive into the rhs."""
+        """Plan a pattern against the graph starting from the driving
+        binding (``_binding``) of the lhs variables it references. Returns
+        (rhs_record, key_cols, nonnull): the identity columns shared with
+        the lhs and those of them that are never null. ``extra``:
+        additional expressions (e.g. a pattern comprehension's projection)
+        whose variable references must survive into the rhs.
+
+        Callers join the rhs back through ``maybe_broadcast(rhs,
+        rhs.row_bound())``: a subpattern bounded below
+        ``BROADCAST_ROW_LIMIT`` is broadcast in the static plan, a large or
+        unbounded one keeps the shuffle join."""
         pat_vars = {n.var for n in pattern.nodes if n.var} | {
             r.var for r in pattern.rels if r.var
         }
@@ -3212,16 +3271,9 @@ class Planner:
             used |= {v.name for v in ex.walk() if isinstance(v, A.Var)}
         common = sorted(v for v in used if v in rec.header)
         key_cols: List[str] = []
+        nonnull: FrozenSet[str] = frozenset()
         if common and rec.df is not None:
-            join_cols: List[str] = []
-            for v in common:
-                join_cols.extend(rec.header[v].columns())
-                key_cols.append(self._key_col(rec.header[v]))
-            seen = set()
-            join_cols = [c for c in join_cols if not (c in seen or seen.add(c))]
-            key_cols = sorted(set(key_cols))
-            d = rec.df.select(*join_cols).dropDuplicates(key_cols)
-            rhs = Record(d, {v: rec.header[v] for v in common})
+            rhs, key_cols, nonnull = self._binding(rec, common)
         else:
             rhs = Record(None, {})
         rel_ids: List[Tuple[str, frozenset, bool]] = []
@@ -3229,31 +3281,37 @@ class Planner:
         rhs = self._rel_uniqueness(rhs, rel_ids)
         if where is not None:
             rhs = self.plan_where(rhs, where)
-        return rhs, key_cols
+        return rhs, key_cols, nonnull
 
     def _semi_join_predicate(self, rec: Record, pred: A.PatternPredicate) -> Record:
+        """A top-level EXISTS / NOT EXISTS conjunct: semi/anti join against
+        the subpattern's key columns. Keeps the lhs facts (its rows are a
+        subset)."""
         rec_m = self._materialize(rec)
-        rhs, key_cols = self._rhs_for_pattern(rec_m, pred.pattern, pred.where)
+        rhs, key_cols, nonnull = self._rhs_for_pattern(rec_m, pred.pattern, pred.where)
         how = "left_anti" if pred.negated else "left_semi"
         if not key_cols:
             # uncorrelated pattern: semi/anti join against a 1-row marker —
             # stays lazy (no job at plan time), and the marker side is a
             # broadcastable single row at execution
             marker = rhs.df.limit(1).select(F.lit(True).alias(" exists#marker"))
-            return Record(rec_m.df.join(marker, F.lit(True), how), rec.header)
+            return rec_m.narrowed(rec_m.df.join(marker, F.lit(True), how), rec.header)
         renames = {c: f"{c}#rhs{next(self._uid)}" for c in key_cols}
-        rdf = rhs.df.select([F.col(c).alias(renames[c]) for c in key_cols])
-        cond = None
-        for c in key_cols:
-            e = F.col(c).eqNullSafe(F.col(renames[c]))
-            cond = e if cond is None else cond & e
-        return Record(rec_m.df.join(rdf, cond, how), rec.header)
+        rdf = maybe_broadcast(
+            rhs.df.select([F.col(c).alias(renames[c]) for c in key_cols]),
+            rhs.row_bound(),
+        )
+        cond = self._keys_match([(c, renames[c]) for c in key_cols], nonnull)
+        return rec_m.narrowed(rec_m.df.join(rdf, cond, how), rec.header)
 
     def _replace_pattern_preds(self, rec: Record, expr: A.Expr) -> Tuple[Record, A.Expr]:
+        """Lower each pattern predicate nested in ``expr`` to a boolean
+        marker column: a left join against the subpattern's DISTINCT key
+        columns, so the lhs keeps its rows and its facts."""
         preds = [n for n in expr.walk() if isinstance(n, A.PatternPredicate)]
         for p in preds:
             rec_m = self._materialize(rec)
-            rhs, key_cols = self._rhs_for_pattern(rec_m, p.pattern, p.where)
+            rhs, key_cols, nonnull = self._rhs_for_pattern(rec_m, p.pattern, p.where)
             marker_var = self._anon()
             marker_col = f"{self._u('exists')}#marker"
             if not key_cols:
@@ -3264,20 +3322,18 @@ class Planner:
                 df = df.withColumn(marker_col, F.col(marker_col).isNotNull())
             else:
                 renames = {c: f"{c}#rhs{next(self._uid)}" for c in key_cols}
-                rdf = (
+                rdf = maybe_broadcast(
                     rhs.df.select([F.col(c).alias(renames[c]) for c in key_cols])
                     .dropDuplicates()
-                    .select("*", F.lit(True).alias(marker_col))
+                    .select("*", F.lit(True).alias(marker_col)),
+                    rhs.row_bound(),
                 )
-                cond = None
-                for c in key_cols:
-                    e = F.col(c).eqNullSafe(F.col(renames[c]))
-                    cond = e if cond is None else cond & e
+                cond = self._keys_match([(c, renames[c]) for c in key_cols], nonnull)
                 df = rec_m.df.join(rdf, cond, "left_outer").drop(*renames.values())
                 df = df.withColumn(marker_col, F.col(marker_col).isNotNull())
             header = dict(rec.header)
             header[marker_var] = EntityMeta(kind="value", col=marker_col)
-            rec = Record(df, header)
+            rec = rec_m.narrowed(df, header)
             repl: A.Expr = A.Var(marker_var)
             if p.negated:
                 repl = A.Not(repl)
@@ -3327,7 +3383,7 @@ class Planner:
                 continue
             done.append(p)
             rec_m = self._materialize(rec)
-            rhs, key_cols = self._rhs_for_pattern(
+            rhs, key_cols, nonnull = self._rhs_for_pattern(
                 rec_m, p.pattern, p.where, extra=(p.projection,)
             )
             proj_col = compile_expr(p.projection, self._ctx(rhs))
@@ -3342,17 +3398,15 @@ class Planner:
                 df = rec_m.df.join(gdf, F.lit(True), "left_outer")
             else:
                 renames = {c: f"{c}#rhs{next(self._uid)}" for c in key_cols}
-                gdf = (
+                gdf = maybe_broadcast(
                     rhs.df.groupBy(*key_cols)
                     .agg(wrapped.alias(list_col))
                     .select(
                         *[F.col(c).alias(renames[c]) for c in key_cols], list_col
-                    )
+                    ),
+                    rhs.row_bound(),
                 )
-                cond = None
-                for c in key_cols:
-                    e = F.col(c).eqNullSafe(F.col(renames[c]))
-                    cond = e if cond is None else cond & e
+                cond = self._keys_match([(c, renames[c]) for c in key_cols], nonnull)
                 df = rec_m.df.join(gdf, cond, "left_outer").drop(*renames.values())
             lt = next(f.dataType for f in df.schema.fields if f.name == list_col)
             df = df.withColumn(
@@ -3365,15 +3419,20 @@ class Planner:
             out_var = self._anon()
             header = dict(rec.header)
             header[out_var] = EntityMeta(kind="value", col=list_col)
-            rec = Record(df, header)
+            rec = rec_m.narrowed(df, header)
             expr = A.substitute(expr, [(p, A.Var(out_var))])
         return rec, expr
 
     # --------------------------------------------------------------- OPTIONAL
     def plan_optional_match(self, rec: Record, clause: A.MatchClause) -> Record:
-        """OPTIONAL MATCH: plan the pattern from the distinct lhs binding,
-        then left-outer-join it back (reference: planOptional,
-        RelationalPlanner.scala:298-329)."""
+        """OPTIONAL MATCH: plan the pattern from the lhs binding
+        (``_binding``: DISTINCT unless a shared variable is unique), then
+        left-outer-join it back on ``==`` of the identity columns — a null
+        lhs key matches nothing, which is OPTIONAL MATCH's semantics
+        (reference: planOptional, RelationalPlanner.scala:298-329). The
+        rhs goes through the ``maybe_broadcast`` row-bound gate. The lhs
+        keeps its facts only when the rhs has at most one row per key (a
+        shared variable is still unique there)."""
         lhs = self._materialize(rec)
         # variables referenced anywhere in the optional part
         used = set()
@@ -3385,18 +3444,9 @@ class Planner:
             used |= {v.name for v in clause.where.walk() if isinstance(v, A.Var)}
         common = sorted(v for v in used if v in lhs.header)
 
-        join_cols: List[str] = []
         key_cols: List[str] = []
-        for v in common:
-            join_cols.extend(lhs.header[v].columns())
-            key_cols.append(self._key_col(lhs.header[v]))
-        seen = set()
-        join_cols = [c for c in join_cols if not (c in seen or seen.add(c))]
-        key_cols = sorted(set(key_cols))
-
-        if join_cols:
-            d = lhs.df.select(*join_cols).dropDuplicates(key_cols)
-            rhs = Record(d, {v: lhs.header[v] for v in common})
+        if common:
+            rhs, key_cols, _ = self._binding(lhs, common)
         else:
             rhs = Record(None, {})
 
@@ -3410,7 +3460,7 @@ class Planner:
 
         new_vars = {v: m for v, m in rhs.header.items() if v not in lhs.header}
 
-        if not join_cols:
+        if not key_cols:
             keep_cols = []
             for m in new_vars.values():
                 keep_cols.extend(m.columns())
@@ -3429,8 +3479,11 @@ class Planner:
             # already carries them)
             new_cols = [c for c in new_cols if not (c in seen2 or seen2.add(c))]
             renames = {c: f"{c}#opt{next(self._uid)}" for c in key_cols}
-            rdf = rhs.df.select(
-                *[F.col(c).alias(renames[c]) for c in key_cols], *new_cols
+            rdf = maybe_broadcast(
+                rhs.df.select(
+                    *[F.col(c).alias(renames[c]) for c in key_cols], *new_cols
+                ),
+                rhs.row_bound(),
             )
             cond = None
             for c in key_cols:
@@ -3440,6 +3493,8 @@ class Planner:
 
         header = dict(lhs.header)
         header.update(new_vars)
+        if key_cols and rhs.unique & set(common):
+            return lhs.narrowed(df, header)
         return Record(df, header)
 
     # ----------------------------------------------------------------- UNWIND
@@ -3576,7 +3631,8 @@ class Planner:
             df = df.filter(compile_expr(wexpr, CompileCtx(df, wscope, self.params)))
 
         df = df.select(*out_cols)
-        return Record(df, header_out)
+        # at most one output row per input row
+        return Record(df, header_out, rows=rec.rows)
 
     def _order_skip_limit(self, df: DataFrame, clause: A.ProjectionClause, scope: Header) -> DataFrame:
         if clause.order_by:
@@ -3742,4 +3798,5 @@ class Planner:
             gdf = gdf.filter(compile_expr(A.substitute(clause.where, subst), wctx))
 
         gdf = gdf.select(*out_cols)
-        return Record(gdf, header_out)
+        # at most one row per group (one row in all without grouping keys)
+        return Record(gdf, header_out, rows=rec.rows if group_cols else (lambda: 1))

@@ -3,12 +3,15 @@
 Every gate that picks a plan from a measured size reads its threshold from
 ``materialize.py`` at call time. Local test data never crosses those
 thresholds, so the shuffle joins (per-round frames above the broadcast
-limits), the full-width static loop frames and the widest loop rounds
-would otherwise run only on a cluster. Here the thresholds are patched to
-force those branches (broadcast limits 0, one row per partition, salt
-gate 0, Catalyst's own broadcast threshold off), and each operator must
-return exactly the rows of the default regime.
+limits, correlated subpatterns above the row-bound gate), the full-width
+static loop frames and the widest loop rounds would otherwise run only on
+a cluster. Here the thresholds are patched to force those branches
+(broadcast limits 0, one row per partition, salt gate 0, Catalyst's own
+broadcast threshold off), and each operator must return exactly the rows
+of the default regime.
 """
+
+import os
 
 import pytest
 
@@ -16,6 +19,8 @@ from cypher_for_apache_spark_spark import materialize
 from cypher_for_apache_spark_spark.operators import algorithms as alg
 from cypher_for_apache_spark_spark.session import CypherSession
 from cypher_for_apache_spark_spark.sources import edgelist
+from cypher_for_apache_spark_spark.sources.tpch import load_tpch_graph
+from test_registry_smoke import SF_DIR  # the sf0.001 test tables
 
 
 # 60 nodes: a directed chain 0 -> ... -> 39 with chords, a 3-cycle, a
@@ -38,11 +43,8 @@ def graph(spark):
 def forced(spark, monkeypatch):
     """Force the at-scale regime; returns the verdicts ``maybe_broadcast``
     reached so a test can check that the shuffle branch really ran."""
-    monkeypatch.setattr(materialize, "BROADCAST_ROW_LIMIT", 0)
-    monkeypatch.setattr(materialize, "STATIC_BROADCAST_ROW_LIMIT", 0)
-    monkeypatch.setattr(materialize, "STATIC_ROWS_PER_PARTITION", 1)
-    monkeypatch.setattr(materialize, "LOOP_ROWS_PER_PARTITION", 1)
-    monkeypatch.setattr(materialize, "SALT_SNIFF_MIN_BYTES", 0)
+    for name, value in materialize.LARGE_REGIME.items():
+        monkeypatch.setattr(materialize, name, value)
     verdicts = []
     gate = materialize.broadcastable
 
@@ -130,3 +132,72 @@ def test_shortest_path(request, cypher_graph):
          "RETURN b.name AS b, length(p) AS hops")
     v = _same_in_both_regimes(request, lambda: cypher_graph.cypher(q).df)
     _shuffled(v)
+
+
+# correlated subpatterns: the rhs of each goes through the row-bound gate
+_CORRELATED = {
+    "exists": (
+        "MATCH (a:N) WHERE EXISTS { MATCH (a)-[:E]->(b:N) WHERE b.name <> 'n1' } "
+        "RETURN a.name AS a"
+    ),
+    "not_exists": (
+        "MATCH (a:N) WHERE NOT EXISTS { MATCH (a)-[:E]->(:N)-[:E]->(:N) } "
+        "RETURN a.name AS a"
+    ),
+    "pattern_in_boolean": (
+        "MATCH (a:N) WHERE exists((a)-[:E]->(:N {name: 'n5'})) OR a.name = 'n39' "
+        "RETURN a.name AS a"
+    ),
+    "pattern_comprehension": (
+        "MATCH (a:N) RETURN a.name AS a, size([(a)-[:E]->(b:N) | b.name]) AS n"
+    ),
+    "optional_match": (
+        "MATCH (a:N) OPTIONAL MATCH (a)-[:E]->(b:N) RETURN a.name AS a, b.name AS b"
+    ),
+    "call_aggregating": (
+        "MATCH (a:N) CALL { WITH a MATCH (a)-[:E]->(b:N) RETURN count(b) AS n } "
+        "RETURN a.name AS a, n"
+    ),
+    "call_rows": (
+        "MATCH (a:N) CALL { WITH a MATCH (a)-[:E]->(b:N) RETURN b.name AS b } "
+        "RETURN a.name AS a, b"
+    ),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_CORRELATED))
+def test_correlated_subpattern(request, cypher_graph, name):
+    q = _CORRELATED[name]
+    v = _same_in_both_regimes(request, lambda: cypher_graph.cypher(q).df)
+    _shuffled(v)
+
+
+@pytest.fixture(scope="module")
+def tpch(spark):
+    return load_tpch_graph(spark, SF_DIR, with_triplets=("IN_NATION", "IN_REGION", "PLACED", "LINE"))
+
+
+@pytest.mark.skipif(not os.path.isdir(SF_DIR), reason="testdata not present")
+@pytest.mark.parametrize(
+    "q",
+    [
+        "MATCH (c:Customer) WHERE EXISTS { MATCH (c)-[:PLACED]->(o:Order) "
+        "WHERE o.status = 'F' } RETURN count(*) AS n",
+        "MATCH (c:Customer) WHERE c.acctbal > 0 OPTIONAL MATCH (c)-[:PLACED]->(o:Order) "
+        "WITH c, count(o) AS n_orders RETURN n_orders, count(*) AS customers",
+        "MATCH (c:Customer) WHERE c.acctbal > 0 "
+        "CALL { WITH c MATCH (c)-[:PLACED]->(o:Order) RETURN count(o) AS orders } "
+        "RETURN c.mktsegment AS segment, sum(orders) AS orders",
+    ],
+    ids=["exists", "optional", "call"],
+)
+def test_small_subpatterns_broadcast_in_the_static_plan(tpch, q):
+    """Default regime: the subpattern's row bound is under the broadcast
+    limit, so the static plan (AQE's initial plan, printed with the final
+    one) joins it back by broadcast, not by a sort-merge join that AQE
+    could only replace after running both shuffles."""
+    df = tpch.cypher(q).df
+    assert df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "Initial Plan" in plan
+    assert "SortMergeJoin" not in plan, plan

@@ -2,12 +2,19 @@
 queries() entry on Spark and its oracle_sql() on DuckDB at sf0.01,
 compare row count, column names, and an order-insensitive value hash.
 
-Usage: python tools/check_oracle.py [--json OUT.json] [sf_dir] [query ...]
+Usage: python tools/check_oracle.py [--json OUT.json] [--force-large-regime]
+                                    [sf_dir] [query ...]
 
 With --json the per-entry verdicts are also written as a machine-readable
 artifact (the round's ORACLE_FULL_r{N}.json): for each entry
 {rows_match, schema_match, hash_match, spark_rows, oracle_rows, err},
 or {oracle: null, spark_rows, err} for rows-only entries.
+
+With --force-large-regime every size gate takes its at-scale branch
+(``materialize.LARGE_REGIME``: broadcast limits 0, one row per partition,
+salt gate 0; Catalyst's own broadcast threshold off), as in
+tests/test_large_regime.py, and every entry must still match the oracle
+hashes the default regime matches.
 """
 
 from __future__ import annotations
@@ -21,7 +28,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import duckdb
 
 import __spark_entry__ as E
-from cypher_for_apache_spark_spark import build_spark_session
+from cypher_for_apache_spark_spark import build_spark_session, materialize
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders",
@@ -53,16 +60,22 @@ def main():
         i = argv.index("--json")
         json_out = argv[i + 1]
         del argv[i : i + 2]
+    force_large = "--force-large-regime" in argv
+    if force_large:
+        argv.remove("--force-large-regime")
+        for name, value in materialize.LARGE_REGIME.items():
+            setattr(materialize, name, value)
     sf_dir = argv[0] if argv else "/root/testdata/sf0.01"
     only = set(argv[1:])
+    confs = {
+        "spark.sql.shuffle.partitions": "8",
+        "spark.sql.session.timeZone": "UTC",
+        "spark.ui.enabled": "false",
+    }
+    if force_large:
+        confs["spark.sql.autoBroadcastJoinThreshold"] = "-1"
     spark = build_spark_session(
-        master="local[8]",
-        app_name="oracle-check",
-        extra_confs={
-            "spark.sql.shuffle.partitions": "8",
-            "spark.sql.session.timeZone": "UTC",
-            "spark.ui.enabled": "false",
-        },
+        master="local[8]", app_name="oracle-check", extra_confs=confs
     )
     spark.sparkContext.setLogLevel("ERROR")
     con = duckdb.connect()
@@ -136,6 +149,7 @@ def main():
 
         summary = {
             "sf_dir": sf_dir,
+            "force_large_regime": force_large,
             "n_pass": n_pass,
             "n_fail": n_fail,
             "n_rows_only": sum(
