@@ -29,7 +29,7 @@ needs.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 # Size and width policy. Every gate that picks a plan from a MEASURED size
 # reads these at call time (never as bound defaults), so one place sets
@@ -64,6 +64,45 @@ def parallelism(spark: SparkSession) -> int:
     """The session's configured shuffle width, the cap of every measured
     width in the package."""
     return max(1, int(spark.conf.get("spark.sql.shuffle.partitions")))
+
+
+def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
+    """A small driver-side list of tuples as a DataFrame computed entirely
+    in the JVM: ``inline`` of a literal array of structs over a one-row,
+    one-partition ``range``, every value cast to its declared type.
+    ``schema`` is a DDL string (``"id long, d double"``) or a StructType;
+    every column is nullable, as ``createDataFrame`` declares it.
+
+    ``spark.createDataFrame(<list>)`` ships the rows through
+    ``parallelize`` plus an identity ``map`` that runs in Python workers
+    (``_to_java_object_rdd``), so every action over the frame, or over
+    any plan that is not truncated above it, starts a Python-worker job
+    (~0.9 s of worker CPU per ``sssp`` call on a one-row seed, sf0.01,
+    4 vCPUs), where this form starts no Python worker at all. Use it for
+    seeds, lookup tables and other lists the driver already holds; the
+    literal array rides in the plan, so it is not meant for bulk data.
+
+    An empty ``rows`` gives a ``Filter(false)`` frame, which Catalyst
+    prunes to an empty relation, as it does an empty ``createDataFrame``."""
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    one = spark.range(0, 1, 1, 1)
+    if not rows:
+        return one.select(
+            *[F.lit(None).cast(f.dataType).alias(f.name) for f in schema.fields]
+        ).filter(F.lit(False))
+    structs = [
+        F.struct(
+            *[
+                F.lit(v).cast(f.dataType).alias(f.name)
+                for v, f in zip(row, schema.fields, strict=True)
+            ]
+        )
+        for row in rows
+    ]
+    # the whole-array cast makes every field nullable (inline of an array
+    # that may hold nulls), matching the declared schema
+    return one.select(F.inline(F.array(*structs).cast(T.ArrayType(schema))))
 
 
 def _reset_stats(df: DataFrame) -> DataFrame:

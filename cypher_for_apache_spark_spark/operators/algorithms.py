@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, Window, functions as F
 from cypher_for_apache_spark_spark.graph import PropertyGraph
 from cypher_for_apache_spark_spark.materialize import (
     broadcastable as _broadcastable,
+    local_frame as _local_frame,
     loop_width as _loop_width,
     materialize as _checkpoint,
     materialize_agg as _checkpoint_agg,
@@ -336,11 +337,11 @@ def bfs_distances(
     e, _, drop_e = _static_loop_frame(
         _edges(graph, rel_types, undirected=undirected), "src"
     )
-    frontier = spark.createDataFrame(
-        [(int(s),) for s in source_ids], "id long"
-    ).dropDuplicates()
-    n_frontier = len(set(source_ids))
-    n_visited = n_frontier
+    seeds = sorted({int(s) for s in source_ids})
+    # a JVM-side frame: the seeds stay in ``visited`` (never checkpointed),
+    # so every round and the caller's actions re-read them
+    frontier = _local_frame(spark, [(s,) for s in seeds], "id long")
+    n_frontier = n_visited = len(seeds)
     visited = frontier.select("id", F.lit(0).cast("long").alias("dist"))
     dist = 0
     while max_hops is None or dist < max_hops:
@@ -437,6 +438,13 @@ def k_core(
     checkpoint (the same discipline as connected_components — the classic
     failure mode of iterative DataFrames is exponential plan growth, not
     data volume). Converges when a round deletes nothing.
+
+    The adjacency is lazy. Round 1's peel test needs only the initial
+    degrees, which one action computes from the canonical edges (a lazy
+    checkpoint that this action fills). The cached, re-partitioned and
+    sorted adjacency the later rounds probe is built at the first round
+    that actually deletes a vertex, so a graph that is already a k-core
+    pays for no adjacency at all.
     """
     if k < 1:
         raise ValueError("k must be >= 1")
@@ -448,23 +456,13 @@ def k_core(
         .filter(F.col("src") != F.col("dst"))
         .dropDuplicates()
     )
-    # adjacency (both orientations of the canonical edge set) instead of
-    # the canonical frame itself: the per-round "neighbours of the wave"
-    # lookup becomes ONE equi-join on a single key instead of a src-branch
-    # + dst-branch pair. The peel runs MANY rounds, so the static side is
-    # cached at 8x the static-frame width (~250k rows/partition) and each
-    # round's wave joins it broadcast (see _maybe_broadcast): the adjacency is
-    # probed in place every round — no exchange, no sort, parallel probe —
-    # instead of a full sort-merge pass per round
-    adj, _, drop_adj = _static_loop_frame(
-        _mirror(
-            canon,
-            [F.col("src"), F.col("dst")],
-            [F.col("dst"), F.col("src")],
-            ["id", "nbr"],
-        ),
-        "id",
-        multiplier=8,
+    # lazy: deg0's action is canon's single first consumer and computes
+    # both; a later first peel builds the adjacency from canon's blocks
+    canon = _checkpoint_lazy(canon)
+    deg0 = _checkpoint(
+        _mirror(canon, [F.col("src")], [F.col("dst")], ["id"])
+        .groupBy("id")
+        .agg(F.count("*").alias("degree"))
     )
     # delta-only iteration: degrees are aggregated ONCE; every later round
     # materializes nothing but the (tiny) per-round wave, the cumulative
@@ -476,16 +474,11 @@ def k_core(
     # re-checkpointed O(V) degree rows (and before that O(E) edge rows)
     # every round; on long-lived sessions those block-manager writes, not
     # the peeling math, dominated wall time (sf1: 28-40 s -> ~9 s warm).
-    # Joins against wave/dead/cum frames are left to AQE: their runtime
-    # sizes are wave-bounded, so they broadcast when small without pinning
-    # a driver-side collect on graphs that peel in huge waves.
-    deg0 = _checkpoint(
-        adj.groupBy("id").agg(F.count("*").alias("degree"))
-    )
     # every cumulative frame is count-tracked by the loop's own probes
     # (dead_all: sum of the wave counts; cum: bounded by the touched
     # neighbour count of all waves so far) so their joins broadcast-gate
     # on measured sizes — small peels probe deg0/adj in place
+    adj = None
     dead_all = None
     n_dead = 0
     cum = None  # (id, _cum) — total decrements so far
@@ -506,6 +499,23 @@ def k_core(
         newly, n_newly = _checkpoint_count(below)
         if n_newly == 0:
             break
+        if adj is None:
+            # first peel: the adjacency (both orientations of the canonical
+            # edge set) makes the per-round "neighbours of the wave" lookup
+            # ONE equi-join on a single key instead of a src-branch +
+            # dst-branch pair. It is cached at 8x the static-frame width
+            # (~250k rows/partition) and each wave joins it broadcast, so
+            # it is probed in place every round — no exchange, no sort
+            adj, _, drop_adj = _static_loop_frame(
+                _mirror(
+                    canon,
+                    [F.col("src"), F.col("dst")],
+                    [F.col("dst"), F.col("src")],
+                    ["id", "nbr"],
+                ),
+                "id",
+                multiplier=8,
+            )
         n_dead += n_newly
         dead_all = (
             newly
@@ -532,7 +542,8 @@ def k_core(
                 .groupBy("id")
                 .agg(F.sum("_cum").alias("_cum"))
             )
-    drop_adj()
+    if adj is not None:
+        drop_adj()
     out = _cur_deg().filter(F.col("degree") >= k)
     if dead_all is not None:
         out = out.join(_maybe_broadcast(dead_all, n_dead), "id", "left_anti")
@@ -551,11 +562,19 @@ def sssp(
 
     Bellman-Ford frontier iteration — the same delta discipline as
     ``bfs_distances`` but carrying a double distance: each round relaxes
-    only edges leaving nodes whose distance improved last round, merges
-    candidate distances with a min-aggregation, and stops when no node
-    improves. Work per round is O(frontier-out-edges); every per-round
-    frame is lineage-truncated with the scoped checkpoint. With
+    only edges leaving nodes whose distance improved last round and stops
+    when no node improves. Work per round is O(frontier-out-edges). With
     ``weight_prop`` unset (or null on an edge) the weight is 1.0.
+
+    ``settled`` is the union of the seeds and every round's checkpointed
+    improvements: a flat plan of already-computed blocks whose row count
+    is the sum of the rounds' probes. A candidate distance survives iff no
+    recorded distance for its node is <= it (a gated ``left_anti`` on
+    ``id = _sid AND _sd <= _nd``), which is exactly "it improves on the
+    node's minimum so far" without keeping that minimum per round. So a
+    round is ONE Spark action (its checkpoint and count), and the min per
+    id is taken once, after the loop, into one checkpoint that the caller's
+    actions share.
     """
     e = graph.scan_rels(rel_types, out_id="_eid", out_src="src", out_dst="dst")
     if e is None:
@@ -571,11 +590,12 @@ def sssp(
     else:
         w = F.lit(1.0)
     edges, _, drop_edges = _static_loop_frame(e.select("src", "dst", w.alias("w")), "src")
-    spark = edges.sparkSession
-    dist = spark.createDataFrame([(int(s), 0.0) for s in sources], "id long, d double")
-    dist = _checkpoint(dist.groupBy("id").agg(F.min("d").alias("d")))
-    frontier = dist
-    n_frontier = len(set(sources))
+    seeds = sorted({int(s) for s in sources})
+    frontier = _local_frame(
+        edges.sparkSession, [(s, 0.0) for s in seeds], "id long, d double"
+    )
+    settled = frontier
+    n_frontier = n_settled = len(seeds)
     for _ in range(max_iterations):
         cand = (
             _maybe_broadcast(frontier, n_frontier)
@@ -584,21 +604,23 @@ def sssp(
             .groupBy("id")
             .agg(F.min("_nd").alias("_nd"))
         )
+        known = settled.select(F.col("id").alias("_sid"), F.col("d").alias("_sd"))
         # checkpoint + termination probe (doubles as next round's
         # broadcast gate) in one job
         improved, n_frontier = _checkpoint_count(
-            cand.join(dist, "id", "left_outer")
-            .filter(F.col("d").isNull() | (F.col("_nd") < F.col("d")))
-            .select("id", F.col("_nd").alias("d"))
+            cand.join(
+                _maybe_broadcast(known, n_settled),
+                (F.col("id") == F.col("_sid")) & (F.col("_sd") <= F.col("_nd")),
+                "left_anti",
+            ).select("id", F.col("_nd").alias("d"))
         )
         if n_frontier == 0:
             break
-        dist = _checkpoint(
-            dist.unionByName(improved).groupBy("id").agg(F.min("d").alias("d"))
-        )
+        settled = settled.unionByName(improved)
+        n_settled += n_frontier
         frontier = improved
     drop_edges()
-    return dist.select("id", F.col("d").alias("dist"))
+    return _checkpoint(settled.groupBy("id").agg(F.min("d").alias("dist")))
 
 
 def clustering_coefficient_edges(edges: DataFrame) -> DataFrame:

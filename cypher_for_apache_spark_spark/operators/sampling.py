@@ -19,6 +19,8 @@ from typing import Dict, List, Tuple
 
 from pyspark.sql import Column, DataFrame, Window as W, functions as F
 
+from cypher_for_apache_spark_spark.materialize import local_frame
+
 # hash space for split cutoffs: first 8 hex chars of md5 = 32 bits.
 # Comparisons are done on the *hex string* (fixed width, lowercase), which
 # orders identically to the integer value in every engine.
@@ -138,9 +140,10 @@ def rebalance_mix(
     of the |groups|-row fraction table, then a stateless per-row filter —
     the raw data is read once and never shuffles."""
     total = float(sum(weights.values()))
-    spark = df.sparkSession
-    wdf = spark.createDataFrame(
-        [(g, w / total) for g, w in weights.items()], f"{group_col} string, p double"
+    wdf = local_frame(
+        df.sparkSession,
+        [(g, w / total) for g, w in weights.items()],
+        f"{group_col} string, p double",
     )
     counts = df.groupBy(group_col).count()
     j = counts.join(wdf, group_col)
@@ -200,8 +203,7 @@ def temperature_mix(
     quotas = [
         (str(g), min(counts[g], wts[g] * int(total) // tw)) for g in counts
     ]
-    spark = df.sparkSession
-    qdf = spark.createDataFrame(quotas, "_tm_g string, _tm_quota long")
+    qdf = local_frame(df.sparkSession, quotas, "_tm_g string, _tm_quota long")
     w = W.partitionBy(group_col).orderBy(hash_key(F.col(key_col)), F.col(key_col))
     return (
         df.join(

@@ -22,6 +22,8 @@ import itertools
 from dataclasses import replace as dc_replace
 from typing import Dict, FrozenSet, List, Optional, Sequence, Tuple
 
+from py4j.protocol import Py4JJavaError
+from pyspark.errors.exceptions.captured import CapturedException
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F, types as T
 
 from cypher_for_apache_spark_spark import ast as A
@@ -38,6 +40,7 @@ from cypher_for_apache_spark_spark.graph import PropertyGraph
 from cypher_for_apache_spark_spark.header import EntityMeta, Header, fresh
 from cypher_for_apache_spark_spark import materialize as _policy
 from cypher_for_apache_spark_spark.materialize import (
+    local_frame,
     loop_width,
     materialize,
     materialize_count,
@@ -129,7 +132,9 @@ class Planner:
         try:
             stats = rdf._jdf.queryExecution().optimizedPlan().stats()
             size = int(str(stats.sizeInBytes()))
-        except Exception:
+        except (Py4JJavaError, CapturedException):
+            # the JVM could not estimate the plan (e.g. a leaf node without
+            # statistics): py4j's error, or PySpark's translation of it
             size = None
         if size is None or size >= (1 << 62):
             # stats unavailable or Catalyst's defaultSizeInBytes sentinel
@@ -1661,11 +1666,17 @@ class Planner:
         )
 
         levels: List[DataFrame] = []
+        # visited is a union of checkpointed frames whose row count is the
+        # sum of the probes the loop already takes (None: no probe, no
+        # broadcast), so the per-round anti-join is broadcast-gated the
+        # way bfs_distances gates its visited set
         if lo == 0:
             levels.append(zero)
             visited = zero.select(src_c, end_c)
+            n_visited = n_prev
         else:
             visited = zero.select(src_c, end_c).filter(F.lit(False))
+            n_visited = 0
 
         if lo >= 2:
             levels = self._minlen_shortest_levels(
@@ -1711,7 +1722,9 @@ class Planner:
                         )
                     cur = cur.groupBy(src_c, end_c).agg(F.min(ids_col).alias(ids_col))
                 if lo == 0 or depth > 1:
-                    cur = cur.join(visited, [src_c, end_c], "left_anti")
+                    cur = cur.join(
+                        maybe_broadcast(visited, n_visited), [src_c, end_c], "left_anti"
+                    )
                 more = hi is None or depth < hi
                 n_cur = None
                 if more:
@@ -1726,7 +1739,7 @@ class Planner:
                     break
                 levels.append(cur)
                 if more:
-                    new_pairs = cur.select(src_c, end_c)
+                    new_pairs, n_new = cur.select(src_c, end_c), n_cur
                     if not single:
                         # 'all' keeps one row per shortest path; the visited
                         # set needs distinct pairs ('single' rows are already
@@ -1734,8 +1747,9 @@ class Planner:
                         # Materialize so later anti-joins don't redo the
                         # distinct; in single mode the union of already-
                         # checkpointed frontiers needs no eager job.
-                        new_pairs = materialize(new_pairs.distinct())
+                        new_pairs, n_new = materialize_count(new_pairs.distinct())
                     visited = visited.unionByName(new_pairs)
+                    n_visited += n_new
         elif lo > 0:
             levels.append(zero.filter(F.lit(False)))
 
@@ -2308,7 +2322,7 @@ class Planner:
                     T.StructField(labels_col, T.ArrayType(T.StringType())),
                 ]
             )
-            df = self.spark.createDataFrame([], schema)
+            df = local_frame(self.spark, [], schema)
         prop_cols = {c[len(prefix):]: c for c in df.columns if c.startswith(prefix)}
         meta = EntityMeta(
             kind="node",

@@ -31,6 +31,8 @@ from typing import Callable, Dict, List, Optional, Sequence
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from cypher_for_apache_spark_spark.materialize import local_frame
+
 
 class ProcedureError(ValueError):
     pass
@@ -170,8 +172,8 @@ def _p_ppr(ctx, source_ids, iterations=10, damping=0.85, rel_types=None):
     )
 
     g = ctx.require_graph()
-    seeds = ctx.spark.createDataFrame(
-        [(s,) for s in _ids_as_longs(source_ids, "source ids")], "id long"
+    seeds = local_frame(
+        ctx.spark, [(s,) for s in _ids_as_longs(source_ids, "source ids")], "id long"
     )
     return personalized_pagerank(
         _edges(g, _rel_types(rel_types)),
@@ -269,8 +271,10 @@ def _p_harmonic(ctx, landmark_ids=None, max_hops=None, rel_types=None):
     if landmark_ids is None:
         lms = _vertices(g)
     else:
-        lms = ctx.spark.createDataFrame(
-            [(s,) for s in _ids_as_longs(landmark_ids, "landmark ids")], "id long"
+        lms = local_frame(
+            ctx.spark,
+            [(s,) for s in _ids_as_longs(landmark_ids, "landmark ids")],
+            "id long",
         )
     return harmonic_closeness(
         _edges(g, _rel_types(rel_types)),
@@ -282,15 +286,13 @@ def _p_harmonic(ctx, landmark_ids=None, max_hops=None, rel_types=None):
 def _p_db_labels(ctx):
     g = ctx.require_graph()
     labels = sorted({l for combo in g.node_tables for l in combo})
-    return ctx.spark.createDataFrame([(l,) for l in labels], "label string")
+    return local_frame(ctx.spark, [(l,) for l in labels], "label string")
 
 
 def _p_db_rel_types(ctx):
     g = ctx.require_graph()
     types = sorted(g.rel_tables)
-    return ctx.spark.createDataFrame(
-        [(t,) for t in types], "relationshipType string"
-    )
+    return local_frame(ctx.spark, [(t,) for t in types], "relationshipType string")
 
 
 def _p_db_property_keys(ctx):
@@ -301,9 +303,7 @@ def _p_db_property_keys(ctx):
     for rts in g.rel_tables.values():
         for rt in rts:
             keys.update(rt.property_columns)
-    return ctx.spark.createDataFrame(
-        [(k,) for k in sorted(keys)], "propertyKey string"
-    )
+    return local_frame(ctx.spark, [(k,) for k in sorted(keys)], "propertyKey string")
 
 
 def _install_builtins(reg: ProcedureRegistry) -> None:

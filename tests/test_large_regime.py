@@ -12,6 +12,7 @@ of the default regime.
 """
 
 import os
+import re
 
 import pytest
 
@@ -132,6 +133,28 @@ def test_shortest_path(request, cypher_graph):
          "RETURN b.name AS b, length(p) AS hops")
     v = _same_in_both_regimes(request, lambda: cypher_graph.cypher(q).df)
     _shuffled(v)
+
+
+# bounded, so the last round's visited anti-join stays in the returned plan
+_SHORTEST_BOUNDED = (
+    "MATCH p = shortestPath((a:N)-[:E*1..3]->(b:N)) "
+    "WHERE a.name IN ['n0', 'n40'] RETURN a.name AS a, b.name AS b, length(p) AS hops"
+)
+
+
+def _anti_joins(df):
+    """The join operators of the static plan's LEFT ANTI joins."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return re.findall(r"(\w+Join) \[[^\]]*\], \[[^\]]*\], LeftAnti", plan)
+
+
+def test_shortest_path_visited_join_regimes(request, cypher_graph):
+    """The visited set is broadcast-gated on the sum of the frontier
+    probes: broadcast in the default regime, a shuffle join when forced."""
+    assert _anti_joins(cypher_graph.cypher(_SHORTEST_BOUNDED).df) == ["BroadcastHashJoin"]
+    v = _same_in_both_regimes(request, lambda: cypher_graph.cypher(_SHORTEST_BOUNDED).df)
+    _shuffled(v)
+    assert _anti_joins(cypher_graph.cypher(_SHORTEST_BOUNDED).df) == ["SortMergeJoin"]
 
 
 # correlated subpatterns: the rhs of each goes through the row-bound gate
