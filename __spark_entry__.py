@@ -1922,9 +1922,11 @@ def _q_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     verts = g.scan_nodes(labels=["Order"], out_id="id").select("id")
     # NEXT chains are shallow at every SF (chain length = orders per
     # customer, which TPC-H holds constant as SF grows), so one pointer
-    # jump per round already converges in the same number of contraction
-    # rounds as two — measured: identical output hash, 41 -> 37 jobs,
-    # one fewer O(V) label-map join per round at any scale
+    # jump per Spark round already converges in the same number of
+    # contraction rounds as two — measured before the driver finish:
+    # identical output hash, 41 -> 37 jobs, one fewer O(V) label-map join
+    # per round. Up to sf0.1 the edges fit the broadcast gate and no Spark
+    # round runs.
     cc = connected_components_edges(
         _edges(g, rel_types=["NEXT"]), vertices=verts, max_iterations=64,
         jumps_per_round=1,

@@ -71,7 +71,7 @@ def _decode_bytes_pil(payload: bytes) -> dict:  # pragma: no cover - no PIL here
     try:
         with Image.open(BytesIO(bytes(payload))) as im:
             return {"width": int(im.width), "height": int(im.height), "ok": True}
-    except Exception:
+    except Exception:  # any undecodable payload is a row with ok=False, not a failed job
         return {"width": None, "height": None, "ok": False}
 
 
@@ -222,7 +222,7 @@ def _phash_pil(payload: bytes):  # pragma: no cover - no PIL in this env
     try:
         with Image.open(BytesIO(bytes(payload))) as im:
             px = list(im.convert("L").resize((8, 8)).getdata())
-    except Exception:
+    except Exception:  # any undecodable payload gets a null hash, not a failed job
         return None
     mean = sum(px) / 64.0
     bits = 0

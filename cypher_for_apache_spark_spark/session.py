@@ -9,8 +9,10 @@ and lazily returns records; a catalog maps graph names to graphs.
 
 from __future__ import annotations
 
+import os
 import warnings
 import weakref
+from pathlib import Path
 from typing import Dict, Iterable, Mapping, Optional, Union
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -24,6 +26,11 @@ from cypher_for_apache_spark_spark.plans.planner import Planner
 # static, so only a session builder can raise it (build_spark_session).
 CODEGEN_CACHE_CONF = "spark.sql.codegen.cache.maxEntries"
 CODEGEN_CACHE_ENTRIES = 5000
+
+# the directory that holds the package: Python workers (the Pandas-UDF
+# operators) need it on their path to import the package from any
+# working directory
+_PACKAGE_PARENT = str(Path(__file__).resolve().parent.parent)
 
 # SparkContexts whose codegen cache size CypherSession has already checked
 _CODEGEN_CHECKED: "weakref.WeakSet" = weakref.WeakSet()
@@ -100,17 +107,34 @@ def build_spark_session(
       queries paid 43 per query (0 with 5000). 5000 covers the whole
       117-entry query registry: 1843 compiles on a first pass, 76 on the
       second. Plans, jobs and rows are unchanged.
+    - ``spark.executorEnv.PYTHONPATH``: the package's parent directory,
+      then the driver's ``PYTHONPATH``. Python workers start in the
+      JVM's working directory, so without it the Pandas-UDF operators
+      (``media_decode_docs``, ``phash_dup_docs``) fail with
+      ``ModuleNotFoundError`` whenever the driver runs outside the
+      directory that holds the package.
+
+    A key in ``extra_confs`` overrides any of these.
     """
     b = SparkSession.builder.appName(app_name)
     if master is not None:
         b = b.master(master)
-    b = b.config("spark.python.sql.dataFrameDebugging.enabled", "false")
-    b = b.config(CODEGEN_CACHE_CONF, str(CODEGEN_CACHE_ENTRIES))
-    for k, v in (extra_confs or {}).items():
+    for k, v in _session_confs(extra_confs).items():
         b = b.config(k, v)
     spark = b.getOrCreate()
     _spark_tuning(spark)
     return spark
+
+
+def _session_confs(extra_confs: Optional[Mapping[str, str]]) -> Dict[str, str]:
+    """The static confs ``build_spark_session`` sets, ``extra_confs`` last."""
+    paths = [_PACKAGE_PARENT] + [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p]
+    return {
+        "spark.python.sql.dataFrameDebugging.enabled": "false",
+        CODEGEN_CACHE_CONF: str(CODEGEN_CACHE_ENTRIES),
+        "spark.executorEnv.PYTHONPATH": os.pathsep.join(dict.fromkeys(paths)),
+        **(extra_confs or {}),
+    }
 
 
 def _spark_tuning(spark: SparkSession) -> None:

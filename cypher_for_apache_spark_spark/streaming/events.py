@@ -93,11 +93,7 @@ def streaming_sessionize(
 def streaming_dedup(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
     """Exactly-once event ids within the watermark horizon
     (dropDuplicatesWithinWatermark keeps state bounded)."""
-    w = events.withWatermark("ts", watermark)
-    try:
-        return w.dropDuplicatesWithinWatermark(["event_id"])
-    except Exception:  # older Spark fallback: unbounded-state dedup
-        return w.dropDuplicates(["event_id"])
+    return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(["event_id"])
 
 
 def run_to_memory(stream_df: DataFrame, name: str, output_mode: str = "append"):

@@ -1,7 +1,11 @@
 """Loop operators pay only for the rounds they run.
 
-- ``materialize.local_frame`` builds driver-side lists in the JVM, with no
-  Python-worker job behind them, and keeps the declared types.
+- ``materialize.local_frame`` builds driver-side lists and Arrow tables
+  through one Arrow path, with no Python-worker job behind them, and keeps
+  the declared types.
+- ``connected_components_edges`` finishes on the driver once the
+  contracted edges fit the broadcast gate, with the rows of the all-Spark
+  rounds forced by ``LARGE_REGIME``.
 - ``sssp`` runs one checkpoint action per round and takes the min per id
   once, after the loop; ``bfs_distances`` seeds the same way.
 - ``k_core`` builds its cached adjacency only when a round peels.
@@ -9,9 +13,13 @@
 """
 
 import heapq
+import itertools
+import random
 from collections import deque
+from pathlib import Path
 from types import SimpleNamespace
 
+import pyarrow as pa
 import pytest
 
 from cypher_for_apache_spark_spark import materialize
@@ -19,6 +27,7 @@ from cypher_for_apache_spark_spark.operators import algorithms as alg
 from cypher_for_apache_spark_spark.plans.planner import Planner
 from cypher_for_apache_spark_spark.sources import edgelist
 from test_large_regime import _EDGES  # 60 nodes, two components
+from test_large_regime import forced  # noqa: F401  (fixture: the at-scale regime)
 
 
 @pytest.fixture(scope="module")
@@ -38,6 +47,55 @@ def test_local_frame_runs_no_python_worker(spark):
     assert [tuple(r) for r in df.collect()] == rows
     # the check can see a Python-worker frame: createDataFrame's has one
     assert "PythonRDD" in _rdd_lineage(spark.createDataFrame(rows, "id long, d double"))
+
+
+@pytest.mark.parametrize("rows", [1, 10_000, "arrow"])
+def test_local_frame_lineage_has_no_python_rdd(spark, rows):
+    if rows == "arrow":
+        data = pa.table({"id": pa.array(range(100), pa.int64()), "d": [0.5] * 100})
+        want = [(i, 0.5) for i in range(100)]
+    else:
+        data = want = [(i, i / 2) for i in range(rows)]
+    df = materialize.local_frame(spark, data, "id long, d double")
+    assert "PythonRDD" not in _rdd_lineage(df)
+    assert sorted(tuple(r) for r in df.collect()) == want
+
+
+def _descendant_cpu(pid):
+    """{pid: utime + stime ticks} of every process below ``pid``."""
+    children = {}
+    for d in Path("/proc").iterdir():
+        if not d.name.isdigit():
+            continue
+        try:
+            fields = (d / "stat").read_text().rsplit(")", 1)[1].split()
+        except OSError:  # the process exited while listing
+            continue
+        children.setdefault(int(fields[1]), []).append(
+            (int(d.name), int(fields[11]) + int(fields[12]))
+        )
+    out, todo = {}, [pid]
+    while todo:
+        for child, ticks in children.get(todo.pop(), ()):
+            out[child] = ticks
+            todo.append(child)
+    return out
+
+
+@pytest.mark.skipif(not Path("/proc/self/stat").exists(), reason="needs procfs")
+def test_local_frame_count_starts_no_python_worker(spark):
+    jvm = spark.sparkContext._gateway.proc.pid
+    df = materialize.local_frame(spark, [(i, i / 2) for i in range(1000)], "id long, d double")
+    before = _descendant_cpu(jvm)
+    assert df.count() == 1000
+    after = _descendant_cpu(jvm)
+    # no new process, and no CPU in an idle worker a count could reuse
+    assert after.keys() <= before.keys()
+    assert all(after[p] == before[p] for p in after)
+    # the probe sees Python-worker work when there is some
+    spark.sparkContext.parallelize(range(4), 4).map(lambda x: sum(range(300_000))).count()
+    busy = _descendant_cpu(jvm)
+    assert busy.keys() - before.keys() or sum(busy.values()) > sum(before.values())
 
 
 def test_local_frame_keeps_declared_types(spark):
@@ -169,6 +227,100 @@ def test_k_core_builds_adjacency_only_when_it_peels(graph, monkeypatch, k, peels
     _spy(monkeypatch, "_static_loop_frame", calls, "adjacency")
     assert _rows(alg.k_core(graph, k=k)) == _k_core_ref(k)
     assert calls == (["adjacency"] if peels else [])
+
+
+# ------------------------------------------ connected components, driver finish
+_RND = random.Random(61)
+_CC_CASES = {
+    "chain": [(i + 1, i) for i in range(30)],
+    "star": [(100, i) for i in range(20)],
+    "two_cliques": [
+        (a, b) for base in (0, 10) for a, b in itertools.combinations(range(base, base + 6), 2)
+    ],
+    # ids at TPC-H strides: the k-th class of node ids starts at k * 2^40
+    "random_strided": [
+        ((_RND.randrange(1, 6) << 40) + _RND.randrange(40),
+         (_RND.randrange(1, 6) << 40) + _RND.randrange(40))
+        for _ in range(60)
+    ],
+    "duplicates_and_self_loops": [(1, 2), (2, 1), (1, 2), (3, 3), (2, 4), (4, 4), (5, 5)],
+    "empty": [],
+}
+# vertices beyond the edge endpoints, which come out as their own components
+_ISOLATED = [7, 9_000, 3 << 40]
+
+
+def _cc_ref(edges, extra):
+    parent = {}
+
+    def find(v):
+        while parent.setdefault(v, v) != v:
+            v = parent[v]
+        return v
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    ids = {v for e in edges for v in e} | set(extra)
+    return sorted((v, find(v)) for v in ids)
+
+
+def _cc(spark, edges):
+    verts = sorted({v for e in edges for v in e} | set(_ISOLATED))
+    return alg.connected_components_edges(
+        spark.createDataFrame(edges, "src long, dst long"),
+        vertices=spark.createDataFrame([(v,) for v in verts], "id long"),
+    )
+
+
+@pytest.mark.parametrize("case", sorted(_CC_CASES))
+def test_cc_driver_finish_matches_spark_rounds(spark, monkeypatch, request, case):
+    edges = _CC_CASES[case]
+    # an edge set with no edge between two distinct ids has nothing to contract
+    contracts = any(a != b for a, b in edges)
+    finishes, rounds = [], []
+    _spy(monkeypatch, "_components_on_driver", finishes, "finish")
+    _spy(monkeypatch, "_loop_width", rounds, "round")
+    default = _rows(_cc(spark, edges))
+    assert default == _cc_ref(edges, _ISOLATED)
+    assert finishes == (["finish"] if contracts else []) and rounds == []
+    finishes.clear()
+    request.getfixturevalue("forced")
+    assert _rows(_cc(spark, edges)) == default
+    assert finishes == [] and bool(rounds) == contracts
+
+
+def test_cc_spark_rounds_then_driver_finish(spark, monkeypatch, request):
+    edges = _CC_CASES["random_strided"]
+    canonical = {(min(a, b), max(a, b)) for a, b in edges if a != b}
+    finishes, rounds = [], []
+    _spy(monkeypatch, "_components_on_driver", finishes, "finish")
+    _spy(monkeypatch, "_loop_width", rounds, "round")
+    # the gate admits one edge fewer than the graph has, so round 1 runs on
+    # Spark and the contracted remainder finishes on the driver
+    monkeypatch.setattr(materialize, "BROADCAST_ROW_LIMIT", len(canonical) - 1)
+    mixed = _rows(_cc(spark, edges))
+    assert rounds and finishes == ["finish"]
+    assert mixed == _cc_ref(edges, _ISOLATED)
+    request.getfixturevalue("forced")
+    assert _rows(_cc(spark, edges)) == mixed
+
+
+_groups = itertools.count()
+
+
+def test_cc_job_count(spark):
+    edges = _CC_CASES["random_strided"]
+    sc = spark.sparkContext
+    group = f"cc-jobs-{next(_groups)}"
+    sc.setJobGroup(group, group)
+    try:
+        _cc(spark, edges).collect()
+    finally:
+        sc.setJobGroup(None, None)
+    # the probe, the collect of the edges, and the final action's jobs;
+    # each Spark round alone would add one or two
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 8
 
 
 # ------------------------------------------------ salt-sniff stats probe
