@@ -784,7 +784,9 @@ def _q_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_k_core(spark: SparkSession, sf_dir: str) -> DataFrame:
     """2-core of the customer/order/lineitem graph (iterative peeling —
     no SQL oracle; exactness pinned on known graphs in
-    tests/test_algorithms.py)."""
+    tests/test_algorithms.py). Up to sf0.1 the PLACED + LINE edges fit the
+    broadcast gate, so one collect and numpy peel it on the driver
+    (tests/test_driver_loops.py pins those rows to the Spark rounds')."""
     from cypher_for_apache_spark_spark.operators.algorithms import k_core
 
     g = _graph(spark, sf_dir)

@@ -10,6 +10,7 @@ volume). All shuffles key on long node ids; AQE handles skewed hubs.
 
 from __future__ import annotations
 
+import itertools
 from typing import List, Optional
 
 import numpy as np
@@ -175,28 +176,139 @@ def connected_components(
     )
 
 
+class _DriverEdges:
+    """An (src, dst) edge frame small enough to collect, on the driver:
+    one ``toArrow()`` action, then ``np.unique`` over both endpoint
+    columns and any ``extra_ids`` maps ids to dense indices. ``ids`` is
+    sorted, so index order is id order; ``src``, ``dst`` and ``extra`` are
+    index arrays and ``w`` the ``weight`` column, if named. ``frame``
+    returns numpy columns as a DataFrame with a declared schema through
+    ``local_frame``. Every driver-side solve goes through this, so the
+    collect, the id mapping and the Arrow round trip exist once."""
+
+    def __init__(self, edges: DataFrame, extra_ids=(), weight: Optional[str] = None):
+        t = edges.toArrow()
+        src = t.column("src").to_numpy()
+        self.ids, idx = np.unique(
+            np.concatenate(
+                [src, t.column("dst").to_numpy(), np.asarray(extra_ids, dtype=src.dtype)]
+            ),
+            return_inverse=True,
+        )
+        n = len(src)
+        self.src, self.dst, self.extra = idx[:n], idx[n : 2 * n], idx[2 * n :]
+        self.w = None if weight is None else t.column(weight).to_numpy()
+        self.spark = edges.sparkSession
+
+    def frame(self, schema, **columns) -> DataFrame:
+        return _local_frame(self.spark, pa.table(columns), schema)
+
+
+def _fits_driver(graph: PropertyGraph, rel_types) -> bool:
+    """Whether a loop over ``graph``'s relationships of ``rel_types`` is
+    solved on the driver: their measured row count is non-zero and within
+    the broadcast gate (``broadcastable``). ``element_rows`` counts each
+    table once per graph, so only a graph's first call runs count jobs.
+    ``LARGE_REGIME`` (gate 0) sends every loop to its Spark rounds."""
+    n = graph.element_rows(graph.matching_rel_tables(rel_types))
+    return 0 < n and _broadcastable(n)
+
+
+def _csr(n: int, key, *cols):
+    """``cols`` grouped by ``key`` (dense indices below ``n``):
+    ``(start, *cols)``, where the rows of index i are
+    ``start[i]:start[i + 1]``."""
+    order = np.argsort(key, kind="stable")
+    start = np.concatenate([[0], np.cumsum(np.bincount(key, minlength=n))])
+    return (start, *(c[order] for c in cols))
+
+
+def _rows_of(start, nodes):
+    """Positions of the CSR rows of ``nodes``, and the node of each."""
+    lo, cnt = start[nodes], start[nodes + 1] - start[nodes]
+    pos = np.repeat(lo - np.cumsum(cnt) + cnt, cnt) + np.arange(cnt.sum())
+    return pos, np.repeat(nodes, cnt)
+
+
+def _relax_on_driver(g: _DriverEdges, src, dst, w, rounds):
+    """``sssp``'s frontier loop in numpy, round for round, from the seeds
+    ``g.extra`` over a CSR of (src, dst, w) index arrays; ``rounds`` is the
+    iterable of rounds allowed. Each round relaxes the out-edges of the
+    frontier into one candidate minimum per node (``np.minimum.at``), and
+    a node joins the next frontier iff no distance was recorded for it or
+    its candidate is strictly below it, the Spark loop's anti-join. Work
+    per round is the frontier's out-edges. Returns ``(dist, reached)``
+    per index."""
+    n = len(g.ids)
+    start, dst, w = _csr(n, src, dst, w)
+    dist = np.full(n, np.inf)
+    reached = np.zeros(n, dtype=bool)
+    frontier = np.unique(g.extra)
+    dist[frontier], reached[frontier] = 0.0, True
+    for _ in rounds:
+        pos, owner = _rows_of(start, frontier)
+        tgt = dst[pos]
+        touched = np.unique(tgt)
+        before = dist[touched]
+        # the candidates are computed from the distances before the round
+        np.minimum.at(dist, tgt, dist[owner] + w[pos])
+        frontier = touched[~reached[touched] | (dist[touched] < before)]
+        if not len(frontier):
+            break
+        reached[frontier] = True
+    return dist, reached
+
+
+def _peel_on_driver(g: _DriverEdges, k: int, waves: int):
+    """``k_core``'s peeling in numpy, wave for wave, over the canonical
+    edges of ``g`` (``(min, max)`` index pairs, self-loops and duplicates
+    dropped). Degrees come from ``np.bincount``; a wave deletes every live
+    vertex below k, and only its surviving neighbours lose degree
+    (``np.subtract.at`` over the wave's CSR rows) and are the candidates
+    for the next wave, so work per wave is the wave's adjacency. At most
+    ``waves`` waves run. Returns ``(keep, degree)`` per index, where keep
+    marks the vertices alive with degree >= k."""
+    n = len(g.ids)
+    a, b = np.minimum(g.src, g.dst), np.maximum(g.src, g.dst)
+    a, b = np.divmod(np.unique((a * n + b)[a != b]), max(n, 1))
+    deg = np.bincount(a, minlength=n) + np.bincount(b, minlength=n)
+    start, nbr = _csr(n, np.concatenate([a, b]), np.concatenate([b, a]))
+    # a vertex no canonical edge touches has no degree row in the Spark
+    # loop, so it is never part of a wave
+    alive = deg > 0
+    cand = np.flatnonzero(alive)
+    for _ in range(waves):
+        wave = cand[alive[cand] & (deg[cand] < k)]
+        if not len(wave):
+            break
+        alive[wave] = False
+        hit = nbr[_rows_of(start, wave)[0]]
+        hit = hit[alive[hit]]
+        np.subtract.at(deg, hit, 1)
+        cand = np.unique(hit)
+    return alive & (deg >= k), deg
+
+
 def _components_on_driver(edges: DataFrame):
     """(id, comp) over a canonical (src, dst) edge frame small enough to
-    collect (one ``toArrow()`` action), solved in numpy, where comp is the
+    collect (``_DriverEdges``), solved in numpy, where comp is the
     minimum id of each component; returns ``(frame, rows)``.
 
-    Ids are mapped to dense indices by ``np.unique``, which sorts, so the
-    minimum index of a component is its minimum id. Each iteration hooks
-    roots: every live edge's larger root points at the smallest root it
-    touches (``np.minimum.at``), then pointer jumping runs to a fixpoint so
-    every label is a root again. Labels only ever point down, so there are
-    no cycles, each tree's root is its minimum, and every iteration removes
+    The dense indices sort like the ids, so the minimum index of a
+    component is its minimum id. Each iteration hooks roots: every live
+    edge's larger root points at the smallest root it touches
+    (``np.minimum.at``), then pointer jumping runs to a fixpoint so every
+    label is a root again. Labels only ever point down, so there are no
+    cycles, each tree's root is its minimum, and every iteration removes
     at least one tree per component that still has a live edge. An edge
     whose endpoints share a root stays inside one tree, so it is dropped
     from later iterations. On 1M random edges over 1M ids (numpy 1.26, one
     core) the hooking took 5 iterations and 0.19 s of CPU after a 0.25 s
     ``np.unique``; min-label propagation with a pointer jump per iteration
     took 20 iterations and 0.51 s."""
-    t = edges.toArrow()
-    src = t.column("src").to_numpy()
-    ids, idx = np.unique(np.concatenate([src, t.column("dst").to_numpy()]), return_inverse=True)
-    a, b = idx[: len(src)], idx[len(src):]
-    lbl = np.arange(len(ids))
+    g = _DriverEdges(edges)
+    a, b = g.src, g.dst
+    lbl = np.arange(len(g.ids))
     while len(a):
         la, lb = lbl[a], lbl[b]
         live = la != lb
@@ -209,8 +321,7 @@ def _components_on_driver(edges: DataFrame):
             lbl = jumped
     id_type = edges.schema["src"].dataType
     schema = T.StructType([T.StructField("id", id_type), T.StructField("comp", id_type)])
-    comp = pa.table({"id": ids, "comp": ids[lbl]})
-    return _local_frame(edges.sparkSession, comp, schema), len(ids)
+    return g.frame(schema, id=g.ids, comp=g.ids[lbl]), len(g.ids)
 
 
 def connected_components_edges(
@@ -277,15 +388,10 @@ def connected_components_edges(
     )
     # the first round map (a Spark round's min-adopt groupBy over both
     # orientations, or the driver finish's) carries EVERY incident vertex,
-    # so round_maps[0] doubles as the incident set; the separate
-    # union+dedup pass (two scans + an exchange) runs only when no round
-    # ran at all
-    e0 = cur_e
-
-    def _incident() -> DataFrame:
-        return _mirror(
-            e0, [F.col("src")], [F.col("dst")], ["id"]
-        ).dropDuplicates()
+    # so it starts the composition; the dedup of the canonical edges'
+    # endpoints (an exchange) runs only when no round ran at all
+    touched = _mirror(cur_e, [F.col("src")], [F.col("dst")], ["id"])
+    n_touched = 2 * n_e
     # per-round contraction maps, composed once at the end — a per-round
     # compose would cost a |V|-sized join + checkpoint every round, while
     # the maps shrink geometrically and the last (the driver finish's)
@@ -346,10 +452,8 @@ def connected_components_edges(
     # round 1's map over the incident vertices IS the first composition
     if round_maps:
         total = round_maps[0].select("id", F.col("comp").alias("component"))
-        member_ids = round_maps[0].select("id")
     else:
-        total = _incident().select("id", F.col("id").alias("component"))
-        member_ids = total.select("id")
+        total = touched.dropDuplicates().select("id", F.col("id").alias("component"))
     for i, lbl in enumerate(round_maps):
         if i == 0:
             continue
@@ -360,9 +464,13 @@ def connected_components_edges(
             "left_outer",
         ).select("id", F.coalesce("_lcomp", "component").alias("component"))
     if vertices is not None:
-        isolated = vertices.join(member_ids, "id", "left_anti").select(
-            "id", F.col("id").alias("component")
-        )
+        # isolated vertices are those no canonical edge touches, found
+        # against the edge checkpoint rather than the first map's ids, so
+        # the map is read once per action (a driver finish's map decodes
+        # its Arrow batches on every read)
+        isolated = vertices.join(
+            _maybe_broadcast(touched, n_touched), "id", "left_anti"
+        ).select("id", F.col("id").alias("component"))
         total = total.unionByName(isolated)
     return total
 
@@ -375,19 +483,39 @@ def bfs_distances(
     undirected: bool = False,
 ) -> DataFrame:
     """(id, dist) = minimum hop count from any source, unreachable nodes
-    omitted. Frontier (delta) iteration: round d joins edges against ONLY
-    the nodes first reached in round d-1 — never the full visited set —
-    so per-round work is proportional to the frontier, which is the only
-    BFS discipline that survives a 100 TB graph (re-expanding settled
-    vertices each round is the classic scale killer). The frontier is
-    localCheckpoint'ed per round (it is the small frame); the visited set
-    is a union of checkpointed frontiers, so its plan stays flat.
+    omitted; sources that are not nodes come back at 0.
+
+    When the graph's measured edge count fits the broadcast gate
+    (``_fits_driver``), one collect (``_DriverEdges``) and ``sssp``'s numpy
+    kernel with unit weights solve it on the driver (``undirected``
+    mirrors the index arrays). A unit-weight round improves exactly the
+    nodes first reached in it, so the kernel's rounds are the Spark
+    loop's, and ``max_hops`` caps them the same way.
+
+    Above the gate, frontier (delta) iteration on Spark: round d joins
+    edges against ONLY the nodes first reached in round d-1 — never the
+    full visited set — so per-round work is proportional to the frontier,
+    which is the only BFS discipline that survives a 100 TB graph
+    (re-expanding settled vertices each round is the classic scale
+    killer). The frontier is localCheckpoint'ed per round (it is the small
+    frame); the visited set is a union of checkpointed frontiers, so its
+    plan stays flat.
     """
+    seeds = sorted({int(s) for s in source_ids})
+    if _fits_driver(graph, rel_types):
+        g = _DriverEdges(_edges(graph, rel_types), extra_ids=seeds)
+        src, dst = g.src, g.dst
+        if undirected:
+            src, dst = np.concatenate([src, dst]), np.concatenate([dst, src])
+        rounds = itertools.count() if max_hops is None else range(max_hops)
+        dist, reached = _relax_on_driver(g, src, dst, np.ones(len(src)), rounds)
+        return g.frame(
+            "id long, dist long", id=g.ids[reached], dist=dist[reached].astype(np.int64)
+        )
     spark = graph.spark if hasattr(graph, "spark") else _vertices(graph).sparkSession
     e, _, drop_e = _static_loop_frame(
         _edges(graph, rel_types, undirected=undirected), "src"
     )
-    seeds = sorted({int(s) for s in source_ids})
     # a JVM-side frame: the seeds stay in ``visited`` (never checkpointed),
     # so every round and the caller's actions re-read them
     frontier = _local_frame(spark, [(s,) for s in seeds], "id long")
@@ -481,14 +609,23 @@ def k_core(
     """(id, degree) for vertices of the k-core: the maximal subgraph where
     every vertex has undirected degree >= k.
 
-    Iterative peeling: each round computes degrees on the REMAINING edge
-    set and deletes vertices below k together with their incident edges.
-    Work per round is proportional to remaining edges, which only
-    shrinks; every per-round frame is lineage-truncated with the scoped
-    checkpoint (the same discipline as connected_components — the classic
-    failure mode of iterative DataFrames is exponential plan growth, not
-    data volume). Converges when a round deletes nothing.
+    Synchronous peeling over the canonical edge set (``(min, max)`` pairs,
+    self-loops and duplicates dropped): each wave deletes every vertex
+    whose degree is below k, and only the surviving neighbours of the
+    wave lose degree. It converges when a wave deletes nothing;
+    ``max_iterations`` caps the waves, and a capped result keeps the
+    vertices that are alive with degree >= k after the last wave.
 
+    When the graph's measured edge count fits the broadcast gate
+    (``_fits_driver``), one collect (``_DriverEdges``) and a numpy kernel
+    (``_peel_on_driver``) replay the waves on the driver, so a call runs
+    one Spark job instead of one or more per wave.
+
+    Above the gate, the waves are Spark rounds. Work per round is
+    proportional to remaining edges, which only shrinks; every per-round
+    frame is lineage-truncated with the scoped checkpoint (the same
+    discipline as connected_components — the classic failure mode of
+    iterative DataFrames is exponential plan growth, not data volume).
     The adjacency is lazy. Round 1's peel test needs only the initial
     degrees, which one action computes from the canonical edges (a lazy
     checkpoint that this action fills). The cached, re-partitioned and
@@ -499,6 +636,10 @@ def k_core(
     if k < 1:
         raise ValueError("k must be >= 1")
     e0 = _edges(graph, rel_types)
+    if _fits_driver(graph, rel_types):
+        g = _DriverEdges(e0)
+        keep, deg = _peel_on_driver(g, k, max_iterations)
+        return g.frame("id long, degree long", id=g.ids[keep], degree=deg[keep])
     canon = (
         e0.select(
             F.least("src", "dst").alias("src"), F.greatest("src", "dst").alias("dst")
@@ -608,23 +749,32 @@ def sssp(
     max_iterations: int = 50,
 ) -> DataFrame:
     """Weighted single-/multi-source shortest-path distances over directed
-    edges with non-negative weights: (id, dist) for every reachable node.
+    edges with non-negative weights: (id, dist) for every reachable node;
+    sources that are not nodes come back at 0.0. With ``weight_prop``
+    unset (or null on an edge) the weight is 1.0.
 
-    Bellman-Ford frontier iteration — the same delta discipline as
-    ``bfs_distances`` but carrying a double distance: each round relaxes
-    only edges leaving nodes whose distance improved last round and stops
-    when no node improves. Work per round is O(frontier-out-edges). With
-    ``weight_prop`` unset (or null on an edge) the weight is 1.0.
+    Bellman-Ford frontier iteration: each round relaxes only edges
+    leaving nodes whose distance improved last round, a node improves iff
+    its candidate is strictly below every distance recorded for it, and
+    the loop stops when no node improves. ``max_iterations`` caps the
+    rounds; a capped result holds the distances after the last round.
 
-    ``settled`` is the union of the seeds and every round's checkpointed
-    improvements: a flat plan of already-computed blocks whose row count
-    is the sum of the rounds' probes. A candidate distance survives iff no
-    recorded distance for its node is <= it (a gated ``left_anti`` on
-    ``id = _sid AND _sd <= _nd``), which is exactly "it improves on the
-    node's minimum so far" without keeping that minimum per round. So a
-    round is ONE Spark action (its checkpoint and count), and the min per
-    id is taken once, after the loop, into one checkpoint that the caller's
-    actions share.
+    When the graph's measured edge count fits the broadcast gate
+    (``_fits_driver``), one collect (``_DriverEdges``) and a numpy kernel
+    over a CSR replay the rounds on the driver (``_relax_on_driver``), so
+    a call runs one Spark job instead of one per round.
+
+    Above the gate, the rounds are Spark jobs, with the same delta
+    discipline as ``bfs_distances`` but carrying a double distance. Work
+    per round is O(frontier-out-edges). ``settled`` is the union of the
+    seeds and every round's checkpointed improvements: a flat plan of
+    already-computed blocks whose row count is the sum of the rounds'
+    probes. A candidate distance survives iff no recorded distance for its
+    node is <= it (a gated ``left_anti`` on ``id = _sid AND _sd <= _nd``),
+    which is exactly "it improves on the node's minimum so far" without
+    keeping that minimum per round. So a round is ONE Spark action (its
+    checkpoint and count), and the min per id is taken once, after the
+    loop, into one checkpoint that the caller's actions share.
     """
     e = graph.scan_rels(rel_types, out_id="_eid", out_src="src", out_dst="dst")
     if e is None:
@@ -639,8 +789,13 @@ def sssp(
         w = F.coalesce(F.col(weight_prop).cast("double"), F.lit(1.0))
     else:
         w = F.lit(1.0)
-    edges, _, drop_edges = _static_loop_frame(e.select("src", "dst", w.alias("w")), "src")
+    e = e.select("src", "dst", w.alias("w"))
     seeds = sorted({int(s) for s in sources})
+    if _fits_driver(graph, rel_types):
+        g = _DriverEdges(e, extra_ids=seeds, weight="w")
+        dist, reached = _relax_on_driver(g, g.src, g.dst, g.w, range(max_iterations))
+        return g.frame("id long, dist double", id=g.ids[reached], dist=dist[reached])
+    edges, _, drop_edges = _static_loop_frame(e, "src")
     frontier = _local_frame(
         edges.sparkSession, [(s, 0.0) for s in seeds], "id long, d double"
     )

@@ -6,9 +6,12 @@
 - ``connected_components_edges`` finishes on the driver once the
   contracted edges fit the broadcast gate, with the rows of the all-Spark
   rounds forced by ``LARGE_REGIME``.
-- ``sssp`` runs one checkpoint action per round and takes the min per id
-  once, after the loop; ``bfs_distances`` seeds the same way.
-- ``k_core`` builds its cached adjacency only when a round peels.
+- ``connected_components_edges`` reads its first map once per action,
+  isolated vertices included.
+- In the Spark loop (forced by ``LARGE_REGIME``; ``test_driver_loops.py``
+  covers the driver path), ``sssp`` runs one checkpoint action per round
+  and takes the min per id once, after the loop, and ``k_core`` builds
+  its cached adjacency only when a round peels.
 - ``Planner._auto_salt_factor`` falls back only on a JVM-side failure.
 """
 
@@ -194,7 +197,8 @@ def _spy(monkeypatch, name, calls, tag):
     monkeypatch.setattr(alg, name, spy)
 
 
-def test_sssp_one_action_per_round(graph, monkeypatch):
+def test_sssp_one_action_per_round(graph, monkeypatch, forced):
+    # the Spark loop; at this size the default regime solves on the driver
     calls = []
     _spy(monkeypatch, "_checkpoint_count", calls, "round")
     _spy(monkeypatch, "_checkpoint", calls, "materialize")
@@ -222,7 +226,8 @@ def _k_core_ref(k):
 
 
 @pytest.mark.parametrize("k, peels", [(1, False), (2, True)])
-def test_k_core_builds_adjacency_only_when_it_peels(graph, monkeypatch, k, peels):
+def test_k_core_builds_adjacency_only_when_it_peels(graph, monkeypatch, forced, k, peels):
+    # the Spark loop; at this size the default regime solves on the driver
     calls = []
     _spy(monkeypatch, "_static_loop_frame", calls, "adjacency")
     assert _rows(alg.k_core(graph, k=k)) == _k_core_ref(k)
@@ -304,6 +309,51 @@ def test_cc_spark_rounds_then_driver_finish(spark, monkeypatch, request):
     assert mixed == _cc_ref(edges, _ISOLATED)
     request.getfixturevalue("forced")
     assert _rows(_cc(spark, edges)) == mixed
+
+
+def _cc_union_ref(edges, vertices):
+    """Composed rows of the ids a non-loop edge touches, plus one row per
+    ``vertices`` row whose id has none (repeats kept)."""
+    linked = [(a, b) for a, b in edges if a != b]
+    incident = {v for e in linked for v in e}
+    return sorted(_cc_ref(linked, ()) + [(v, v) for v in vertices if v not in incident])
+
+
+@pytest.mark.parametrize("regime", ["default", "forced"])
+def test_cc_isolated_vertices_repeats_and_missing_endpoints(spark, request, regime):
+    if regime == "forced":
+        request.getfixturevalue("forced")
+    edges = [(1, 2), (2, 3), (10, 11), (20, 20)]
+    # 7 and 9 repeat; 1 is incident and repeats; 3 and 11 are edge
+    # endpoints missing from the vertex frame; 20 has only a self-loop and
+    # is not a vertex, so it has no row
+    vertices = [7, 7, 9, 1, 1, 2, 10, 9, 9]
+    got = _rows(
+        alg.connected_components_edges(
+            spark.createDataFrame(edges, "src long, dst long"),
+            vertices=spark.createDataFrame([(v,) for v in vertices], "id long"),
+        )
+    )
+    assert got == _cc_union_ref(edges, vertices)
+    assert got.count((7, 7)) == 2 and got.count((9, 9)) == 3 and got.count((1, 1)) == 1
+
+
+def test_cc_reads_the_driver_map_once(spark, monkeypatch):
+    maps = []
+    real = alg._components_on_driver
+
+    def keep(edges):
+        frame, rows = real(edges)
+        maps.append(frame)
+        return frame, rows
+
+    monkeypatch.setattr(alg, "_components_on_driver", keep)
+    out = _cc(spark, _CC_CASES["random_strided"])
+    # the map is a leaf (LocalRelation or LogicalRDD) whose output
+    # attributes name it
+    leaf = maps[0]._jdf.queryExecution().analyzed().toString().splitlines()[0]
+    assert leaf.startswith(("LocalRelation", "LogicalRDD")) and "#" in leaf
+    assert out._jdf.queryExecution().analyzed().toString().count(leaf) == 1
 
 
 _groups = itertools.count()
