@@ -53,23 +53,33 @@ def _mirror(df: DataFrame, fwd, bwd, names) -> DataFrame:
     )
 
 
-def _edges(graph: PropertyGraph, rel_types=(), undirected: bool = False) -> DataFrame:
+def _edges(
+    graph: PropertyGraph,
+    rel_types=(),
+    undirected: bool = False,
+    weight: Optional[str] = None,
+) -> DataFrame:
+    """(src, dst) rows of ``graph``'s relationships of ``rel_types``, both
+    orientations of each when ``undirected``. When ``weight`` names a
+    relationship property, a double ``w`` column rides along (null: 1.0)."""
     e = graph.scan_rels(rel_types, out_id="_eid", out_src="src", out_dst="dst")
     if e is None:
         # no relationship tables (or none of the requested types): the
         # empty edge set, not an error — same semantics as a Cypher scan
         # of a nonexistent type (degrees all zero, singleton components)
         spark = _vertices(graph).sparkSession
-        return spark.range(0).select(
-            F.col("id").alias("src"), F.col("id").alias("dst")
-        )
-    e = e.select("src", "dst")
+        e = spark.range(0).select(F.col("id").alias("src"), F.col("id").alias("dst"))
+    cols = [F.col("src"), F.col("dst")]
+    if weight is not None and weight in e.columns:
+        cols.append(F.coalesce(F.col(weight).cast("double"), F.lit(1.0)).alias("w"))
+    e = e.select(cols)
     if undirected:
+        rest = [F.col(c) for c in e.columns[2:]]
         e = _mirror(
             e,
-            [F.col("src"), F.col("dst")],
-            [F.col("dst"), F.col("src")],
-            ["src", "dst"],
+            [F.col("src"), F.col("dst"), *rest],
+            [F.col("dst"), F.col("src"), *rest],
+            e.columns,
         )
     return e
 
@@ -79,51 +89,34 @@ def _vertices(graph: PropertyGraph) -> DataFrame:
     return v.select("id")
 
 
-def pagerank(
-    graph: PropertyGraph,
-    iterations: int = 10,
-    damping: float = 0.85,
-    rel_types=(),
-) -> DataFrame:
-    """(id, rank) after ``iterations`` synchronous PageRank steps.
-
-    Dangling nodes' mass is redistributed uniformly each step, so ranks sum
-    to |V| throughout (matching the classic formulation).
-    """
-    e = _edges(graph, rel_types)
-    out_deg = e.groupBy("src").agg(F.count("*").alias("_deg"))
-    # statics joined every iteration: links on src, v/sinks on id — cached
-    # hash-partitioned at scale-adaptive width so each round's joins only
-    # exchange the (small) changing rank frame (see _static_loop_frame)
-    links, _, drop_links = _static_loop_frame(e.join(out_deg, "src"), "src")
-    # the sink (dangling) flag rides as a boolean column of the static
-    # vertex frame — and through it of every round's rank frame — so the
-    # per-iteration dangling-mass probe is a narrow filter+aggregate over
-    # the round's checkpoint instead of a semi-join against a separately
-    # persisted sink frame (one fewer join and broadcast build per round)
-    v, n, drop_v = _static_loop_frame(
-        _vertices(graph)
-        .join(
-            out_deg.select(F.col("src").alias("id"), F.lit(True).alias("_has")),
-            "id",
-            "left_outer",
-        )
-        .select("id", F.col("_has").isNull().alias("_sink")),
-        "id",
-    )
-
+def _power_iteration(links, v, n, s, div, iterations, damping) -> DataFrame:
+    """The rank loop of ``pagerank`` and ``personalized_pagerank``: (id,
+    rank) after ``iterations`` synchronous steps. ``links`` (src, dst,
+    _deg) keyed on src and ``v`` (id, _sink and whatever the teleport
+    Column ``s`` reads) keyed on id are ``_static_loop_frame``s, cached
+    hash-partitioned so each round's joins exchange only the changing
+    rank frame; ``n`` is the vertex count. The sink (dangling) flag rides
+    as a column of ``v`` and so of every round's rank frame: the round's
+    dangling-mass probe is a filter+aggregate over its checkpoint, not a
+    semi-join against a separately persisted sink frame. r_0 = s and
+    r' = (1-d)*s + d*(received + (d_sum / div)*s), where d_sum is the rank
+    the dangling (sink) nodes hold: ``div`` = n with ``s`` = 1 spreads it
+    uniformly, ``div`` = 1 with ``s`` summing to 1 returns it to the
+    seeds. ``d_sum / div`` stays a division, not a reciprocal product, and
+    ``s`` = 1 multiplies exactly, so pagerank's ranks are bit for bit
+    those of r' = (1-d) + d*(received + d_sum / n)."""
     # every per-round frame is bounded by |V| (ranks/contribs: one row per
     # vertex) — when that MEASURED count is small the round's joins probe
     # the cached statics in place instead of exchanging the changing side
     # every iteration (see maybe_broadcast)
-    ranks = v.select("id", F.lit(1.0).alias("rank"), "_sink")
+    ranks = v.select("id", s.alias("rank"), "_sink")
     # the dangling (sink) mass rides as a DRIVER SCALAR: each round's
     # checkpoint action also returns the sink-rank sum (materialize_agg —
     # one job for both), and the next round's rank expression embeds it
     # as a literal. The former shape paid a separate 1-row aggregation
     # job + broadcast build + BroadcastNestedLoopJoin per iteration for
     # the same double. One cheap upfront aggregate over the cached static
-    # v seeds the first round (every initial rank is 1.0).
+    # v seeds the first round.
     d_sum = (
         ranks.filter(F.col("_sink")).agg(F.sum("rank")).collect()[0][0] or 0.0
     )
@@ -138,11 +131,11 @@ def pagerank(
         ranks = v.join(_maybe_broadcast(contribs, n), "id", "left_outer").select(
             "id",
             (
-                F.lit(1 - damping)
+                F.lit(1 - damping) * s
                 + F.lit(damping)
                 * (
                     F.coalesce(F.col("received"), F.lit(0.0))
-                    + F.lit(d_sum / float(n))
+                    + F.lit(d_sum / div) * s
                 )
             ).alias("rank"),
             "_sink",
@@ -153,9 +146,43 @@ def pagerank(
             ranks, F.sum(F.when(F.col("_sink"), F.col("rank")))
         )
         d_sum = row[0] or 0.0
+    return ranks.select("id", "rank")
+
+
+def pagerank(
+    graph: PropertyGraph,
+    iterations: int = 10,
+    damping: float = 0.85,
+    rel_types=(),
+) -> DataFrame:
+    """(id, rank) after ``iterations`` synchronous PageRank steps.
+
+    Dangling nodes' mass is redistributed uniformly each step, so ranks sum
+    to |V| throughout (matching the classic formulation). The steps are
+    ``personalized_pagerank``'s power iteration (``_power_iteration``)
+    with a teleport of 1 on every vertex; out-degrees count parallel
+    edges. A graph with no nodes has an empty result.
+    """
+    e = _edges(graph, rel_types)
+    out_deg = e.groupBy("src").agg(F.count("*").alias("_deg"))
+    links, _, drop_links = _static_loop_frame(e.join(out_deg, "src"), "src")
+    v, n, drop_v = _static_loop_frame(
+        _vertices(graph)
+        .join(
+            out_deg.select(F.col("src").alias("id"), F.lit(True).alias("_has")),
+            "id",
+            "left_outer",
+        )
+        .select("id", F.col("_has").isNull().alias("_sink")),
+        "id",
+    )
+    # no vertex, no dangling mass: any divisor keeps the empty result
+    ranks = _power_iteration(
+        links, v, n, F.lit(1.0), float(max(n, 1)), iterations, damping
+    )
     drop_links()
     drop_v()
-    return ranks.select("id", "rank")
+    return ranks
 
 
 def connected_components(
@@ -181,12 +208,12 @@ class _DriverEdges:
     one ``toArrow()`` action, then ``np.unique`` over both endpoint
     columns and any ``extra_ids`` maps ids to dense indices. ``ids`` is
     sorted, so index order is id order; ``src``, ``dst`` and ``extra`` are
-    index arrays and ``w`` the ``weight`` column, if named. ``frame``
+    index arrays and ``w`` the ``w`` column, if the frame has one. ``frame``
     returns numpy columns as a DataFrame with a declared schema through
     ``local_frame``. Every driver-side solve goes through this, so the
     collect, the id mapping and the Arrow round trip exist once."""
 
-    def __init__(self, edges: DataFrame, extra_ids=(), weight: Optional[str] = None):
+    def __init__(self, edges: DataFrame, extra_ids=()):
         t = edges.toArrow()
         src = t.column("src").to_numpy()
         self.ids, idx = np.unique(
@@ -197,7 +224,7 @@ class _DriverEdges:
         )
         n = len(src)
         self.src, self.dst, self.extra = idx[:n], idx[n : 2 * n], idx[2 * n :]
-        self.w = None if weight is None else t.column(weight).to_numpy()
+        self.w = t.column("w").to_numpy() if "w" in t.column_names else None
         self.spark = edges.sparkSession
 
     def frame(self, schema, **columns) -> DataFrame:
@@ -230,17 +257,17 @@ def _rows_of(start, nodes):
     return pos, np.repeat(nodes, cnt)
 
 
-def _relax_on_driver(g: _DriverEdges, src, dst, w, rounds):
+def _relax_on_driver(g: _DriverEdges, w, rounds):
     """``sssp``'s frontier loop in numpy, round for round, from the seeds
-    ``g.extra`` over a CSR of (src, dst, w) index arrays; ``rounds`` is the
-    iterable of rounds allowed. Each round relaxes the out-edges of the
+    ``g.extra`` over a CSR of ``g``'s edges weighted ``w``; ``rounds`` is
+    the iterable of rounds allowed. Each round relaxes the out-edges of the
     frontier into one candidate minimum per node (``np.minimum.at``), and
     a node joins the next frontier iff no distance was recorded for it or
     its candidate is strictly below it, the Spark loop's anti-join. Work
     per round is the frontier's out-edges. Returns ``(dist, reached)``
     per index."""
     n = len(g.ids)
-    start, dst, w = _csr(n, src, dst, w)
+    start, dst, w = _csr(n, g.src, g.dst, w)
     dist = np.full(n, np.inf)
     reached = np.zeros(n, dtype=bool)
     frontier = np.unique(g.extra)
@@ -466,8 +493,9 @@ def connected_components_edges(
     if vertices is not None:
         # isolated vertices are those no canonical edge touches, found
         # against the edge checkpoint rather than the first map's ids, so
-        # the map is read once per action (a driver finish's map decodes
-        # its Arrow batches on every read)
+        # the map is read once per action (a driver finish's map is a
+        # local_frame: a LocalRelation scanned, or above Arrow's local
+        # relation threshold a LogicalRDD of batches decoded, per read)
         isolated = vertices.join(
             _maybe_broadcast(touched, n_touched), "id", "left_anti"
         ).select("id", F.col("id").alias("component"))
@@ -485,70 +513,19 @@ def bfs_distances(
     """(id, dist) = minimum hop count from any source, unreachable nodes
     omitted; sources that are not nodes come back at 0.
 
-    When the graph's measured edge count fits the broadcast gate
-    (``_fits_driver``), one collect (``_DriverEdges``) and ``sssp``'s numpy
-    kernel with unit weights solve it on the driver (``undirected``
-    mirrors the index arrays). A unit-weight round improves exactly the
-    nodes first reached in it, so the kernel's rounds are the Spark
-    loop's, and ``max_hops`` caps them the same way.
-
-    Above the gate, frontier (delta) iteration on Spark: round d joins
-    edges against ONLY the nodes first reached in round d-1 — never the
-    full visited set — so per-round work is proportional to the frontier,
-    which is the only BFS discipline that survives a 100 TB graph
-    (re-expanding settled vertices each round is the classic scale
-    killer). The frontier is localCheckpoint'ed per round (it is the small
-    frame); the visited set is a union of checkpointed frontiers, so its
-    plan stays flat.
+    ``sssp``'s relaxation (``_relax``) with every edge weighing 1, over
+    both orientations of each edge when ``undirected``, for at most
+    ``max_hops`` rounds (``None``: until the frontier drains). With unit
+    weights a node improves exactly in the round that first reaches it,
+    so each round is BFS's frontier expansion: on the driver when the
+    edges fit the broadcast gate, else one Spark action per round whose
+    work is proportional to the frontier, never the visited set.
     """
-    seeds = sorted({int(s) for s in source_ids})
-    if _fits_driver(graph, rel_types):
-        g = _DriverEdges(_edges(graph, rel_types), extra_ids=seeds)
-        src, dst = g.src, g.dst
-        if undirected:
-            src, dst = np.concatenate([src, dst]), np.concatenate([dst, src])
-        rounds = itertools.count() if max_hops is None else range(max_hops)
-        dist, reached = _relax_on_driver(g, src, dst, np.ones(len(src)), rounds)
-        return g.frame(
-            "id long, dist long", id=g.ids[reached], dist=dist[reached].astype(np.int64)
-        )
-    spark = graph.spark if hasattr(graph, "spark") else _vertices(graph).sparkSession
-    e, _, drop_e = _static_loop_frame(
-        _edges(graph, rel_types, undirected=undirected), "src"
+    rounds = itertools.count() if max_hops is None else range(max_hops)
+    dist = _relax(
+        graph, _edges(graph, rel_types, undirected=undirected), source_ids, rel_types, rounds
     )
-    # a JVM-side frame: the seeds stay in ``visited`` (never checkpointed),
-    # so every round and the caller's actions re-read them
-    frontier = _local_frame(spark, [(s,) for s in seeds], "id long")
-    n_frontier = n_visited = len(seeds)
-    visited = frontier.select("id", F.lit(0).cast("long").alias("dist"))
-    dist = 0
-    while max_hops is None or dist < max_hops:
-        dist += 1
-        # the visited side of the anti-join is a union of checkpointed
-        # frontiers whose total row count is already known (the sum of the
-        # termination probes) — broadcast-gate it so the settled set is
-        # probed in place instead of exchanged+sorted every round
-        nxt = (
-            e.join(
-                _maybe_broadcast(frontier.withColumnRenamed("id", "src"), n_frontier),
-                "src",
-            )
-            .select(F.col("dst").alias("id"))
-            .dropDuplicates()
-            .join(_maybe_broadcast(visited.select("id"), n_visited), "id", "left_anti")
-        )
-        # checkpoint + termination probe (doubles as next round's
-        # broadcast gate) in one job
-        nxt, n_frontier = _checkpoint_count(nxt)
-        if n_frontier == 0:
-            break
-        frontier = nxt
-        n_visited += n_frontier
-        visited = visited.unionByName(
-            nxt.select("id", F.lit(dist).cast("long").alias("dist"))
-        )
-    drop_e()
-    return visited
+    return dist.select("id", F.col("dist").cast("long").alias("dist"))
 
 
 def triangle_count(graph: PropertyGraph, rel_types=()) -> DataFrame:
@@ -753,59 +730,63 @@ def sssp(
     sources that are not nodes come back at 0.0. With ``weight_prop``
     unset (or null on an edge) the weight is 1.0.
 
-    Bellman-Ford frontier iteration: each round relaxes only edges
-    leaving nodes whose distance improved last round, a node improves iff
-    its candidate is strictly below every distance recorded for it, and
-    the loop stops when no node improves. ``max_iterations`` caps the
-    rounds; a capped result holds the distances after the last round.
+    Bellman-Ford frontier iteration (``_relax``, which ``bfs_distances``
+    runs with unit weights): each round relaxes only edges leaving nodes
+    whose distance improved last round, a node improves iff its candidate
+    is strictly below every distance recorded for it, and the loop stops
+    when no node improves. ``max_iterations`` caps the rounds; a capped
+    result holds the distances after the last round.
+    """
+    return _relax(
+        graph,
+        _edges(graph, rel_types, weight=weight_prop),
+        sources,
+        rel_types,
+        range(max_iterations),
+    )
+
+
+def _relax(graph: PropertyGraph, e: DataFrame, sources, rel_types, rounds) -> DataFrame:
+    """(id long, dist double) of ``sssp``'s frontier loop over the edge
+    frame ``e`` of ``graph``'s ``rel_types`` relationships — (src, dst)
+    and, if present, a ``w`` weight column (else every edge weighs 1.0) —
+    from the ``sources`` ids, for at most the rounds of the iterable
+    ``rounds``. ``sssp`` and ``bfs_distances`` both run it.
 
     When the graph's measured edge count fits the broadcast gate
     (``_fits_driver``), one collect (``_DriverEdges``) and a numpy kernel
     over a CSR replay the rounds on the driver (``_relax_on_driver``), so
     a call runs one Spark job instead of one per round.
 
-    Above the gate, the rounds are Spark jobs, with the same delta
-    discipline as ``bfs_distances`` but carrying a double distance. Work
-    per round is O(frontier-out-edges). ``settled`` is the union of the
-    seeds and every round's checkpointed improvements: a flat plan of
-    already-computed blocks whose row count is the sum of the rounds'
-    probes. A candidate distance survives iff no recorded distance for its
-    node is <= it (a gated ``left_anti`` on ``id = _sid AND _sd <= _nd``),
-    which is exactly "it improves on the node's minimum so far" without
-    keeping that minimum per round. So a round is ONE Spark action (its
-    checkpoint and count), and the min per id is taken once, after the
-    loop, into one checkpoint that the caller's actions share.
+    Above the gate, the rounds are Spark jobs. Work per round is
+    O(frontier-out-edges). ``settled`` is the union of the seeds and every
+    round's checkpointed improvements: a flat plan of already-computed
+    blocks whose row count is the sum of the rounds' probes. A candidate
+    distance survives iff no recorded distance for its node is <= it (a
+    gated ``left_anti`` on ``id = _sid AND _sd <= _nd``), which is exactly
+    "it improves on the node's minimum so far" without keeping that
+    minimum per round. So a round is ONE Spark action (its checkpoint and
+    count), and the min per id is taken once, after the loop, into one
+    checkpoint that the caller's actions share.
     """
-    e = graph.scan_rels(rel_types, out_id="_eid", out_src="src", out_dst="dst")
-    if e is None:
-        # empty edge set (see _edges): sources are reachable at 0.0,
-        # nothing else is
-        e = (
-            _vertices(graph)
-            .sparkSession.range(0)
-            .select(F.col("id").alias("src"), F.col("id").alias("dst"))
-        )
-    if weight_prop is not None and weight_prop in e.columns:
-        w = F.coalesce(F.col(weight_prop).cast("double"), F.lit(1.0))
-    else:
-        w = F.lit(1.0)
-    e = e.select("src", "dst", w.alias("w"))
     seeds = sorted({int(s) for s in sources})
     if _fits_driver(graph, rel_types):
-        g = _DriverEdges(e, extra_ids=seeds, weight="w")
-        dist, reached = _relax_on_driver(g, g.src, g.dst, g.w, range(max_iterations))
+        g = _DriverEdges(e, extra_ids=seeds)
+        w = np.ones(len(g.src)) if g.w is None else g.w
+        dist, reached = _relax_on_driver(g, w, rounds)
         return g.frame("id long, dist double", id=g.ids[reached], dist=dist[reached])
+    w = F.col("w") if "w" in e.columns else F.lit(1.0)
     edges, _, drop_edges = _static_loop_frame(e, "src")
     frontier = _local_frame(
         edges.sparkSession, [(s, 0.0) for s in seeds], "id long, d double"
     )
     settled = frontier
     n_frontier = n_settled = len(seeds)
-    for _ in range(max_iterations):
+    for _ in rounds:
         cand = (
             _maybe_broadcast(frontier, n_frontier)
             .join(edges, frontier["id"] == edges["src"])
-            .select(F.col("dst").alias("id"), (F.col("d") + F.col("w")).alias("_nd"))
+            .select(F.col("dst").alias("id"), (F.col("d") + w).alias("_nd"))
             .groupBy("id")
             .agg(F.min("_nd").alias("_nd"))
         )
@@ -1576,11 +1557,13 @@ def personalized_pagerank(
     r_0 = s, r_{t+1} = (1-d)*s + d*(W^T r_t + dangling_mass * s) with
     s = 1/|seeds| on seeds and 0 elsewhere, so total mass stays 1.
 
-    Same scale shape as ``pagerank``: the rank frame is (id, rank, s);
-    one shuffle per iteration on the edge src; the dangling term is a
-    broadcast scalar; every per-round frame is lineage-truncated. The
-    seed vector rides as a column of the vertex frame — no driver-side
-    seed set.
+    The steps are ``pagerank``'s power iteration (``_power_iteration``)
+    with the teleport column s and the dangling mass returned through s
+    undivided; edges are deduplicated before the out-degrees are counted.
+    One shuffle per iteration on the edge src; the dangling term is a
+    driver scalar; every per-round frame is lineage-truncated. The seed
+    vector rides as a column of the vertex frame — no driver-side seed
+    set.
     """
     e = _checkpoint(edges.select("src", "dst").dropDuplicates())
     if vertices is None:
@@ -1590,14 +1573,7 @@ def personalized_pagerank(
     sd = seeds.select(F.col(seeds.columns[0]).alias("id")).dropDuplicates()
     k = sd.agg(F.count(F.lit(1)).alias("_k"))
     deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("_deg"))
-    # statics joined every iteration — cached hash-partitioned at
-    # scale-adaptive width (see _static_loop_frame): links on src, the
-    # seed-annotated vertex frame on id
     links, _, drop_links = _static_loop_frame(e.join(deg, "src"), "src")
-    # like pagerank: the sink flag rides as a column of the static vertex
-    # frame and every round's rank frame, so the dangling probe is a
-    # filter+aggregate over the round's checkpoint — no per-round
-    # semi-join against a persisted sink frame
     v, n_v, drop_v = _static_loop_frame(
         vertices.select("id")
         .join(sd.withColumn("_is_seed", F.lit(True)), "id", "left_outer")
@@ -1616,41 +1592,7 @@ def personalized_pagerank(
         ),
         "id",
     )
-    # per-round frames are |V|-bounded — broadcast-gate them on the
-    # measured vertex count so small graphs probe the statics in place
-    # (see pagerank / maybe_broadcast)
-    ranks = v.select("id", "s", F.col("s").alias("rank"), "_sink")
-    # dangling mass as a driver scalar, fused into each round's
-    # checkpoint action — same shape as pagerank (see materialize_agg);
-    # the initial sum is one cheap aggregate over the cached static v
-    d_sum = (
-        ranks.filter(F.col("_sink")).agg(F.sum("rank")).collect()[0][0] or 0.0
-    )
-    for _ in range(iterations):
-        cur = ranks.select("id", "rank")
-        contribs = (
-            links.join(_maybe_broadcast(cur, n_v), links["src"] == cur["id"])
-            .select(F.col("dst").alias("id"), (F.col("rank") / F.col("_deg")).alias("c"))
-            .groupBy("id")
-            .agg(F.sum("c").alias("received"))
-        )
-        ranks = v.join(_maybe_broadcast(contribs, n_v), "id", "left_outer").select(
-            "id",
-            "s",
-            (
-                F.lit(1 - damping) * F.col("s")
-                + F.lit(damping)
-                * (
-                    F.coalesce(F.col("received"), F.lit(0.0))
-                    + F.lit(d_sum) * F.col("s")
-                )
-            ).alias("rank"),
-            "_sink",
-        )
-        ranks, row = _checkpoint_agg(
-            ranks, F.sum(F.when(F.col("_sink"), F.col("rank")))
-        )
-        d_sum = row[0] or 0.0
+    ranks = _power_iteration(links, v, n_v, F.col("s"), 1.0, iterations, damping)
     drop_links()
     drop_v()
-    return ranks.select("id", "rank")
+    return ranks

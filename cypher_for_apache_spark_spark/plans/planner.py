@@ -46,22 +46,8 @@ from cypher_for_apache_spark_spark.materialize import (
     materialize_count,
     maybe_broadcast,
 )
+from cypher_for_apache_spark_spark.operators.algorithms import _mirror
 from cypher_for_apache_spark_spark.plans.record import Record
-
-
-def _mirror_rows(df: DataFrame, fwd: Sequence[Column], bwd: Sequence[Column],
-                 names: Sequence[str]) -> DataFrame:
-    """Union of two row-orientations of ``df`` in ONE pass: explode a
-    2-element struct array instead of ``select(fwd).unionByName(select(bwd))``,
-    which scans the input subtree twice and SUMS the branches' partition
-    counts (same fold as operators.algorithms._mirror; guide §2.3/§2.4)."""
-    arr = F.array(
-        F.struct(*[c.alias(n) for c, n in zip(fwd, names)]),
-        F.struct(*[c.alias(n) for c, n in zip(bwd, names)]),
-    )
-    return df.select(F.explode(arr).alias("_mir")).select(
-        *[F.col(f"_mir.{n}").alias(n) for n in names]
-    )
 
 
 class CypherPlanningError(ValueError):
@@ -1620,38 +1606,18 @@ class Planner:
         ids_col = f"{u}#ids"
         src_c, end_c = f"{u}#bfssrc", f"{u}#bfsend"
 
-        rdf, rmeta = self.scan_rel_frame(rel_var, rel.types)
-        if rdf is not None:
-            rdf = self._prop_filter(rdf, rmeta, rel.props)
-            trip = [
-                F.col(rmeta.src_col).alias("_near"),
-                F.col(rmeta.dst_col).alias("_far"),
-                F.col(rmeta.id_col).alias("_rid"),
-            ]
-            back = [
-                F.col(rmeta.dst_col).alias("_near"),
-                F.col(rmeta.src_col).alias("_far"),
-                F.col(rmeta.id_col).alias("_rid"),
-            ]
-            if rel.direction == "out":
-                step = rdf.select(trip)
-            elif rel.direction == "in":
-                step = rdf.select(back)
-            else:
-                step = _mirror_rows(rdf, trip, back, ["_near", "_far", "_rid"])
-            if hi is None or hi > 1:
-                # joined once per BFS round — materialize or Spark rescans
-                # (checkpoint + size probe fused into one job)
-                step, n_step = materialize_count(step)
-                # the loop's join strategy is decided once — broadcast a
-                # small step side (checkpointed scans are opaque to AQE's
-                # stats), as in var_length_expand; r8: applied to bounded
-                # hi too, which previously re-exchanged and re-sorted the
-                # step frame in every one of its hi rounds (plan-verified:
-                # 2 exchanges/round -> 0)
-                step = maybe_broadcast(step, n_step, loop_invariant=True)
-        else:
-            step = None
+        step, rmeta = self._step_scan(rel_var, rel)
+        if step is not None and (hi is None or hi > 1):
+            # joined once per BFS round — materialize or Spark rescans
+            # (checkpoint + size probe fused into one job)
+            step, n_step = materialize_count(step)
+            # the loop's join strategy is decided once — broadcast a
+            # small step side (checkpointed scans are opaque to AQE's
+            # stats), as in var_length_expand; r8: applied to bounded
+            # hi too, which previously re-exchanged and re-sorted the
+            # step frame in every one of its hi rounds (plan-verified:
+            # 2 exchanges/round -> 0)
+            step = maybe_broadcast(step, n_step, loop_invariant=True)
 
         srcs = rec.df.select(F.col(src_meta.id_col).alias(src_c)).distinct()
         if hi is None or hi > 1:
@@ -1784,7 +1750,7 @@ class Planner:
         if part.path_var is not None:
             header[part.path_var] = EntityMeta(kind="value", col=ids_col)
         rel_ids.append(
-            (ids_col, rmeta.types if rdf is not None else frozenset(), True)
+            (ids_col, rmeta.types if step is not None else frozenset(), True)
         )
         return Record(df, header)
 
@@ -2004,42 +1970,22 @@ class Planner:
         src_c, end_c, last_c = f"{u}#bfssrc", f"{u}#bfsend", f"{u}#bfslast"
         plen_var = f" plen{next(self._uid)}"
 
-        rdf, rmeta = self.scan_rel_frame(rel.var or self._anon(), rel.types)
-        if rdf is not None:
-            rdf = self._prop_filter(rdf, rmeta, rel.props)
-            trip = [
-                F.col(rmeta.src_col).alias("_near"),
-                F.col(rmeta.dst_col).alias("_far"),
-                F.col(rmeta.id_col).alias("_rid"),
-            ]
-            back = [
-                F.col(rmeta.dst_col).alias("_near"),
-                F.col(rmeta.src_col).alias("_far"),
-                F.col(rmeta.id_col).alias("_rid"),
-            ]
-            if rel.direction == "out":
-                step = rdf.select(trip)
-            elif rel.direction == "in":
-                step = rdf.select(back)
-            else:
-                step = _mirror_rows(rdf, trip, back, ["_near", "_far", "_rid"])
-            if hi > 1:
-                # joined once per depth — materialize (checkpoint + size
-                # probe in one job). Deliberately NOT broadcast-hinted,
-                # unlike the other var-length loops: sigma-BFS keeps walk
-                # multiplicity un-collapsed at the LAST depth (see the
-                # groupBy note below), so the final join's output is
-                # path-count-bound — orders of magnitude above the
-                # frontier. A broadcast hash join pins that expansion's
-                # parallelism to the (small) stream side's partitioning,
-                # serializing exactly the most expensive stage; the
-                # sort-merge shape spreads it across the shuffle width and
-                # lets AQE split skewed keys (measured on
-                # all_shortest_shared_part, 9M output pairs at sf0.1:
-                # broadcast 5.6 s vs SMJ 2.9 s, both 32 cores).
-                step, _ = materialize_count(step)
-        else:
-            step = None
+        step, _ = self._step_scan(rel.var or self._anon(), rel)
+        if step is not None and hi > 1:
+            # joined once per depth — materialize (checkpoint + size
+            # probe in one job). Deliberately NOT broadcast-hinted,
+            # unlike the other var-length loops: sigma-BFS keeps walk
+            # multiplicity un-collapsed at the LAST depth (see the
+            # groupBy note below), so the final join's output is
+            # path-count-bound — orders of magnitude above the
+            # frontier. A broadcast hash join pins that expansion's
+            # parallelism to the (small) stream side's partitioning,
+            # serializing exactly the most expensive stage; the
+            # sort-merge shape spreads it across the shuffle width and
+            # lets AQE split skewed keys (measured on
+            # all_shortest_shared_part, 9M output pairs at sf0.1:
+            # broadcast 5.6 s vs SMJ 2.9 s, both 32 cores).
+            step, _ = materialize_count(step)
 
         srcs = rec.df.select(F.col(src_meta.id_col).alias(src_c)).distinct()
         if hi > 1:
@@ -2359,6 +2305,35 @@ class Planner:
                 "inline property referencing another variable is not allowed here"
             )
         return self._filter_prop_items(df, meta, simple, {})
+
+    def _step_scan(
+        self, rel_var: str, rel: A.RelPat, fwd: bool = False
+    ) -> Tuple[Optional[DataFrame], EntityMeta]:
+        """The step side of a var-length fixpoint (shortestPath, the
+        allShortestPaths sigma rounds, var-length expand): ``rel``'s
+        relationships, filtered on its inline properties and oriented
+        hop-wise as (_near, _far, _rid), both orientations in one pass
+        (``_mirror``) for an undirected pattern; None when no relationship
+        table has ``rel``'s types. ``fwd`` adds the per-hop direction bit
+        ``_fwd``: whether the stored edge's src is the hop's near node, as
+        fixed-length named paths carry it. Each caller materializes the
+        step and decides its join strategy."""
+        rdf, rmeta = self.scan_rel_frame(rel_var, rel.types)
+        if rdf is None:
+            return None, rmeta
+        rdf = self._prop_filter(rdf, rmeta, rel.props)
+        names = ["_near", "_far", "_rid"]
+        ahead = [F.col(rmeta.src_col), F.col(rmeta.dst_col), F.col(rmeta.id_col)]
+        back = [F.col(rmeta.dst_col), F.col(rmeta.src_col), F.col(rmeta.id_col)]
+        if fwd:
+            names.append("_fwd")
+            ahead.append(F.lit(True))
+            back.append(F.lit(False))
+        if rel.direction == "out":
+            return rdf.select([c.alias(n) for c, n in zip(ahead, names)]), rmeta
+        if rel.direction == "in":
+            return rdf.select([c.alias(n) for c, n in zip(back, names)]), rmeta
+        return _mirror(rdf, ahead, back, names), rmeta
 
     def _filter_prop_items(self, df: DataFrame, meta: EntityMeta, items, scope: Header) -> DataFrame:
         ctx = CompileCtx(df, scope, self.params)
@@ -2757,8 +2732,8 @@ class Planner:
             path_cols["rels"] = ids_col
             path_cols["dirs"] = dirs_col
 
-        rdf, rmeta = self.scan_rel_frame(rel_var, rel.types)
-        if rdf is None and lo > 0:
+        step, rmeta = self._step_scan(rel_var, rel, fwd=True)
+        if step is None and lo > 0:
             tgt_var = tgt.var or self._anon()
             tdf, tmeta = self.scan_node_record(tgt_var, tgt.labels)
             out = self._empty_like(rec, [tmeta], {tmeta.id_col: tdf})
@@ -2770,51 +2745,21 @@ class Planner:
             out = Record(out.df.select("*", *extra), out.header)
             out.header[rel_var] = EntityMeta(kind="value", col=ids_col)
             return out, tgt_var
-        if rdf is not None:
-            rdf = self._prop_filter(rdf, rmeta, rel.props)
-
-        def orient(d: DataFrame, near: str, far: str, idc: str, fwd: bool) -> DataFrame:
-            # fwd: the stored edge's src is the hop's left (near) node —
-            # the same per-hop direction bit fixed-length named paths carry
-            sel = [
-                F.col(near).alias("_near"),
-                F.col(far).alias("_far"),
-                F.col(idc).alias("_rid"),
-                F.lit(fwd).alias("_fwd"),
-            ]
-            return d.select(sel)
-
-        if rdf is not None:
-            if rel.direction == "out":
-                step = orient(rdf, rmeta.src_col, rmeta.dst_col, rmeta.id_col, True)
-            elif rel.direction == "in":
-                step = orient(rdf, rmeta.dst_col, rmeta.src_col, rmeta.id_col, False)
-            else:
-                step = _mirror_rows(
-                    rdf,
-                    [F.col(rmeta.src_col), F.col(rmeta.dst_col),
-                     F.col(rmeta.id_col), F.lit(True)],
-                    [F.col(rmeta.dst_col), F.col(rmeta.src_col),
-                     F.col(rmeta.id_col), F.lit(False)],
-                    ["_near", "_far", "_rid", "_fwd"],
-                )
-            if hi is None or hi > 1:
-                # the same oriented scan is joined up to ``hi`` times —
-                # materialize it or Spark recomputes the scan per branch
-                # (reference: RelationalOptimizer.scala
-                # InsertCachingOperators). Scoped block-manager storage:
-                # freed automatically when the query's frames are dropped,
-                # unlike the round-2 persist() that accumulated CacheManager
-                # entries across queries in a long-lived session.
-                step, n_step = materialize_count(step)
-                # the loop's join strategy is decided once: the checkpointed
-                # scan is opaque to AQE's stats, so hint broadcast when it
-                # is comfortably small — every chained join (bounded
-                # unroll) or fixpoint round (unbounded) then probes it in
-                # place instead of re-exchanging and re-sorting it
-                step = maybe_broadcast(step, n_step, loop_invariant=True)
-        else:
-            step = None
+        if step is not None and (hi is None or hi > 1):
+            # the same oriented scan is joined up to ``hi`` times —
+            # materialize it or Spark recomputes the scan per branch
+            # (reference: RelationalOptimizer.scala
+            # InsertCachingOperators). Scoped block-manager storage:
+            # freed automatically when the query's frames are dropped,
+            # unlike the round-2 persist() that accumulated CacheManager
+            # entries across queries in a long-lived session.
+            step, n_step = materialize_count(step)
+            # the loop's join strategy is decided once: the checkpointed
+            # scan is opaque to AQE's stats, so hint broadcast when it
+            # is comfortably small — every chained join (bounded
+            # unroll) or fixpoint round (unbounded) then probes it in
+            # place instead of re-exchanging and re-sorting it
+            step = maybe_broadcast(step, n_step, loop_invariant=True)
 
         start_col = f"{u}#start"
         starts = rec.df.select(
@@ -2970,7 +2915,7 @@ class Planner:
 
         header = dict(rec.header)
         header[rel_var] = EntityMeta(kind="value", col=ids_col)
-        rel_ids.append((ids_col, rmeta.types if rdf is not None else frozenset(), True))
+        rel_ids.append((ids_col, rmeta.types if step is not None else frozenset(), True))
 
         tgt_var = tgt.var or self._anon()
         if tgt_var in header:

@@ -2,7 +2,8 @@
 
 - ``materialize.local_frame`` builds driver-side lists and Arrow tables
   through one Arrow path, with no Python-worker job behind them, and keeps
-  the declared types.
+  the declared types; small tables become a ``LocalRelation``, large ones
+  a ``LogicalRDD``.
 - ``connected_components_edges`` finishes on the driver once the
   contracted edges fit the broadcast gate, with the rows of the all-Spark
   rounds forced by ``LARGE_REGIME``.
@@ -99,6 +100,24 @@ def test_local_frame_count_starts_no_python_worker(spark):
     spark.sparkContext.parallelize(range(4), 4).map(lambda x: sum(range(300_000))).count()
     busy = _descendant_cpu(jvm)
     assert busy.keys() - before.keys() or sum(busy.values()) > sum(before.values())
+
+
+@pytest.mark.parametrize("threshold, leaf", [(None, "LocalRelation"), ("0", "LogicalRDD")])
+def test_local_frame_leaf(spark, threshold, leaf):
+    """Arrow batches under ``spark.sql.execution.arrow.localRelationThreshold``
+    (48 MiB by default) are decoded once into a ``LocalRelation``; above
+    it (lowered here) the frame is a ``LogicalRDD`` of the batches."""
+    key = "spark.sql.execution.arrow.localRelationThreshold"
+    old = spark.conf.get(key)
+    if threshold is not None:
+        spark.conf.set(key, threshold)
+    try:
+        data = pa.table({"id": pa.array(range(1000), pa.int64())})
+        df = materialize.local_frame(spark, data, "id long")
+        assert df._jdf.queryExecution().analyzed().getClass().getSimpleName() == leaf
+        assert df.count() == 1000
+    finally:
+        spark.conf.set(key, old)
 
 
 def test_local_frame_keeps_declared_types(spark):

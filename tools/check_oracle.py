@@ -53,6 +53,32 @@ def normalize(df):
     return sorted(rows)
 
 
+def duckdb_views(sf_dir):
+    """A DuckDB connection with one view per TPC-H parquet table of
+    ``sf_dir``, which the oracle SQL reads."""
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    return con
+
+
+def compare(sdf, ddf):
+    """What differs between a Spark result and its oracle's, both pandas:
+    row count, column names, then the normalized row multisets (the
+    value hash). An empty list is a match."""
+    problems = []
+    if len(sdf) != len(ddf):
+        problems.append(f"rowcount spark={len(sdf)} duck={len(ddf)}")
+    if sorted(sdf.columns) != sorted(ddf.columns):
+        problems.append(f"columns spark={sorted(sdf.columns)} duck={sorted(ddf.columns)}")
+    if not problems:
+        a, b = normalize(sdf), normalize(ddf)
+        if a != b:
+            diff = [(x, y) for x, y in zip(a, b) if x != y][:3]
+            problems.append(f"values differ, e.g. {diff}")
+    return problems
+
+
 def main():
     argv = list(sys.argv[1:])
     json_out = None
@@ -78,9 +104,7 @@ def main():
         master="local[8]", app_name="oracle-check", extra_confs=confs
     )
     spark.sparkContext.setLogLevel("ERROR")
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    con = duckdb_views(sf_dir)
 
     qs, oracles = E.queries(), E.oracle_sql()
     n_pass = n_fail = 0
@@ -107,24 +131,11 @@ def main():
             results[name] = {"err": f"duckdb: {str(ex)[:200]}"}
             n_fail += 1
             continue
-        problems = []
-        rows_match = len(sdf) == len(ddf)
-        schema_match = sorted(sdf.columns) == sorted(ddf.columns)
-        hash_match = False
-        if not rows_match:
-            problems.append(f"rowcount spark={len(sdf)} duck={len(ddf)}")
-        if not schema_match:
-            problems.append(f"columns spark={sorted(sdf.columns)} duck={sorted(ddf.columns)}")
-        if not problems:
-            a, b = normalize(sdf), normalize(ddf)
-            hash_match = a == b
-            if not hash_match:
-                diff = [(x, y) for x, y in zip(a, b) if x != y][:3]
-                problems.append(f"values differ, e.g. {diff}")
+        problems = compare(sdf, ddf)
         results[name] = {
-            "rows_match": rows_match,
-            "schema_match": schema_match,
-            "hash_match": hash_match,
+            "rows_match": len(sdf) == len(ddf),
+            "schema_match": sorted(sdf.columns) == sorted(ddf.columns),
+            "hash_match": not problems,
             "spark_rows": len(sdf),
             "oracle_rows": len(ddf),
             # NOTE: single-sample wall of a correctness sweep sharing the
