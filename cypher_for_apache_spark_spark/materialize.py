@@ -79,10 +79,11 @@ def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
     ``spark.createDataFrame(<pyarrow.Table>)`` writes its record batches
     to a temporary file that the JVM reads
     (``PythonSQLUtils.readArrowStreamFromFile``). Below
-    ``spark.sql.execution.arrow.localRelationThreshold`` (48 MiB of
-    batches by default) the JVM decodes them once into a
-    ``LocalRelation``; above it the frame is a ``LogicalRDD`` of the
-    batches, one per partition, decoded by every action. Either way no
+    ``spark.sql.execution.arrow.localRelationThreshold`` (256 KiB of
+    batches, set by ``session._spark_tuning``; Spark's default is 48 MiB)
+    the JVM decodes them once into a ``LocalRelation``, whose collect runs
+    no Spark job; above it the frame is a ``LogicalRDD`` of the batches,
+    one per partition, decoded by every action. Either way no
     ``PythonRDD`` sits in the lineage, so no action over the frame runs
     Python-worker code. A list given to ``createDataFrame`` instead goes
     through ``parallelize`` plus an identity ``map`` in Python workers
@@ -93,9 +94,10 @@ def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
     The cost grows with the bytes, not with the plan. With two long
     columns, build plus one count took 0.3 s at 256 rows, 0.7-1.0 s at
     100 000 and 4.5-4.8 s at 1M as a ``LocalRelation``, and 0.6 s at 1M
-    (threshold lowered) and 1.4-2.7 s at 4M as a ``LogicalRDD`` (local[4],
-    4 vCPUs); a literal array of casts took 0.9 s at 256 rows and 82 s at
-    20 000 (Catalyst analysing every literal). It is still a copy through
+    and 1.4-2.7 s at 4M as a ``LogicalRDD`` (local[4], 4 vCPUs), which is
+    why the session keeps only small tables local; a literal array of
+    casts took 0.9 s at 256 rows and 82 s at 20 000 (Catalyst analysing
+    every literal). It is still a copy through
     the driver, so it is meant for seeds, lookup tables and label maps the
     driver already holds, not for bulk data."""
     if isinstance(schema, str):

@@ -208,10 +208,11 @@ class _DriverEdges:
     one ``toArrow()`` action, then ``np.unique`` over both endpoint
     columns and any ``extra_ids`` maps ids to dense indices. ``ids`` is
     sorted, so index order is id order; ``src``, ``dst`` and ``extra`` are
-    index arrays and ``w`` the ``w`` column, if the frame has one. ``frame``
-    returns numpy columns as a DataFrame with a declared schema through
-    ``local_frame``. Every driver-side solve goes through this, so the
-    collect, the id mapping and the Arrow round trip exist once."""
+    index arrays, and ``cols`` holds the frame's other columns (a ``w``
+    weight, a relationship id) by name. ``frame`` returns numpy or Arrow
+    columns as a DataFrame with a declared schema through ``local_frame``.
+    Every driver-side solve goes through this, so the collect, the id
+    mapping and the Arrow round trip exist once."""
 
     def __init__(self, edges: DataFrame, extra_ids=()):
         t = edges.toArrow()
@@ -224,7 +225,7 @@ class _DriverEdges:
         )
         n = len(src)
         self.src, self.dst, self.extra = idx[:n], idx[n : 2 * n], idx[2 * n :]
-        self.w = t.column("w").to_numpy() if "w" in t.column_names else None
+        self.cols = {c: t.column(c).to_numpy() for c in t.column_names if c not in ("src", "dst")}
         self.spark = edges.sparkSession
 
     def frame(self, schema, **columns) -> DataFrame:
@@ -251,10 +252,11 @@ def _csr(n: int, key, *cols):
 
 
 def _rows_of(start, nodes):
-    """Positions of the CSR rows of ``nodes``, and the node of each."""
+    """Positions of the CSR rows of ``nodes``, and for each the index in
+    ``nodes`` it belongs to."""
     lo, cnt = start[nodes], start[nodes + 1] - start[nodes]
     pos = np.repeat(lo - np.cumsum(cnt) + cnt, cnt) + np.arange(cnt.sum())
-    return pos, np.repeat(nodes, cnt)
+    return pos, np.repeat(np.arange(len(nodes)), cnt)
 
 
 def _relax_on_driver(g: _DriverEdges, w, rounds):
@@ -273,8 +275,8 @@ def _relax_on_driver(g: _DriverEdges, w, rounds):
     frontier = np.unique(g.extra)
     dist[frontier], reached[frontier] = 0.0, True
     for _ in rounds:
-        pos, owner = _rows_of(start, frontier)
-        tgt = dst[pos]
+        pos, row = _rows_of(start, frontier)
+        owner, tgt = frontier[row], dst[pos]
         touched = np.unique(tgt)
         before = dist[touched]
         # the candidates are computed from the distances before the round
@@ -314,6 +316,81 @@ def _peel_on_driver(g: _DriverEdges, k: int, waves: int):
         np.subtract.at(deg, hit, 1)
         cand = np.unique(hit)
     return alive & (deg >= k), deg
+
+
+def _trails_on_driver(step: DataFrame, sources: DataFrame, lo: int, hi, single: bool, names):
+    """The per-path shortestPath / allShortestPaths rounds of
+    ``Planner._plan_shortest_path`` (minimum length ``lo`` 0 or 1, at most
+    ``hi`` hops, ``None``: until the frontier drains) in numpy, round for
+    round: a frame of ``(src, ids, end)`` rows named ``names``, one per
+    shortest trail from an id of ``sources`` (its only column) over the
+    hop-oriented ``step`` (_near, _far, _rid); None when they do not fit
+    the driver.
+
+    One collect of each frame (``_DriverEdges``). A round expands every
+    frontier row over the CSR rows of its end node, drops the rows whose
+    relationship id is already in their list (trail semantics), keeps in
+    ``single`` mode the lexicographically least list per (src, end) pair
+    (``np.lexsort``, the Spark rounds' ``min``), and prunes the pairs an
+    earlier level reached (not in round 1 when ``lo`` is 1). All lists of
+    a round have one length, so a level's lists are a rows x depth matrix.
+    Before a round the kernel checks that the entries it would hold, the
+    levels' lists plus the expanded frontier's (a row with an empty list
+    counts once), stay within the broadcast gate, and gives up otherwise:
+    many pairs, or long paths, over few edges cannot exhaust the driver's
+    memory."""
+    seeds = sources.toArrow().column(0).drop_null().to_numpy()
+    g = _DriverEdges(
+        step.select(F.col("_near").alias("src"), F.col("_far").alias("dst"), "_rid"),
+        extra_ids=seeds,
+    )
+    n = len(g.ids)
+    start, far, rid = _csr(n, g.src, g.dst, g.cols["_rid"])
+    f_src = f_end = np.unique(g.extra)
+    f_ids = np.empty((len(f_src), 0), dtype=rid.dtype)
+    levels = [(f_src, f_ids, f_end) if lo == 0 else (f_src[:0], f_ids[:0], f_end[:0])]
+    visited = levels[0][0] * n + levels[0][2]
+    held = len(visited)
+    for depth in itertools.count(1) if hi is None else range(1, hi + 1):
+        if not _broadcastable(held + int((start[f_end + 1] - start[f_end]).sum()) * depth):
+            return None
+        pos, row = _rows_of(start, f_end)
+        trail = ~(f_ids[row] == rid[pos, None]).any(axis=1)
+        pos, row = pos[trail], row[trail]
+        src, ids, end = f_src[row], np.column_stack([f_ids[row], rid[pos]]), far[pos]
+        pair = src * n + end
+        if single:
+            order = np.lexsort((*ids.T[::-1], pair))
+            least = order[np.unique(pair[order], return_index=True)[1]]
+            src, ids, end, pair = src[least], ids[least], end[least], pair[least]
+        if lo == 0 or depth > 1:
+            new = ~np.isin(pair, visited)
+            src, ids, end, pair = src[new], ids[new], end[new], pair[new]
+        if not len(src):
+            break
+        levels.append((src, ids, end))
+        visited = np.concatenate([visited, pair])
+        held += len(src) * depth
+        f_src, f_ids, f_end = src, ids, end
+    srcs, lists, ends = zip(*levels)
+    sizes = np.concatenate([np.full(len(m), m.shape[1]) for m in lists])
+    ids = pa.ListArray.from_arrays(
+        np.concatenate([[0], np.cumsum(sizes)]).astype(np.int32),
+        np.concatenate([m.ravel() for m in lists]),
+    )
+    src_c, ids_c, end_c = names
+    node = step.schema["_near"].dataType
+    schema = T.StructType(
+        [
+            T.StructField(src_c, node),
+            T.StructField(ids_c, T.ArrayType(step.schema["_rid"].dataType)),
+            T.StructField(end_c, node),
+        ]
+    )
+    return g.frame(
+        schema,
+        **{src_c: g.ids[np.concatenate(srcs)], ids_c: ids, end_c: g.ids[np.concatenate(ends)]},
+    )
 
 
 def _components_on_driver(edges: DataFrame):
@@ -767,12 +844,14 @@ def _relax(graph: PropertyGraph, e: DataFrame, sources, rel_types, rounds) -> Da
     "it improves on the node's minimum so far" without keeping that
     minimum per round. So a round is ONE Spark action (its checkpoint and
     count), and the min per id is taken once, after the loop, into one
-    checkpoint that the caller's actions share.
+    checkpoint that the caller's actions share. Without a ``w`` column a
+    node improves only in the round that first reaches it, so every id is
+    in ``settled`` once and the loop returns it as it stands.
     """
     seeds = sorted({int(s) for s in sources})
     if _fits_driver(graph, rel_types):
         g = _DriverEdges(e, extra_ids=seeds)
-        w = np.ones(len(g.src)) if g.w is None else g.w
+        w = g.cols.get("w", np.ones(len(g.src)))
         dist, reached = _relax_on_driver(g, w, rounds)
         return g.frame("id long, dist double", id=g.ids[reached], dist=dist[reached])
     w = F.col("w") if "w" in e.columns else F.lit(1.0)
@@ -806,6 +885,8 @@ def _relax(graph: PropertyGraph, e: DataFrame, sources, rel_types, rounds) -> Da
         n_settled += n_frontier
         frontier = improved
     drop_edges()
+    if "w" not in e.columns:
+        return settled.select("id", F.col("d").alias("dist"))
     return _checkpoint(settled.groupBy("id").agg(F.min("d").alias("dist")))
 
 

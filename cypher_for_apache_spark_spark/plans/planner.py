@@ -46,7 +46,11 @@ from cypher_for_apache_spark_spark.materialize import (
     materialize_count,
     maybe_broadcast,
 )
-from cypher_for_apache_spark_spark.operators.algorithms import _mirror
+from cypher_for_apache_spark_spark.operators.algorithms import (
+    _fits_driver,
+    _mirror,
+    _trails_on_driver,
+)
 from cypher_for_apache_spark_spark.plans.record import Record
 
 
@@ -1562,28 +1566,38 @@ class Planner:
 
     def _plan_shortest_path(self, rec: Record, part: A.PatternPart, rel_ids) -> Record:
         """``shortestPath((a)-[:T*0..k]->(b))`` / ``allShortestPaths(...)``:
-        level-synchronous BFS, unrolled at plan time into ``k`` join
-        rounds with frontier pruning — each round anti-joins the visited
-        (source, node) set, so only pairs reached for the FIRST time are
-        expanded. UNBOUNDED ``[*]`` / ``[*1..]`` (round 7) runs the same
-        rounds driver-paced until the frontier drains — visited pruning
-        bounds it at diameter+1 rounds, and a small step side broadcasts
-        for the whole loop. Every prefix of a shortest path is a shortest path to
-        its intermediate node, so pruned frontiers lose nothing; on dense
-        graphs the per-source work collapses from the full var-length
-        expansion's O(all paths) to O(shortest paths). Beyond reference
-        parity (the reference supports no shortestPath; its TCK blacklist
-        fails the family). Neo4j semantics: relationship uniqueness
-        within a path (trail); 'single'
-        returns one deterministic shortest path per endpoint pair (the
-        lexicographically least relationship-id list — also the oracle's
-        tie-break), 'all' returns every shortest path. Minimum length
-        >= 2 (which Neo4j itself rejects) finds the shortest trail of
-        length >= lo per pair — see _minlen_shortest_levels. The path variable
-        and the relationship variable both bind to the LIST of traversed
-        relationship ids, so ``length(p)`` / ``size(r)`` give the hop
-        count; var-length paths have no static element list, so
-        ``nodes(p)`` stays unsupported (as for plain var-length)."""
+        level-synchronous BFS with frontier pruning — each round drops the
+        (source, node) pairs an earlier round reached, so only pairs
+        reached for the FIRST time are expanded. UNBOUNDED ``[*]`` /
+        ``[*1..]`` (round 7) runs the same rounds until the frontier
+        drains — visited pruning bounds it at diameter+1 rounds. Every
+        prefix of a shortest path is a shortest path to its intermediate
+        node, so pruned frontiers lose nothing; on dense graphs the
+        per-source work collapses from the full var-length expansion's
+        O(all paths) to O(shortest paths). Beyond reference parity (the
+        reference supports no shortestPath; its TCK blacklist fails the
+        family). Neo4j semantics: relationship uniqueness within a path
+        (trail); 'single' returns one deterministic shortest path per
+        endpoint pair (the lexicographically least relationship-id list —
+        also the oracle's tie-break), 'all' returns every shortest path.
+
+        Where the rounds run: with minimum length 0 or 1, when the graph's
+        measured relationship rows of the pattern's types fit the
+        broadcast gate (``algorithms._fits_driver``), the step and the
+        distinct sources are collected once and a numpy kernel replays the
+        rounds on the driver (``algorithms._trails_on_driver``); it gives
+        up, and the Spark rounds run, when the paths it would hold exceed
+        the same gate. Otherwise the rounds are unrolled into Spark joins
+        (``_shortest_rounds``). Minimum length >= 2 (which Neo4j itself
+        rejects) always runs Spark rounds and finds the shortest trail of
+        length >= lo per pair — see _minlen_shortest_levels. Either way
+        the (source, ids, end) rows meet the target pattern in one tail.
+
+        The path variable and the relationship variable both bind to the
+        LIST of traversed relationship ids, so ``length(p)`` /
+        ``size(r)`` give the hop count; var-length paths have no static
+        element list, so ``nodes(p)`` stays unsupported (as for plain
+        var-length)."""
         fname = "shortestPath" if part.shortest == "single" else "allShortestPaths"
         if len(part.rels) != 1:
             raise CypherPlanningError(
@@ -1607,6 +1621,58 @@ class Planner:
         src_c, end_c = f"{u}#bfssrc", f"{u}#bfsend"
 
         step, rmeta = self._step_scan(rel_var, rel)
+        srcs = rec.df.select(F.col(src_meta.id_col).alias(src_c)).distinct()
+        allrows = None
+        if step is not None and lo < 2 and _fits_driver(self.graph, rel.types):
+            allrows = _trails_on_driver(
+                step, srcs, lo, hi, single, (src_c, ids_col, end_c)
+            )
+        if allrows is None:
+            allrows = self._shortest_rounds(
+                srcs, step, src_c, end_c, ids_col, lo, hi, single
+            )
+
+        header = dict(rec.header)
+        tgt_var = tgt_pat.var or self._anon()
+        if tgt_var in rec.header:
+            t = rec.header[tgt_var]
+            if t.kind != "node":
+                raise CypherPlanningError(f"variable `{tgt_var}` is not a node")
+            df = rec.df.join(
+                allrows,
+                (F.col(src_meta.id_col) == F.col(src_c))
+                & (F.col(t.id_col) == F.col(end_c)),
+            ).drop(src_c, end_c)
+            bound = Record(df, header)
+            bound, _ = self.ensure_node(bound, tgt_pat)
+            df = bound.df
+        else:
+            tgt_scan, tmeta = self.scan_node_record(tgt_var, tgt_pat.labels)
+            tgt_scan = self._prop_filter(tgt_scan, tmeta, tgt_pat.props)
+            hits = allrows.join(tgt_scan, F.col(end_c) == F.col(tmeta.id_col))
+            df = rec.df.join(hits, F.col(src_meta.id_col) == F.col(src_c)).drop(
+                src_c, end_c
+            )
+            header[tgt_var] = tmeta
+
+        header[rel_var] = EntityMeta(kind="value", col=ids_col)
+        if part.path_var is not None:
+            header[part.path_var] = EntityMeta(kind="value", col=ids_col)
+        rel_ids.append(
+            (ids_col, rmeta.types if step is not None else frozenset(), True)
+        )
+        return Record(df, header)
+
+    def _shortest_rounds(
+        self, srcs, step, src_c, end_c, ids_col, lo, hi, single
+    ) -> DataFrame:
+        """The Spark rounds of ``_plan_shortest_path``: its (src, ids, end)
+        rows from the distinct sources ``srcs`` over the step frame
+        ``step`` (None: no relationship table has the pattern's types),
+        unrolled at plan time into one join round per hop. Each round
+        anti-joins the visited (source, node) set, broadcast-gated on the
+        summed round probes; a small step side broadcasts for the whole
+        loop."""
         if step is not None and (hi is None or hi > 1):
             # joined once per BFS round — materialize or Spark rescans
             # (checkpoint + size probe fused into one job)
@@ -1619,7 +1685,6 @@ class Planner:
             # 2 exchanges/round -> 0)
             step = maybe_broadcast(step, n_step, loop_invariant=True)
 
-        srcs = rec.df.select(F.col(src_meta.id_col).alias(src_c)).distinct()
         if hi is None or hi > 1:
             # the count seeds the per-round measured-width exchanges below
             srcs, n_prev = materialize_count(srcs)
@@ -1722,37 +1787,7 @@ class Planner:
         allrows = levels[0]
         for l in levels[1:]:
             allrows = allrows.unionByName(l)
-
-        header = dict(rec.header)
-        tgt_var = tgt_pat.var or self._anon()
-        if tgt_var in rec.header:
-            t = rec.header[tgt_var]
-            if t.kind != "node":
-                raise CypherPlanningError(f"variable `{tgt_var}` is not a node")
-            df = rec.df.join(
-                allrows,
-                (F.col(src_meta.id_col) == F.col(src_c))
-                & (F.col(t.id_col) == F.col(end_c)),
-            ).drop(src_c, end_c)
-            bound = Record(df, header)
-            bound, _ = self.ensure_node(bound, tgt_pat)
-            df = bound.df
-        else:
-            tgt_scan, tmeta = self.scan_node_record(tgt_var, tgt_pat.labels)
-            tgt_scan = self._prop_filter(tgt_scan, tmeta, tgt_pat.props)
-            hits = allrows.join(tgt_scan, F.col(end_c) == F.col(tmeta.id_col))
-            df = rec.df.join(hits, F.col(src_meta.id_col) == F.col(src_c)).drop(
-                src_c, end_c
-            )
-            header[tgt_var] = tmeta
-
-        header[rel_var] = EntityMeta(kind="value", col=ids_col)
-        if part.path_var is not None:
-            header[part.path_var] = EntityMeta(kind="value", col=ids_col)
-        rel_ids.append(
-            (ids_col, rmeta.types if step is not None else frozenset(), True)
-        )
-        return Record(df, header)
+        return allrows
 
     def _minlen_shortest_levels(
         self, srcs, step, zero, src_c, end_c, ids_col, lo, hi, single

@@ -8,7 +8,8 @@ loop round for round, and under ``LARGE_REGIME`` (the ``forced`` fixture of
 equal, capped runs included, and the driver path must run by default and
 never under the forced regime. Job-group pins on the sf0.001 TPC-H graph
 check that a warm call of the registry entries runs a constant handful of
-Spark jobs instead of one or more per round.
+Spark jobs instead of one or more per round, and that bfs's Spark rounds
+end without ``sssp``'s min-per-id checkpoint.
 """
 
 import itertools
@@ -140,14 +141,14 @@ def test_sssp_null_weight_is_one(graphs):
 _groups = itertools.count()
 
 
-@pytest.mark.parametrize("entry", ["sssp_customer_parts", "k_core_tpch"])
-def test_registry_entry_job_count(spark, entry):
+def warm_jobs(spark, entry):
+    """Spark jobs of a warm call (plan and collect) of a registry entry
+    on the sf0.001 tables."""
     import __spark_entry__ as E
 
     query = E.queries()[entry]
     # the first call loads the graph and counts each relationship table
-    # once (element_rows); a warm call collects the edges once and runs
-    # the caller's action
+    # once (element_rows)
     query(spark, SF_DIR).collect()
     sc = spark.sparkContext
     group = f"driver-loop-jobs-{next(_groups)}"
@@ -156,4 +157,18 @@ def test_registry_entry_job_count(spark, entry):
         query(spark, SF_DIR).collect()
     finally:
         sc.setJobGroup(None, None)
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 3
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("entry", ["sssp_customer_parts", "k_core_tpch"])
+def test_registry_entry_job_count(spark, entry):
+    # a warm call collects the edges once and runs the caller's action
+    assert warm_jobs(spark, entry) <= 3
+
+
+@pytest.mark.parametrize("entry", ["bfs_region_reach", "call_bfs_region"])
+def test_bfs_spark_rounds_skip_the_min_per_id(spark, forced, entry):
+    """Above the gate bfs runs ``_relax``'s Spark rounds with unit
+    weights, where every id is settled once: no min-per-id checkpoint
+    after the loop, whose groupBy cost 2 jobs (19 per warm call)."""
+    assert warm_jobs(spark, entry) == 17

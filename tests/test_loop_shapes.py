@@ -102,20 +102,26 @@ def test_local_frame_count_starts_no_python_worker(spark):
     assert busy.keys() - before.keys() or sum(busy.values()) > sum(before.values())
 
 
-@pytest.mark.parametrize("threshold, leaf", [(None, "LocalRelation"), ("0", "LogicalRDD")])
-def test_local_frame_leaf(spark, threshold, leaf):
+@pytest.mark.parametrize(
+    "threshold, rows, leaf",
+    [(None, 1000, "LocalRelation"), ("0", 1000, "LogicalRDD"), (None, 100_000, "LogicalRDD")],
+    ids=["None-LocalRelation", "0-LogicalRDD", "None-LogicalRDD"],
+)
+def test_local_frame_leaf(spark, threshold, rows, leaf):
     """Arrow batches under ``spark.sql.execution.arrow.localRelationThreshold``
-    (48 MiB by default) are decoded once into a ``LocalRelation``; above
-    it (lowered here) the frame is a ``LogicalRDD`` of the batches."""
+    are decoded once into a ``LocalRelation``; above it the frame is a
+    ``LogicalRDD`` of the batches. Under the session's own tuning (256 KiB,
+    ``threshold`` None) 1000 longs are a ``LocalRelation`` and 100 000 a
+    ``LogicalRDD``."""
     key = "spark.sql.execution.arrow.localRelationThreshold"
     old = spark.conf.get(key)
     if threshold is not None:
         spark.conf.set(key, threshold)
     try:
-        data = pa.table({"id": pa.array(range(1000), pa.int64())})
+        data = pa.table({"id": pa.array(range(rows), pa.int64())})
         df = materialize.local_frame(spark, data, "id long")
         assert df._jdf.queryExecution().analyzed().getClass().getSimpleName() == leaf
-        assert df.count() == 1000
+        assert df.count() == rows
     finally:
         spark.conf.set(key, old)
 

@@ -19,6 +19,7 @@ import duckdb
 import pytest
 
 import __spark_entry__ as E
+from cypher_for_apache_spark_spark import materialize
 from cypher_for_apache_spark_spark.operators import algorithms as alg
 from cypher_for_apache_spark_spark.plans import planner as planner_mod
 from test_large_regime import forced  # noqa: F401  (fixture: the at-scale regime)
@@ -108,30 +109,38 @@ def _step_joins(plan):
 
 
 @pytest.mark.parametrize(
-    "query, join",
+    "query, join, limits",
     [
         (
             "MATCH p = shortestPath((a:N)-[:E*1..4]->(b:N)) WHERE a.name = 'n0' "
             "RETURN b.name AS b, length(p) AS hops",
             "BroadcastHashJoin",
+            # below the per-round gate shortestPath solves on the driver;
+            # its Spark rounds decide the step join on the loop-invariant
+            # limit, which keeps its value
+            {"BROADCAST_ROW_LIMIT": 0},
         ),
         (
             "MATCH (a:N)-[:E*1..3]-(b:N) WHERE a.name = 'n2' RETURN b.name AS b",
             "BroadcastHashJoin",
+            {},
         ),
         (
             "MATCH p = allShortestPaths((a:N)-[:E*1..4]-(b:N)) "
             "RETURN length(p) AS l, count(*) AS c",
             "SortMergeJoin",
+            {},
         ),
     ],
     ids=["shortest_path", "var_length", "all_shortest_sigma"],
 )
-def test_step_join_strategy(spark, chain, monkeypatch, query, join):
+def test_step_join_strategy(spark, chain, monkeypatch, query, join, limits):
     """With Catalyst's own broadcast threshold off, only the fixpoints'
     own decisions pick the step join: the static plan of every round the
     planner materializes, and of the result, joins the step scan with
     ``join``."""
+    for name, value in limits.items():
+        monkeypatch.setattr(materialize, name, value)
     plans = []
     real = planner_mod.materialize_count
 
