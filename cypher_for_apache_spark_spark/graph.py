@@ -23,7 +23,7 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 from typing import Dict, FrozenSet, Iterable, List, Optional, Tuple
 
-from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F, types as T
 
 from cypher_for_apache_spark_spark.schema import PropertyGraphSchema
 from cypher_for_apache_spark_spark.types import from_spark_type, to_spark_type
@@ -174,22 +174,21 @@ class TripletTable:
 
     SRC_ID, REL_ID, DST_ID = "src_id", "rel_id", "dst_id"
     PFX = {"src": "src_", "rel": "rel_", "dst": "dst_"}
+    # endpoint sides whose node properties the table carries
+    NODE_SIDES = ("src", "dst")
 
-    @staticmethod
+    @classmethod
     def create(
+        cls,
         rel_type: str,
         df: DataFrame,
         src_labels: Iterable[str],
         dst_labels: Iterable[str],
     ) -> "TripletTable":
-        missing = {TripletTable.SRC_ID, TripletTable.REL_ID, TripletTable.DST_ID} - set(
-            df.columns
-        )
+        missing = {cls.SRC_ID, cls.REL_ID, cls.DST_ID} - set(df.columns)
         if missing:
-            raise ValueError(f"triplet table is missing id columns {sorted(missing)}")
-        return TripletTable(
-            rel_type, frozenset(src_labels), frozenset(dst_labels), _lift(df)
-        )
+            raise ValueError(f"{cls.__name__} is missing id columns {sorted(missing)}")
+        return cls(rel_type, frozenset(src_labels), frozenset(dst_labels), _lift(df))
 
     def props(self, side: str) -> Dict[str, str]:
         """{property key -> physical column} for one side (src/rel/dst)."""
@@ -200,45 +199,43 @@ class TripletTable:
         }
 
 
-@dataclass
-class NodeRelTable:
+class NodeRelTable(TripletTable):
     """A pre-joined (source node, relationship) table — the reference's
-    NodeRelPattern (okapi-api/.../graph/Pattern.scala:159), the narrower
-    sibling of TripletTable: the target node is still joined at query time,
-    so one of the expand's two joins disappears while the materialized
-    table stays small (no target properties duplicated per edge).
+    NodeRelPattern (okapi-api/.../graph/Pattern.scala:159): a TripletTable
+    without the ``dst_`` property columns. The target node is still joined
+    at query time, so one of the expand's two joins disappears while the
+    materialized table stays small (no target properties duplicated per
+    edge)."""
 
-    Layout matches TripletTable minus the ``dst_`` property columns:
-    ``src_id, rel_id, dst_id`` + ``src_*`` / ``rel_*`` properties.
-    """
+    NODE_SIDES = ("src",)
 
-    rel_type: str
-    src_labels: FrozenSet[str]
-    dst_labels: FrozenSet[str]
-    df: DataFrame
 
-    @staticmethod
-    def create(
-        rel_type: str,
-        df: DataFrame,
-        src_labels: Iterable[str],
-        dst_labels: Iterable[str],
-    ) -> "NodeRelTable":
-        missing = {TripletTable.SRC_ID, TripletTable.REL_ID, TripletTable.DST_ID} - set(
-            df.columns
+def _prejoined_frame(
+    graph: "PropertyGraph", rel_table: "RelationshipTable", node_sides: Tuple[str, ...]
+) -> Optional[DataFrame]:
+    """``rel_table`` joined with the node tables of its endpoint hints on
+    ``node_sides``, in the TripletTable layout; None when a hint on those
+    sides is unset or names no node table."""
+    hints = {"src": rel_table.src_labels, "dst": rel_table.dst_labels}
+    node_tables = [(side, graph.node_tables.get(hints[side])) for side in node_sides]
+    if any(nt is None for _, nt in node_tables):
+        return None
+    out = rel_table.df.select(
+        F.col(SRC).alias(TripletTable.SRC_ID),
+        F.col(ID).alias(TripletTable.REL_ID),
+        F.col(DST).alias(TripletTable.DST_ID),
+        *[F.col(p).alias(f"rel_{p}") for p in rel_table.property_columns],
+    )
+    for side, nt in node_tables:
+        key = TripletTable.SRC_ID if side == "src" else TripletTable.DST_ID
+        out = out.join(
+            nt.df.select(
+                F.col(ID).alias(key),
+                *[F.col(p).alias(f"{side}_{p}") for p in nt.property_columns],
+            ),
+            key,
         )
-        if missing:
-            raise ValueError(f"node-rel table is missing id columns {sorted(missing)}")
-        return NodeRelTable(
-            rel_type, frozenset(src_labels), frozenset(dst_labels), _lift(df)
-        )
-
-    def props(self, side: str) -> Dict[str, str]:
-        pfx = TripletTable.PFX[side]
-        ids = {TripletTable.SRC_ID, TripletTable.REL_ID, TripletTable.DST_ID}
-        return {
-            c[len(pfx):]: c for c in self.df.columns if c.startswith(pfx) and c not in ids
-        }
+    return out
 
 
 def build_node_rel_frame(
@@ -246,22 +243,7 @@ def build_node_rel_frame(
 ) -> Optional[DataFrame]:
     """Materialize the (source node ⋈ relationship) frame for one
     relationship table (source hint must be set)."""
-    if rel_table.src_labels is None:
-        return None
-    src_nt = graph.node_tables.get(rel_table.src_labels)
-    if src_nt is None:
-        return None
-    r = rel_table.df.select(
-        F.col(SRC).alias(TripletTable.SRC_ID),
-        F.col(ID).alias(TripletTable.REL_ID),
-        F.col(DST).alias(TripletTable.DST_ID),
-        *[F.col(p).alias(f"rel_{p}") for p in rel_table.property_columns],
-    )
-    s = src_nt.df.select(
-        F.col(ID).alias(TripletTable.SRC_ID),
-        *[F.col(p).alias(f"src_{p}") for p in src_nt.property_columns],
-    )
-    return r.join(s, TripletTable.SRC_ID)
+    return _prejoined_frame(graph, rel_table, NodeRelTable.NODE_SIDES)
 
 
 def build_triplet_frame(
@@ -272,27 +254,7 @@ def build_triplet_frame(
     persists/writes the result and registers it via
     ``PropertyGraph.add_triplet_table`` — at scale this is a one-off
     materialized view, amortized across every traversal that hits it."""
-    if rel_table.src_labels is None or rel_table.dst_labels is None:
-        return None
-    src_nt = graph.node_tables.get(rel_table.src_labels)
-    dst_nt = graph.node_tables.get(rel_table.dst_labels)
-    if src_nt is None or dst_nt is None:
-        return None
-    r = rel_table.df.select(
-        F.col(SRC).alias(TripletTable.SRC_ID),
-        F.col(ID).alias(TripletTable.REL_ID),
-        F.col(DST).alias(TripletTable.DST_ID),
-        *[F.col(p).alias(f"rel_{p}") for p in rel_table.property_columns],
-    )
-    s = src_nt.df.select(
-        F.col(ID).alias(TripletTable.SRC_ID),
-        *[F.col(p).alias(f"src_{p}") for p in src_nt.property_columns],
-    )
-    d = dst_nt.df.select(
-        F.col(ID).alias(TripletTable.DST_ID),
-        *[F.col(p).alias(f"dst_{p}") for p in dst_nt.property_columns],
-    )
-    return r.join(s, TripletTable.SRC_ID).join(d, TripletTable.DST_ID)
+    return _prejoined_frame(graph, rel_table, TripletTable.NODE_SIDES)
 
 
 def _common_prop_types(
@@ -310,23 +272,42 @@ def _common_prop_types(
     return {k: to_spark_type(v) for k, v in sorted(merged.items())}
 
 
-def _aligned_select(
+def _aligned(
     df: DataFrame,
-    fixed: List,
     prop_types: Dict[str, T.DataType],
-    prop_prefix: str,
-) -> DataFrame:
-    cols = list(fixed)
-    have = set(df.columns)
+    prefix: str,
+    phys: Optional[Dict[str, str]] = None,
+) -> List[Column]:
+    """One column ``prefix + key`` per merged property type: ``df``'s column
+    for the key (``phys[key]``; without ``phys``, the column named like the
+    key), cast when its type differs from the merged one, or a typed null
+    when ``df`` lacks the key."""
+    dtypes = {f.name: f.dataType for f in df.schema.fields}
+    if phys is None:
+        phys = {c: c for c in dtypes}
+    cols = []
     for p, dt in prop_types.items():
-        if p in have:
-            src = F.col(p)
-            if df.schema[p].dataType != dt:
-                src = src.cast(dt)
-            cols.append(src.alias(prop_prefix + p))
+        c = phys.get(p)
+        if c is None:
+            cols.append(F.lit(None).cast(dt).alias(prefix + p))
+        elif dtypes[c] != dt:
+            cols.append(F.col(c).cast(dt).alias(prefix + p))
         else:
-            cols.append(F.lit(None).cast(dt).alias(prop_prefix + p))
-    return df.select(*cols)
+            cols.append(F.col(c).alias(prefix + p))
+    return cols
+
+
+def _labels_lit(combo: Iterable[str]) -> Column:
+    """A node branch's constant, sorted ``array<string>`` labels column."""
+    lbls = sorted(combo)
+    return F.array(*[F.lit(l) for l in lbls]) if lbls else F.array().cast("array<string>")
+
+
+def _union_all(parts: List[DataFrame]) -> DataFrame:
+    out = parts[0]
+    for p in parts[1:]:
+        out = out.unionByName(p)
+    return out
 
 
 class PropertyGraph:
@@ -360,50 +341,33 @@ class PropertyGraph:
         self._element_rows: Dict[int, Tuple[object, int]] = {}
 
     def add_triplet_table(self, tt: TripletTable) -> "PropertyGraph":
-        """Register a pre-joined triplet for recognized-pattern scans.
+        """Register a pre-joined triplet for recognized-pattern scans."""
+        return self._add_prejoined(self.triplet_tables, TripletTable.NODE_SIDES, tt)
 
-        Validates (fail-fast, plan-time guarantees depend on it) that the
-        triplet carries every property column of the node tables for its
-        endpoint combos and of the relationship tables it covers — a
-        triplet missing a property would silently null out values the join
-        path produces."""
-        for side, combo in (("src", tt.src_labels), ("dst", tt.dst_labels)):
-            nt = self.node_tables.get(combo)
+    def add_node_rel_table(self, nrt: NodeRelTable) -> "PropertyGraph":
+        """Register a pre-joined (source node, relationship) table for
+        recognized-pattern scans."""
+        return self._add_prejoined(self.node_rel_tables, NodeRelTable.NODE_SIDES, nrt)
+
+    def _add_prejoined(self, registry: Dict, node_sides: Tuple[str, ...], tt: TripletTable) -> "PropertyGraph":
+        """Validates (fail-fast, plan-time guarantees depend on it) that the
+        table carries every property column of the node tables for its
+        endpoint combos on ``node_sides`` and of the relationship tables it
+        covers — a table missing a property would silently null out values
+        the join path produces."""
+        what = f"{type(tt).__name__} for {tt.rel_type}"
+        for side in node_sides:
+            nt = self.node_tables.get(tt.src_labels if side == "src" else tt.dst_labels)
             if nt is not None:
                 missing = set(nt.property_columns) - set(tt.props(side))
                 if missing:
-                    raise ValueError(
-                        f"triplet for {tt.rel_type} lacks {side} node properties {sorted(missing)}"
-                    )
+                    raise ValueError(f"{what} lacks {side} node properties {sorted(missing)}")
         for rt in self.rel_tables.get(tt.rel_type, []):
             if rt.src_labels == tt.src_labels and rt.dst_labels == tt.dst_labels:
                 missing = set(rt.property_columns) - set(tt.props("rel"))
                 if missing:
-                    raise ValueError(
-                        f"triplet for {tt.rel_type} lacks relationship properties {sorted(missing)}"
-                    )
-        self.triplet_tables[(tt.rel_type, tt.src_labels, tt.dst_labels)] = tt
-        return self
-
-    def add_node_rel_table(self, nrt: NodeRelTable) -> "PropertyGraph":
-        """Register a pre-joined (source node, relationship) table; same
-        fail-fast property-completeness validation as triplets, for the
-        source and relationship sides only."""
-        nt = self.node_tables.get(nrt.src_labels)
-        if nt is not None:
-            missing = set(nt.property_columns) - set(nrt.props("src"))
-            if missing:
-                raise ValueError(
-                    f"node-rel table for {nrt.rel_type} lacks src node properties {sorted(missing)}"
-                )
-        for rt in self.rel_tables.get(nrt.rel_type, []):
-            if rt.src_labels == nrt.src_labels and rt.dst_labels == nrt.dst_labels:
-                missing = set(rt.property_columns) - set(nrt.props("rel"))
-                if missing:
-                    raise ValueError(
-                        f"node-rel table for {nrt.rel_type} lacks relationship properties {sorted(missing)}"
-                    )
-        self.node_rel_tables[(nrt.rel_type, nrt.src_labels, nrt.dst_labels)] = nrt
+                    raise ValueError(f"{what} lacks relationship properties {sorted(missing)}")
+        registry[(tt.rel_type, tt.src_labels, tt.dst_labels)] = tt
         return self
 
     # -- schema ------------------------------------------------------------
@@ -480,18 +444,14 @@ class PropertyGraph:
         if not tables:
             return None
         prop_types = _common_prop_types([(t.df, t.property_columns) for t in tables])
-        parts = []
-        for t in tables:
-            lbls = sorted(t.labels)
-            labels_col = (
-                F.array(*[F.lit(l) for l in lbls]) if lbls else F.array().cast("array<string>")
+        return _union_all([
+            t.df.select(
+                F.col(ID).alias(out_id),
+                _labels_lit(t.labels).alias(out_labels),
+                *_aligned(t.df, prop_types, prop_prefix),
             )
-            fixed = [F.col(ID).alias(out_id), labels_col.alias(out_labels)]
-            parts.append(_aligned_select(t.df, fixed, prop_types, prop_prefix))
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+            for t in tables
+        ])
 
     def scan_rels(
         self,
@@ -517,48 +477,46 @@ class PropertyGraph:
         prop_types = _common_prop_types([(t.df, t.property_columns) for t in tables])
         parts = []
         for t in tables:
-            fixed = [
+            df = t.frame(prefer_layout)
+            parts.append(df.select(
                 F.col(ID).alias(out_id),
                 F.col(SRC).alias(out_src),
                 F.col(DST).alias(out_dst),
                 F.lit(t.rel_type).alias(out_type),
-            ]
-            parts.append(_aligned_select(t.frame(prefer_layout), fixed, prop_types, prop_prefix))
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+                *_aligned(df, prop_types, prop_prefix),
+            ))
+        return _union_all(parts)
 
-    def scan_triplets(
+    def scan_prejoined(
         self,
+        tables: Dict[Tuple[str, FrozenSet[str], FrozenSet[str]], TripletTable],
         rel_types: Iterable[str],
         left_labels: Iterable[str],
         right_labels: Iterable[str],
         direction: str,
-        left_id: str,
-        left_labels_col: str,
-        left_prefix: str,
-        rel_id: str,
-        rel_src: str,
-        rel_dst: str,
-        rel_type_col: str,
-        rel_prefix: str,
-        right_id: str,
-        right_labels_col: str,
-        right_prefix: str,
+        left_cols: Tuple[str, str, str],
+        rel_cols: Tuple[str, str, str, str, str],
+        right_cols: Optional[Tuple[str, str, str]] = None,
     ) -> Optional[DataFrame]:
-        """Serve a whole ``(left)-[rel]->(right)`` pattern element from
-        registered triplet tables with ZERO joins, or return None when the
-        triplets cannot cover exactly what the join path would produce.
+        """Serve a ``(left)-[rel]->(right)`` pattern element from one
+        registry of pre-joined tables (``triplet_tables`` or
+        ``node_rel_tables``) with ZERO joins, or return None when those
+        tables cannot cover exactly what the join path would produce.
 
         Coverage rule: for each orientation the pattern allows, every
         relationship table compatible with the label constraints must have
-        endpoint hints and a registered triplet — otherwise the join path
+        endpoint hints and a registered table — otherwise the join path
         runs (correctness first, the optimization must never change
         results). Output columns mirror the join path: the full property
         set a node/rel scan would advertise, null-padded per branch, plus
-        constant labels/type columns."""
-        if not self.triplet_tables:
+        constant labels/type columns. ``left_cols`` / ``right_cols`` name a
+        node's (id, labels, property prefix) columns and ``rel_cols`` the
+        relationship's (id, src, dst, type, property prefix). Without
+        ``right_cols`` the right node is not emitted (its labels only prune
+        tables): a node-rel table serves direction ``out`` this way, with
+        the edge source as the left node, and the caller joins the right
+        node."""
+        if not tables:
             return None
         want = set(rel_types)
         typed_tables = [
@@ -576,7 +534,7 @@ class PropertyGraph:
                 ("out", set(left_labels), set(right_labels)),
                 ("in", set(right_labels), set(left_labels)),
             ]
-        plan: List[Tuple[str, RelationshipTable, TripletTable]] = []
+        plan: List[Tuple[str, TripletTable]] = []
         compatible_union: List[RelationshipTable] = []
         for orient, src_req, dst_req in orientations:
             for rt in typed_tables:
@@ -584,177 +542,51 @@ class PropertyGraph:
                     continue
                 compatible_union.append(rt)
                 if rt.src_labels is None or rt.dst_labels is None:
-                    return None  # unhinted table: triplet cannot cover it
-                tt = self.triplet_tables.get((rt.rel_type, rt.src_labels, rt.dst_labels))
+                    return None  # unhinted table: no pre-joined table covers it
+                tt = tables.get((rt.rel_type, rt.src_labels, rt.dst_labels))
                 if tt is None:
                     return None
-                plan.append((orient, rt, tt))
+                plan.append((orient, tt))
         if not plan:
             return None
 
-        left_types = _common_prop_types(
-            [(t.df, t.property_columns) for t in self.matching_node_tables(left_labels)]
-        )
-        right_types = _common_prop_types(
-            [(t.df, t.property_columns) for t in self.matching_node_tables(right_labels)]
-        )
+        def node_types(labels):
+            return _common_prop_types(
+                [(t.df, t.property_columns) for t in self.matching_node_tables(labels)]
+            )
+
+        left_types = node_types(left_labels)
+        right_types = node_types(right_labels) if right_cols else {}
         rel_types_map = _common_prop_types(
             [(t.df, t.property_columns) for t in compatible_union]
         )
-
-        def labels_lit(combo: FrozenSet[str]):
-            lbls = sorted(combo)
-            return (
-                F.array(*[F.lit(l) for l in lbls])
-                if lbls
-                else F.array().cast("array<string>")
-            )
-
-        def prop_selects(avail: Dict[str, str], types: Dict[str, T.DataType], prefix: str, df: DataFrame):
-            cols = []
-            dtypes = {f.name: f.dataType for f in df.schema.fields}
-            for p, dt in types.items():
-                phys = avail.get(p)
-                if phys is None:
-                    cols.append(F.lit(None).cast(dt).alias(prefix + p))
-                elif dtypes[phys] != dt:
-                    cols.append(F.col(phys).cast(dt).alias(prefix + p))
-                else:
-                    cols.append(F.col(phys).alias(prefix + p))
-            return cols
-
         parts = []
-        for orient, rt, tt in plan:
-            # skip branches whose endpoint node tables don't exist — the
-            # join path would produce zero rows for them too
-            if tt.src_labels not in self.node_tables or tt.dst_labels not in self.node_tables:
-                continue
+        for orient, tt in plan:
             left_side, right_side = ("src", "dst") if orient == "out" else ("dst", "src")
-            left_combo = tt.src_labels if orient == "out" else tt.dst_labels
-            right_combo = tt.dst_labels if orient == "out" else tt.src_labels
-            phys_id = {"src": TripletTable.SRC_ID, "dst": TripletTable.DST_ID}
-            fixed = [
-                F.col(phys_id[left_side]).alias(left_id),
-                labels_lit(left_combo).alias(left_labels_col),
-                F.col(TripletTable.REL_ID).alias(rel_id),
-                F.col(TripletTable.SRC_ID).alias(rel_src),
-                F.col(TripletTable.DST_ID).alias(rel_dst),
-                F.lit(tt.rel_type).alias(rel_type_col),
-                F.col(phys_id[right_side]).alias(right_id),
-                labels_lit(right_combo).alias(right_labels_col),
-            ]
-            cols = (
-                fixed
-                + prop_selects(tt.props(left_side), left_types, left_prefix, tt.df)
-                + prop_selects(tt.props("rel"), rel_types_map, rel_prefix, tt.df)
-                + prop_selects(tt.props(right_side), right_types, right_prefix, tt.df)
-            )
+            sides = [(left_side, left_cols, left_types), ("rel", rel_cols, rel_types_map)]
+            if right_cols:
+                sides.append((right_side, right_cols, right_types))
+            # skip branches whose emitted endpoint node tables don't exist —
+            # the join path would produce zero rows for them too
+            combos = {"src": tt.src_labels, "dst": tt.dst_labels}
+            if any(combos[side] not in self.node_tables for side, _, _ in sides if side != "rel"):
+                continue
+            fixed_src = {
+                "src": [F.col(tt.SRC_ID), _labels_lit(tt.src_labels)],
+                "rel": [F.col(tt.REL_ID), F.col(tt.SRC_ID), F.col(tt.DST_ID), F.lit(tt.rel_type)],
+                "dst": [F.col(tt.DST_ID), _labels_lit(tt.dst_labels)],
+            }
+            fixed, props = [], []
+            for side, (*names, prefix), types in sides:
+                fixed += [c.alias(n) for c, n in zip(fixed_src[side], names)]
+                props += _aligned(tt.df, types, prefix, tt.props(side))
             branch = tt.df
             if direction == "both" and orient == "in":
                 # undirected union counts self-loops once (expand does the
                 # same on its reversed branch)
-                branch = branch.filter(
-                    F.col(TripletTable.SRC_ID) != F.col(TripletTable.DST_ID)
-                )
-            parts.append(branch.select(*cols))
-        if not parts:
-            return None
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
-
-    def scan_node_rels(
-        self,
-        rel_types: Iterable[str],
-        packed_labels: Iterable[str],
-        far_labels: Iterable[str],
-        orientation: str,
-        node_id: str,
-        node_labels_col: str,
-        node_prefix: str,
-        rel_id: str,
-        rel_src: str,
-        rel_dst: str,
-        rel_type_col: str,
-        rel_prefix: str,
-    ) -> Optional[DataFrame]:
-        """Serve the (source node + relationship) half of a pattern element
-        from registered NodeRelTables, or None when they don't cover every
-        compatible relationship table. ``orientation`` is the edge
-        direction relative to the packed node: always 'src' here — the
-        packed node of a NodeRelTable is the edge source; callers flip the
-        pattern when the packed node is the pattern's right side.
-        ``far_labels`` prune via endpoint hints only (the far node is
-        joined by the caller)."""
-        if not self.node_rel_tables:
-            return None
-        want = set(rel_types)
-        plan = []
-        for t, rts in self.rel_tables.items():
-            if want and t not in want:
-                continue
-            for rt in rts:
-                if not rt.compatible(set(packed_labels), set(far_labels)):
-                    continue
-                if rt.src_labels is None or rt.dst_labels is None:
-                    return None
-                nrt = self.node_rel_tables.get((rt.rel_type, rt.src_labels, rt.dst_labels))
-                if nrt is None:
-                    return None
-                plan.append((rt, nrt))
-        if not plan:
-            return None
-        node_types = _common_prop_types(
-            [(t.df, t.property_columns) for t in self.matching_node_tables(packed_labels)]
-        )
-        rel_types_map = _common_prop_types(
-            [(rt.df, rt.property_columns) for rt, _ in plan]
-        )
-        parts = []
-        for rt, nrt in plan:
-            if nrt.src_labels not in self.node_tables:
-                continue
-            lbls = sorted(nrt.src_labels)
-            labels_col = (
-                F.array(*[F.lit(l) for l in lbls])
-                if lbls
-                else F.array().cast("array<string>")
-            )
-            fixed = [
-                F.col(TripletTable.SRC_ID).alias(node_id),
-                labels_col.alias(node_labels_col),
-                F.col(TripletTable.REL_ID).alias(rel_id),
-                F.col(TripletTable.SRC_ID).alias(rel_src),
-                F.col(TripletTable.DST_ID).alias(rel_dst),
-                F.lit(nrt.rel_type).alias(rel_type_col),
-            ]
-            dtypes = {f.name: f.dataType for f in nrt.df.schema.fields}
-
-            def sel(avail, types, prefix):
-                cols = []
-                for p, dt in types.items():
-                    phys = avail.get(p)
-                    if phys is None:
-                        cols.append(F.lit(None).cast(dt).alias(prefix + p))
-                    elif dtypes[phys] != dt:
-                        cols.append(F.col(phys).cast(dt).alias(prefix + p))
-                    else:
-                        cols.append(F.col(phys).alias(prefix + p))
-                return cols
-
-            cols = (
-                fixed
-                + sel(nrt.props("src"), node_types, node_prefix)
-                + sel(nrt.props("rel"), rel_types_map, rel_prefix)
-            )
-            parts.append(nrt.df.select(*cols))
-        if not parts:
-            return None
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+                branch = branch.filter(F.col(tt.SRC_ID) != F.col(tt.DST_ID))
+            parts.append(branch.select(*fixed, *props))
+        return _union_all(parts) if parts else None
 
     # -- user-facing table views (PropertyGraph.nodes/relationships,
     #    okapi-api/.../graph/PropertyGraph.scala:69-78) --------------------
@@ -840,24 +672,14 @@ def union_graphs(
 
     def union_node(tables: List[NodeTable]) -> DataFrame:
         prop_types = _common_prop_types([(t.df, t.property_columns) for t in tables])
-        parts = [
-            _aligned_select(t.df, [F.col(ID)], prop_types, "") for t in tables
-        ]
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+        return _union_all([t.df.select(F.col(ID), *_aligned(t.df, prop_types, "")) for t in tables])
 
     def union_rel(tables: List[RelationshipTable]) -> DataFrame:
         prop_types = _common_prop_types([(t.df, t.property_columns) for t in tables])
-        parts = [
-            _aligned_select(t.df, [F.col(ID), F.col(SRC), F.col(DST)], prop_types, "")
+        return _union_all([
+            t.df.select(F.col(ID), F.col(SRC), F.col(DST), *_aligned(t.df, prop_types, ""))
             for t in tables
-        ]
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+        ])
 
     def maybe_dedup(df: DataFrame) -> DataFrame:
         return df.dropDuplicates([ID]) if dedup_ids else df

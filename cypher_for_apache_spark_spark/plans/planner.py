@@ -20,6 +20,7 @@ from __future__ import annotations
 
 import itertools
 from dataclasses import replace as dc_replace
+from functools import reduce
 from typing import Dict, FrozenSet, List, Optional, Sequence, Tuple
 
 from py4j.protocol import Py4JJavaError
@@ -99,7 +100,10 @@ class Planner:
 
     # ------------------------------------------------------------------ utils
     def _u(self, var: str) -> str:
-        return f"{var}@{next(self._uid)}"
+        # F.col reads a dot as struct-field access and a backtick as
+        # quoting; an unaliased projection item is named by its text
+        # (`a.name`, `` `p.q` ``)
+        return f"{var.replace('.', '_').replace('`', '_')}@{next(self._uid)}"
 
     def _auto_salt_factor(self, rdf, near_col: str, memo_key) -> int:
         """Salt factor for an expand (0 = plain join): for rel frames whose
@@ -1289,9 +1293,11 @@ class Planner:
                 )
             return rec
         start = 0
-        trip = self.try_triplet_scan(rec, nodes, rels, rel_ids) if rels else None
-        if trip is None and rels:
-            trip = self.try_node_rel_scan(rec, nodes, rels, rel_ids)
+        trip = None
+        if rels and self.graph is not None:
+            trip = self.try_triplet_scan(rec, nodes, rels, rel_ids) or self.try_node_rel_scan(
+                rec, nodes, rels, rel_ids
+            )
         if trip is not None:
             rec, prev_var = trip
             start = 1
@@ -1673,6 +1679,7 @@ class Planner:
         anti-joins the visited (source, node) set, broadcast-gated on the
         summed round probes; a small step side broadcasts for the whole
         loop."""
+        n_prev = None
         if step is not None and (hi is None or hi > 1):
             # joined once per BFS round — materialize or Spark rescans
             # (checkpoint + size probe fused into one job)
@@ -1684,12 +1691,9 @@ class Planner:
             # step frame in every one of its hi rounds (plan-verified:
             # 2 exchanges/round -> 0)
             step = maybe_broadcast(step, n_step, loop_invariant=True)
-
-        if hi is None or hi > 1:
-            # the count seeds the per-round measured-width exchanges below
+            # the count seeds the per-round measured-width exchanges below;
+            # without a step the sources only feed the zero-length level
             srcs, n_prev = materialize_count(srcs)
-        else:
-            n_prev = None
         zero = srcs.select(
             src_c,
             F.array().cast("array<long>").alias(ids_col),
@@ -2118,87 +2122,15 @@ class Planner:
         """Recognized-pattern scan: serve the pattern's first
         ``(a)-[r]->(b)`` element from a registered pre-joined triplet table
         with zero joins (reference: TripletPattern, Pattern.scala:182 +
-        replaceScansWithRecognizedPatterns, LogicalOptimizer.scala:67-114).
-        Returns None — and the ordinary scan+join path runs — unless the
-        triplets provably cover every relationship table the element could
-        touch and all three variables are fresh."""
-        g = self.graph
-        if g is None or not getattr(g, "triplet_tables", None):
-            return None
+        replaceScansWithRecognizedPatterns, LogicalOptimizer.scala:67-114)."""
         npat0, rel, npat1 = nodes[0], rels[0], nodes[1]
-        if rel.var_length is not None:
-            return None
-        named = [v for v in (npat0.var, rel.var, npat1.var) if v is not None]
-        if len(set(named)) != len(named):  # (a)-[r]->(a) needs the join path
-            return None
-        if any(v in rec.header for v in named):
-            return None
-        a_var = npat0.var or self._anon()
-        r_var = rel.var or self._anon()
-        b_var = npat1.var or self._anon()
-        ua, ur, ub = self._u(a_var), self._u(r_var), self._u(b_var)
-        df = g.scan_triplets(
-            rel.types,
-            npat0.labels,
-            npat1.labels,
-            rel.direction,
-            left_id=f"{ua}#id",
-            left_labels_col=f"{ua}#labels",
-            left_prefix=f"{ua}#p#",
-            rel_id=f"{ur}#id",
-            rel_src=f"{ur}#src",
-            rel_dst=f"{ur}#dst",
-            rel_type_col=f"{ur}#type",
-            rel_prefix=f"{ur}#p#",
-            right_id=f"{ub}#id",
-            right_labels_col=f"{ub}#labels",
-            right_prefix=f"{ub}#p#",
+        bound = self._bind_prejoined(
+            rec, self.graph.triplet_tables, npat0, rel, npat1, rel.direction, True, rel_ids
         )
-        if df is None:
+        if bound is None:
             return None
-
-        def node_meta(u: str, npat) -> EntityMeta:
-            prefix = f"{u}#p#"
-            return EntityMeta(
-                kind="node",
-                id_col=f"{u}#id",
-                labels_col=f"{u}#labels",
-                prop_cols={c[len(prefix):]: c for c in df.columns if c.startswith(prefix)},
-                labels=frozenset(npat.labels),
-                combos=frozenset(t.labels for t in g.matching_node_tables(npat.labels)),
-            )
-
-        rprefix = f"{ur}#p#"
-        ameta = node_meta(ua, npat0)
-        bmeta = node_meta(ub, npat1)
-        rmeta = EntityMeta(
-            kind="rel",
-            id_col=f"{ur}#id",
-            src_col=f"{ur}#src",
-            dst_col=f"{ur}#dst",
-            type_col=f"{ur}#type",
-            prop_cols={c[len(rprefix):]: c for c in df.columns if c.startswith(rprefix)},
-            types=frozenset(rel.types) if rel.types else frozenset(g.rel_tables),
-            src_var=a_var if rel.direction == "out" else (b_var if rel.direction == "in" else None),
-            dst_var=b_var if rel.direction == "out" else (a_var if rel.direction == "in" else None),
-            src_var_id_col=ameta.id_col if rel.direction == "out" else (bmeta.id_col if rel.direction == "in" else None),
-            dst_var_id_col=bmeta.id_col if rel.direction == "out" else (ameta.id_col if rel.direction == "in" else None),
-        )
-        # inline property filters: self-contained ones right on the scan
-        # (pushdown), variable-referencing ones after the header is merged
-        complex_items = []
-        for meta, pat in ((ameta, npat0), (rmeta, rel), (bmeta, npat1)):
-            simple, complex_ = self._split_props(pat.props)
-            df = self._filter_prop_items(df, meta, simple, {})
-            complex_items.append((meta, complex_))
-        header = dict(rec.header)
-        header[a_var], header[r_var], header[b_var] = ameta, rmeta, bmeta
-        out_df = df if rec.df is None else rec.df.crossJoin(df)
-        for meta, items in complex_items:
-            if items:
-                out_df = self._filter_prop_items(out_df, meta, items, header)
-        rel_ids.append((rmeta.id_col, rmeta.types, False))
-        return Record(out_df, header), b_var
+        rec, (_, _, b_var) = bound
+        return rec, b_var
 
     def try_node_rel_scan(
         self, rec: Record, nodes, rels, rel_ids
@@ -2206,89 +2138,130 @@ class Planner:
         """NodeRelPattern scan (Pattern.scala:159): serve (source node +
         relationship) of the pattern's first element from one pre-joined
         table, joining only the far node — one join instead of two. Fires
-        for fixed directions when the full triplet path declined; the
-        packed node and the relationship must be fresh variables."""
-        g = self.graph
-        if g is None or not getattr(g, "node_rel_tables", None):
-            return None
+        for fixed directions when the full triplet path declined."""
         npat0, rel, npat1 = nodes[0], rels[0], nodes[1]
-        if rel.var_length is not None or rel.direction == "both":
+        if rel.direction == "both":
             return None
         # the packed node is the edge SOURCE: pattern-left for `out`,
         # pattern-right for `in` (the pattern is served flipped)
         packed_pat, far_pat = (npat0, npat1) if rel.direction == "out" else (npat1, npat0)
-        named = [v for v in (npat0.var, rel.var, npat1.var) if v is not None]
-        if len(set(named)) != len(named):
-            return None
-        if any(v in rec.header for v in named):
-            return None
         # the far node joins through _expand_bound_rel, whose unbound-target
         # path can't defer variable-referencing inline props
         if self._split_props(far_pat.props)[1]:
             return None
-        packed_var = packed_pat.var or self._anon()
-        r_var = rel.var or self._anon()
-        un, ur = self._u(packed_var), self._u(r_var)
-        far_static = set(far_pat.labels)
-        df = g.scan_node_rels(
+        bound = self._bind_prejoined(
+            rec, self.graph.node_rel_tables, packed_pat, rel, far_pat, "out", False, rel_ids
+        )
+        if bound is None:
+            return None
+        packed_rec, (packed_var, r_var) = bound
+        flipped = dc_replace(rel, var=r_var, direction="out")
+        out_rec, far_var = self._expand_bound_rel(packed_rec, packed_var, flipped, far_pat)
+        return out_rec, (far_var if rel.direction == "out" else packed_var)
+
+    def _bind_prejoined(
+        self, rec: Record, tables, left, rel, right, direction: str, scans_right: bool, rel_ids
+    ) -> Optional[Tuple[Record, List[str]]]:
+        """Bind a ``(left)-[rel]-(right)`` pattern element's variables from
+        one scan of ``tables``, a registry of pre-joined tables (reference:
+        Pattern.findMapping + replaceScansWithRecognizedPatterns, SURVEY.md
+        §1.1, §4.1), oriented by ``direction``. A triplet table binds all
+        three (``scans_right``); a node-rel table binds ``left`` and
+        ``rel``, and ``right``'s labels only prune. Self-contained inline
+        properties filter the scan (pushdown), variable-referencing ones
+        the record after the cross join. Returns the record and the bound
+        variables, or None — and the ordinary scan+join path runs — unless
+        every variable is fresh and the tables provably cover every
+        relationship table the element could touch."""
+        named = [p.var for p in (left, rel, right) if p.var is not None]
+        if (
+            not tables
+            or rel.var_length is not None
+            or len(set(named)) != len(named)  # (a)-[r]->(a) needs the join path
+            or any(v in rec.header for v in named)
+        ):
+            return None
+        pats = [left, rel, right] if scans_right else [left, rel]
+        kinds = ["node", "rel", "node"]
+        names = [p.var or self._anon() for p in pats]
+        us = [self._u(v) for v in names]
+        df = self.graph.scan_prejoined(
+            tables,
             rel.types,
-            packed_pat.labels,
-            far_static,
-            "src",
-            node_id=f"{un}#id",
-            node_labels_col=f"{un}#labels",
-            node_prefix=f"{un}#p#",
-            rel_id=f"{ur}#id",
-            rel_src=f"{ur}#src",
-            rel_dst=f"{ur}#dst",
-            rel_type_col=f"{ur}#type",
-            rel_prefix=f"{ur}#p#",
+            left.labels,
+            right.labels,
+            direction,
+            *[self._scan_cols(u, k) for u, k in zip(us, kinds)],
         )
         if df is None:
             return None
-        nprefix, rprefix = f"{un}#p#", f"{ur}#p#"
-        nmeta = EntityMeta(
-            kind="node",
-            id_col=f"{un}#id",
-            labels_col=f"{un}#labels",
-            prop_cols={c[len(nprefix):]: c for c in df.columns if c.startswith(nprefix)},
-            labels=frozenset(packed_pat.labels),
-            combos=frozenset(t.labels for t in g.matching_node_tables(packed_pat.labels)),
-        )
-        rmeta = EntityMeta(
-            kind="rel",
-            id_col=f"{ur}#id",
-            src_col=f"{ur}#src",
-            dst_col=f"{ur}#dst",
-            type_col=f"{ur}#type",
-            prop_cols={c[len(rprefix):]: c for c in df.columns if c.startswith(rprefix)},
-            types=frozenset(rel.types) if rel.types else frozenset(g.rel_tables),
-        )
+        metas = [
+            self._scan_meta(k, u, df, p.types if k == "rel" else p.labels)
+            for u, k, p in zip(us, kinds, pats)
+        ]
+        if direction != "both":
+            # directed: record which bound node is the edge's src / dst
+            ends = [(names[0], metas[0].id_col), (None, None)]
+            if scans_right:
+                ends[1] = (names[2], metas[2].id_col)
+            (sv, sc), (dv, dc) = ends if direction == "out" else ends[::-1]
+            metas[1] = dc_replace(
+                metas[1], src_var=sv, dst_var=dv, src_var_id_col=sc, dst_var_id_col=dc
+            )
         complex_items = []
-        for meta, pat in ((nmeta, packed_pat), (rmeta, rel)):
+        for meta, pat in zip(metas, pats):
             simple, complex_ = self._split_props(pat.props)
             df = self._filter_prop_items(df, meta, simple, {})
             complex_items.append((meta, complex_))
         header = dict(rec.header)
-        header[packed_var], header[r_var] = nmeta, rmeta
+        header.update(zip(names, metas))
         out_df = df if rec.df is None else rec.df.crossJoin(df)
         for meta, items in complex_items:
             if items:
                 out_df = self._filter_prop_items(out_df, meta, items, header)
-        packed_rec = Record(out_df, header)
-        # join the far node through the bound-relationship path, flipping
-        # the pattern when the packed node is the right side
-        from dataclasses import replace as _replace
+        rel_ids.append((metas[1].id_col, metas[1].types, False))
+        return Record(out_df, header), names
 
-        flipped = _replace(rel, var=r_var, direction="out")
-        out_rec, far_var = self._expand_bound_rel(packed_rec, packed_var, flipped, far_pat)
-        rel_ids.append((rmeta.id_col, rmeta.types, False))
-        return out_rec, (far_var if rel.direction == "out" else packed_var)
+    @staticmethod
+    def _scan_cols(u: str, kind: str) -> Tuple[str, ...]:
+        """Physical columns a scan names after ``u``: a node's (id, labels,
+        property prefix), a rel's (id, src, dst, type, property prefix)."""
+        own = ("id", "labels") if kind == "node" else ("id", "src", "dst", "type")
+        return tuple(f"{u}#{c}" for c in own) + (f"{u}#p#",)
+
+    def _scan_meta(
+        self, kind: str, u: str, df: Optional[DataFrame], names: Sequence[str]
+    ) -> EntityMeta:
+        """The EntityMeta of a node (``names``: its labels) or rel
+        (``names``: its types, all when empty) scanned into ``df`` under
+        ``_scan_cols(u, kind)``."""
+        *cols, prefix = self._scan_cols(u, kind)
+        prop_cols = {
+            c[len(prefix):]: c for c in (df.columns if df is not None else ()) if c.startswith(prefix)
+        }
+        if kind == "node":
+            return EntityMeta(
+                kind="node",
+                id_col=cols[0],
+                labels_col=cols[1],
+                prop_cols=prop_cols,
+                labels=frozenset(names),
+                combos=frozenset(t.labels for t in self.graph.matching_node_tables(names)),
+            )
+        return EntityMeta(
+            kind="rel",
+            id_col=cols[0],
+            src_col=cols[1],
+            dst_col=cols[2],
+            type_col=cols[3],
+            prop_cols=prop_cols,
+            types=frozenset(names) if names else frozenset(self.graph.rel_tables),
+        )
 
     # -- node scan / binding -------------------------------------------------
     def scan_node_record(self, var: str, labels: Sequence[str]) -> Tuple[DataFrame, EntityMeta]:
         u = self._u(var)
-        id_col, labels_col, prefix = f"{u}#id", f"{u}#labels", f"{u}#p#"
+        id_col, labels_col, prefix = self._scan_cols(u, "node")
         if self.graph is None:
             raise CypherPlanningError("no graph in scope for MATCH")
         df = self.graph.scan_nodes(
@@ -2304,18 +2277,7 @@ class Planner:
                 ]
             )
             df = local_frame(self.spark, [], schema)
-        prop_cols = {c[len(prefix):]: c for c in df.columns if c.startswith(prefix)}
-        meta = EntityMeta(
-            kind="node",
-            id_col=id_col,
-            labels_col=labels_col,
-            prop_cols=prop_cols,
-            labels=frozenset(labels),
-            combos=frozenset(
-                t.labels for t in self.graph.matching_node_tables(labels)
-            ),
-        )
-        return df, meta
+        return df, self._scan_meta("node", u, df, labels)
 
     @staticmethod
     def _split_props(props: Optional[A.MapLit]):
@@ -2372,11 +2334,14 @@ class Planner:
 
     def _filter_prop_items(self, df: DataFrame, meta: EntityMeta, items, scope: Header) -> DataFrame:
         ctx = CompileCtx(df, scope, self.params)
+        eqs = []
         for key, val_expr in items:
             c = meta.prop_cols.get(key)
             target = F.col(c) if c is not None else F.lit(None)
-            df = df.filter(target == compile_expr(val_expr, ctx))
-        return df
+            eqs.append(target == compile_expr(val_expr, ctx))
+        # one filter, nested e1 AND (e2 AND e3) as Catalyst's CombineFilters
+        # folds a filter per key
+        return df.filter(reduce(lambda rest, eq: eq & rest, reversed(eqs))) if eqs else df
 
     def ensure_node(self, rec: Record, npat: A.NodePat) -> Tuple[Record, str]:
         var = npat.var or self._anon()
@@ -2424,13 +2389,7 @@ class Planner:
         prefer_layout: str = "src",
     ) -> Tuple[Optional[DataFrame], EntityMeta]:
         u = self._u(var)
-        idc, srcc, dstc, typec, prefix = (
-            f"{u}#id",
-            f"{u}#src",
-            f"{u}#dst",
-            f"{u}#type",
-            f"{u}#p#",
-        )
+        idc, srcc, dstc, typec, prefix = self._scan_cols(u, "rel")
         df = self.graph.scan_rels(
             types,
             out_id=idc,
@@ -2442,20 +2401,7 @@ class Planner:
             dst_labels=dst_labels,
             prefer_layout=prefer_layout,
         )
-        prop_cols = (
-            {c[len(prefix):]: c for c in df.columns if c.startswith(prefix)} if df is not None else {}
-        )
-        known = frozenset(types) if types else frozenset(self.graph.rel_tables)
-        meta = EntityMeta(
-            kind="rel",
-            id_col=idc,
-            src_col=srcc,
-            dst_col=dstc,
-            type_col=typec,
-            prop_cols=prop_cols,
-            types=known,
-        )
-        return df, meta
+        return df, self._scan_meta("rel", u, df, types)
 
     def _empty_like(
         self,

@@ -145,3 +145,19 @@ def test_shortest_path_orders_checkpoints_no_round(spark, monkeypatch):
     monkeypatch.setattr(planner_mod, "materialize_count", spy)
     assert warm_jobs(spark, "shortest_path_orders") <= 7
     assert rounds == []
+
+
+def test_no_relationship_table_checkpoints_nothing(g, monkeypatch):
+    """Without a relationship table of the pattern's types the sources only
+    feed the zero-length level, so planning checkpoints nothing."""
+    calls = []
+    real = planner_mod.materialize_count
+
+    def spy(df):
+        calls.append(df)
+        return real(df)
+
+    monkeypatch.setattr(planner_mod, "materialize_count", spy)
+    res = g.cypher("MATCH p = shortestPath((a:N)-[:X*1..3]->(b:N)) RETURN length(p) AS n")
+    assert res.df.collect() == []
+    assert calls == []

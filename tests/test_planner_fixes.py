@@ -184,3 +184,29 @@ def test_endnode_prop_rejects_rebound_endpoint_name(team_graph):
             "MATCH (a:Person)-[r:KNOWS]->(b:Person) WITH r, a AS b "
             "RETURN endNode(r).name AS e"
         ).df.collect()
+
+
+# -- an unaliased property item is named by its text, `n.name` ----------------
+
+@pytest.mark.parametrize(
+    "query, column, rows",
+    [
+        ("MATCH (n:Person) RETURN n.name", "n.name",
+         ["Donald", "Martin", "Mats", "Max", "Stefan"]),
+        ("MATCH (n:Person) WITH n RETURN n.name ORDER BY n.name", "n.name",
+         ["Donald", "Martin", "Mats", "Max", "Stefan"]),
+        ("MATCH (n:Person) RETURN DISTINCT n.luckyNumber", "n.luckyNumber",
+         [8, 23, 42, 1337]),
+    ],
+)
+def test_unaliased_property_projection(team_graph, query, column, rows):
+    df = team_graph.cypher(query).df
+    assert df.columns == [column]
+    got = [r[0] for r in df.collect()]
+    assert (got if "ORDER BY" in query else sorted(got)) == rows
+
+
+def test_unaliased_property_grouping_key(team_graph):
+    df = team_graph.cypher("MATCH (n:Person) RETURN n.luckyNumber, count(*)").df
+    assert df.columns == ["n.luckyNumber", "count(*)"]
+    assert sorted(tuple(r) for r in df.collect()) == [(8, 2), (23, 1), (42, 1), (1337, 1)]

@@ -210,3 +210,80 @@ def test_node_rel_undirected_falls_back(nr_graphs):
     nr, plain = nr_graphs
     q = "MATCH (a:Person)-[r:KNOWS]-(b:Person) RETURN a.name AS an, b.name AS bn"
     assert _rows(nr.cypher(q)) == _rows(plain.cypher(q))
+
+
+@pytest.fixture(scope="module")
+def merged_graphs(session, spark):
+    """(triplet graph, node-rel graph, plain graph) over one relationship
+    type stored in two tables split by endpoint labels, whose properties
+    need the scan's merged projection: ``times`` is int in one table and
+    long in the other, ``score`` long and double (merged: double), and
+    ``note`` exists in one table only. The far node's tables differ too
+    (Town has no ``elevation``)."""
+    people = spark.createDataFrame(
+        [(0, "Ada", 36), (1, "Bo", 22)], "id long, name string, age int"
+    )
+    cities = spark.createDataFrame(
+        [(10, "Alp", 3000)], "id long, name string, elevation long"
+    )
+    towns = spark.createDataFrame([(20, "Dell")], "id long, name string")
+    to_city = spark.createDataFrame(
+        [(100, 0, 10, 2, 7, "first"), (101, 1, 10, 1, 3, None)],
+        "id long, src long, dst long, times int, score long, note string",
+    )
+    to_town = spark.createDataFrame(
+        [(102, 0, 20, 5, 1.5), (103, 1, 20, 3, 2.0)],
+        "id long, src long, dst long, times long, score double",
+    )
+    nodes = [
+        NodeTable.create(["Person"], people),
+        NodeTable.create(["City"], cities),
+        NodeTable.create(["Town"], towns),
+    ]
+    rels = [
+        RelationshipTable.create("VISITED", to_city, src_labels=["Person"], dst_labels=["City"]),
+        RelationshipTable.create("VISITED", to_town, src_labels=["Person"], dst_labels=["Town"]),
+    ]
+    from cypher_for_apache_spark_spark.graph import NodeRelTable, build_node_rel_frame
+
+    graphs = []
+    for kind in ("triplet", "node_rel", None):
+        g = PropertyGraph(nodes, rels)
+        g._session = session
+        for rt in g.all_rel_tables():
+            if kind == "triplet":
+                frame = build_triplet_frame(g, rt).localCheckpoint()
+                g.add_triplet_table(
+                    TripletTable.create(rt.rel_type, frame, rt.src_labels, rt.dst_labels)
+                )
+            elif kind == "node_rel":
+                frame = build_node_rel_frame(g, rt).localCheckpoint()
+                g.add_node_rel_table(
+                    NodeRelTable.create(rt.rel_type, frame, rt.src_labels, rt.dst_labels)
+                )
+        graphs.append(g)
+    return tuple(graphs)
+
+
+_MERGED_RETURN = """RETURN a, r, b, r.times AS times, r.score AS score,
+                           r.note AS note, b.elevation AS elevation"""
+MERGED_QUERIES = [
+    "MATCH (a:Person)-[r:VISITED]->(b) " + _MERGED_RETURN,
+    "MATCH (b)<-[r:VISITED]-(a:Person) " + _MERGED_RETURN,
+    "MATCH (a)-[r:VISITED]-(b) " + _MERGED_RETURN,
+]
+
+
+@pytest.mark.parametrize("query", MERGED_QUERIES)
+def test_merged_projection_matches_join_path(merged_graphs, query):
+    """Rows and column types, entity structs included, equal the join
+    path's for both kinds of pre-joined table."""
+    *prejoined, plain = merged_graphs
+    want = plain.cypher(query).df
+    for g in prejoined:
+        got = g.cypher(query).df
+        assert got.schema == want.schema
+        assert sorted(map(repr, got.collect())) == sorted(map(repr, want.collect()))
+    assert {f.name: f.dataType.simpleString() for f in want.schema.fields[3:]} == {
+        "times": "bigint", "score": "double", "note": "string", "elevation": "bigint"
+    }
