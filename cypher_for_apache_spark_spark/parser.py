@@ -90,10 +90,13 @@ def tokenize(src: str) -> List[Token]:
             i = j + 1
             continue
         if c == "`":
+            # a doubled backtick inside the quotes is one literal backtick
             j = src.find("`", i + 1)
+            while 0 <= j < n - 1 and src[j + 1] == "`":
+                j = src.find("`", j + 2)
             if j < 0:
                 raise CypherSyntaxError("unterminated backtick identifier")
-            toks.append(Token("ident", src[i + 1 : j], i, j + 1))
+            toks.append(Token("ident", src[i + 1 : j].replace("``", "`"), i, j + 1))
             i = j + 1
             continue
         if c.isdigit() or (c == "." and i + 1 < n and src[i + 1].isdigit()):

@@ -2,7 +2,11 @@
 (mirrors morpheus-testing acceptance suites: MatchTests, ExpressionTests,
 AggregationTests... — SURVEY.md §5 layer 2). Bag (multiset) semantics."""
 
+import pytest
+
 from conftest import bag
+
+from cypher_for_apache_spark_spark.plans.planner import CypherPlanningError
 
 
 def run(graph, q, **params):
@@ -203,6 +207,35 @@ def test_var_length_bounded(team_graph):
         "MATCH (a {name: 'Stefan'})-[rs:KNOWS*2..2]->(b) RETURN b.name AS name, size(rs) AS n",
     )
     assert r.to_maps() == [{"name": "Martin", "n": 2}]
+
+
+@pytest.mark.parametrize(
+    "target, names",
+    [
+        # labels the bound target variable does not carry statically
+        ("b:German", ["Martin", "Max"]),
+        # an inline map, here referencing another variable
+        ("b {luckyNumber: a.luckyNumber - 34}", ["Max"]),
+    ],
+)
+def test_var_length_bound_target_meets_pattern(team_graph, target, names):
+    tail = (
+        f"MATCH (a:German {{name: 'Stefan'}})-[:KNOWS*1..3]->({target}) "
+        "RETURN b.name AS name"
+    )
+    bound = run(team_graph, f"MATCH (b:Person) {tail}")
+    fresh = run(team_graph, tail)
+    assert sorted(m["name"] for m in bound.to_maps()) == names
+    assert sorted(m["name"] for m in fresh.to_maps()) == names
+
+
+def test_var_length_bound_target_must_be_node(team_graph):
+    with pytest.raises(CypherPlanningError):
+        run(
+            team_graph,
+            "MATCH ()-[r:KNOWS]->() WITH r "
+            "MATCH (a:German {name: 'Stefan'})-[:KNOWS*1..2]->(r) RETURN a",
+        )
 
 
 def test_labels_function(team_graph):

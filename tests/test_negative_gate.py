@@ -38,7 +38,7 @@ BLACKLISTED = [
     "MATCH p = (a)-[:KNOWS]->()-[:KNOWS*1..2]->(b) RETURN p",
     # shortestPath / allShortestPaths: bounded, unbounded AND minimum
     # length >= 2 forms are all supported since round 8
-    # (planner._plan_shortest_path / _minlen_shortest_levels) — only these
+    # (planner._plan_shortest_path) — only these
     # structurally unsupported variants must still fail cleanly
     "MATCH shortestPath((a)-[:KNOWS]->(b)) RETURN a",
     "MATCH shortestPath((a)-[*1..2]->()-[*1..2]->(b)) RETURN a",

@@ -147,3 +147,12 @@ def test_return_item_default_name():
     q = parse("MATCH (n) RETURN n.name, count(*)")
     assert q.clauses[1].items[0][1] == "n.name"
     assert q.clauses[1].items[1][1] == "count(*)"
+
+
+def test_doubled_backtick_in_quoted_name():
+    q = parse("MATCH (`a``b`:`L``M`) RETURN `a``b`.name AS `x``y`, 1 AS ````")
+    node = q.clauses[0].parts[0].nodes[0]
+    assert node.var == "a`b" and node.labels == ["L`M"]
+    ret = q.clauses[1]
+    assert ret.items[0] == (A.Prop(A.Var("a`b"), "name"), "x`y")
+    assert ret.items[1][1] == "`"

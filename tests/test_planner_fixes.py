@@ -186,6 +186,58 @@ def test_endnode_prop_rejects_rebound_endpoint_name(team_graph):
         ).df.collect()
 
 
+def test_endnode_prop_through_rematched_rel(team_graph):
+    # the second MATCH reuses the bound r (Planner._expand_bound_rel)
+    r = team_graph.cypher(
+        "MATCH ()-[r:KNOWS]->() MATCH (a)-[r]->(b) "
+        "RETURN startNode(r).name AS s, endNode(r).name AS e ORDER BY s"
+    )
+    assert [(m["s"], m["e"]) for m in r.to_maps()] == [
+        ("Martin", "Max"), ("Mats", "Martin"), ("Stefan", "Mats"),
+    ]
+
+
+def test_endnode_prop_through_node_rel_table(session, spark):
+    # a node-rel table binds a and r at once; b joins through the bound r
+    from cypher_for_apache_spark_spark.graph import (
+        NodeRelTable, NodeTable, PropertyGraph, RelationshipTable,
+        build_node_rel_frame,
+    )
+
+    people = spark.createDataFrame([(0, "Ada"), (1, "Bo")], "id long, name string")
+    cities = spark.createDataFrame([(10, "Alp")], "id long, name string")
+    lives = spark.createDataFrame(
+        [(100, 0, 10), (101, 1, 10)], "id long, src long, dst long"
+    )
+    rt = RelationshipTable.create(
+        "LIVES_IN", lives, src_labels=["Person"], dst_labels=["City"]
+    )
+    g = PropertyGraph(
+        [NodeTable.create(["Person"], people), NodeTable.create(["City"], cities)], [rt]
+    )
+    g._session = session
+    g.add_node_rel_table(
+        NodeRelTable.create(
+            "LIVES_IN", build_node_rel_frame(g, rt), rt.src_labels, rt.dst_labels
+        )
+    )
+    r = g.cypher(
+        "MATCH (a:Person)-[r:LIVES_IN]->(b:City) "
+        "RETURN startNode(r).name AS s, endNode(r).name AS e ORDER BY s"
+    )
+    assert [(m["s"], m["e"]) for m in r.to_maps()] == [("Ada", "Alp"), ("Bo", "Alp")]
+
+
+# -- a doubled backtick in a quoted name is one literal backtick --------------
+
+def test_doubled_backtick_output_column(team_graph):
+    df = team_graph.cypher(
+        "MATCH (n:Swede) RETURN n.name AS `x``y`"
+    ).df
+    assert df.columns == ["x`y"]
+    assert [tuple(r) for r in df.collect()] == [("Mats",)]
+
+
 # -- an unaliased property item is named by its text, `n.name` ----------------
 
 @pytest.mark.parametrize(

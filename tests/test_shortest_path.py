@@ -199,6 +199,33 @@ def test_bound_target_variable(g):
     assert out == [("n3", 2), ("n5", 2)]
 
 
+@pytest.mark.parametrize(
+    "target, expected",
+    [
+        # a label no node has: the bound target must meet it too
+        ("b:M", []),
+        # an inline map referencing another variable
+        ("b {name: c.name}", [("n7", 3)]),
+    ],
+)
+def test_bound_target_meets_pattern(g, target, expected):
+    tail = (
+        f"MATCH p = shortestPath((a:N {{name:'n0'}})-[:E*1..4]->({target})) "
+        "RETURN b.name AS b, length(p) AS hops"
+    )
+    bound = rows(g, f"MATCH (c:N {{name:'n7'}}) MATCH (b:N) {tail}")
+    fresh = rows(g, f"MATCH (c:N {{name:'n7'}}) {tail}")
+    assert sorted(bound) == sorted(fresh) == expected
+
+
+def test_bound_target_must_be_node(g):
+    with pytest.raises(CypherPlanningError):
+        g.cypher(
+            "MATCH ()-[r:E]->() WITH r "
+            "MATCH shortestPath((a:N {name:'n0'})-[:E*1..2]->(r)) RETURN a"
+        )
+
+
 def test_optional_shortest_path_yields_null(g):
     out = rows(
         g,
@@ -251,7 +278,7 @@ def test_all_shortest_brute_force_cross_check(g):
     [
         # unbounded [*] / [*1..] shortestPath IS supported since round 7
         # (driver-paced BFS fixpoint) and minimum length >= 2 since round 8
-        # (_minlen_shortest_levels) — only these forms still gate
+        # (a filter over planner._trails) — only these forms still gate
         "MATCH shortestPath((a)-[:E]->(b)) RETURN a",
         "MATCH shortestPath((a)-[*1..2]->()-[*1..2]->(b)) RETURN a",
     ],
@@ -261,7 +288,7 @@ def test_unsupported_forms_fail_cleanly(g, q):
         g.cypher(q)
 
 
-# -- minimum length >= 2 (round 8, planner._minlen_shortest_levels) ---------
+# -- minimum length >= 2 (round 8, a per-pair filter over planner._trails) --
 
 
 def test_min_length_skips_shorter_hits(g):
