@@ -339,6 +339,9 @@ class PropertyGraph:
         # id(table) -> (table, row count), filled by element_rows; holding
         # the table keeps its id from being reused by another object
         self._element_rows: Dict[int, Tuple[object, int]] = {}
+        # (table ids, weight) -> (tables, pyarrow.Table), filled by
+        # driver_projection; the tables are held for the same reason
+        self._projections: Dict[Tuple[Tuple[int, ...], Optional[str]], Tuple[list, object]] = {}
 
     def add_triplet_table(self, tt: TripletTable) -> "PropertyGraph":
         """Register a pre-joined triplet for recognized-pattern scans."""
@@ -415,13 +418,34 @@ class PropertyGraph:
         """Total row count of some of this graph's element tables. Each
         table is counted by one Spark job the first time a plan asks for it
         and remembered on the graph, so loading a graph never counts and a
-        repeated query shape never counts again."""
+        repeated query shape never counts again (``driver_projection``
+        keeps the rows of a driver solve the same way)."""
         total = 0
         for t in tables:
             if id(t) not in self._element_rows:
                 self._element_rows[id(t)] = (t, t.df.count())
             total += self._element_rows[id(t)][1]
         return total
+
+    def driver_projection(self, rel_types: Iterable[str] = (), weight: Optional[str] = None):
+        """This graph's relationships of ``rel_types`` on the driver, as one
+        ``pyarrow.Table`` of ``src``, ``dst``, ``rid`` (the relationship id)
+        and, when ``weight`` names a property of those tables, ``w`` (that
+        property as a double, null read as 1.0). The first call for a set
+        of tables and a weight runs one collect job; the table is
+        remembered on the graph, keyed like ``element_rows`` on the tables
+        themselves plus ``weight``, so every later driver solve over them
+        collects nothing. Callers gate it on ``element_rows``, so it holds
+        no more rows than the broadcast gate admits."""
+        tables = self.matching_rel_tables(rel_types)
+        key = (tuple(id(t) for t in tables), weight)
+        if key not in self._projections:
+            e = self.scan_rels(rel_types, out_id="_eid")
+            cols = [F.col(SRC), F.col(DST), F.col("_eid").alias("rid")]
+            if weight is not None and weight in e.columns:
+                cols.append(F.coalesce(F.col(weight).cast("double"), F.lit(1.0)).alias("w"))
+            self._projections[key] = (tables, e.select(cols).toArrow())
+        return self._projections[key][1]
 
     def scan_nodes(
         self,

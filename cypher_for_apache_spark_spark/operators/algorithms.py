@@ -16,6 +16,7 @@ from typing import List, Optional
 import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame, Window, functions as F, types as T
+from pyspark.sql.pandas.types import from_arrow_type
 
 from cypher_for_apache_spark_spark.graph import PropertyGraph
 from cypher_for_apache_spark_spark.materialize import (
@@ -204,29 +205,31 @@ def connected_components(
 
 
 class _DriverEdges:
-    """An (src, dst) edge frame small enough to collect, on the driver:
-    one ``toArrow()`` action, then ``np.unique`` over both endpoint
-    columns and any ``extra_ids`` maps ids to dense indices. ``ids`` is
-    sorted, so index order is id order; ``src``, ``dst`` and ``extra`` are
-    index arrays, and ``cols`` holds the frame's other columns (a ``w``
-    weight, a relationship id) by name. ``frame`` returns numpy or Arrow
-    columns as a DataFrame with a declared schema through ``local_frame``.
-    Every driver-side solve goes through this, so the collect, the id
-    mapping and the Arrow round trip exist once."""
+    """(src, dst) edges already on the driver, as a ``pyarrow.Table``:
+    ``np.unique`` over both endpoint columns and any ``extra_ids`` maps
+    ids to dense indices. ``ids`` is sorted, so index order is id order;
+    ``src``, ``dst`` and ``extra`` are index arrays, and ``cols`` holds
+    the table's other columns (a ``w`` weight, a relationship id) by name.
+    ``frame`` returns numpy or Arrow columns as a DataFrame of ``spark``
+    with a declared schema through ``local_frame``. Every driver-side
+    solve goes through this, so the id mapping and the Arrow round trip
+    exist once; the edges come from a graph's ``driver_projection``
+    (``_graph_edges``) or from one ``toArrow()`` of a frame."""
 
-    def __init__(self, edges: DataFrame, extra_ids=()):
-        t = edges.toArrow()
-        src = t.column("src").to_numpy()
+    def __init__(self, spark, edges: pa.Table, extra_ids=()):
+        src = edges.column("src").to_numpy()
         self.ids, idx = np.unique(
             np.concatenate(
-                [src, t.column("dst").to_numpy(), np.asarray(extra_ids, dtype=src.dtype)]
+                [src, edges.column("dst").to_numpy(), np.asarray(extra_ids, dtype=src.dtype)]
             ),
             return_inverse=True,
         )
         n = len(src)
         self.src, self.dst, self.extra = idx[:n], idx[n : 2 * n], idx[2 * n :]
-        self.cols = {c: t.column(c).to_numpy() for c in t.column_names if c not in ("src", "dst")}
-        self.spark = edges.sparkSession
+        self.cols = {
+            c: edges.column(c).to_numpy() for c in edges.column_names if c not in ("src", "dst")
+        }
+        self.spark = spark
 
     def frame(self, schema, **columns) -> DataFrame:
         return _local_frame(self.spark, pa.table(columns), schema)
@@ -236,10 +239,36 @@ def _fits_driver(graph: PropertyGraph, rel_types) -> bool:
     """Whether a loop over ``graph``'s relationships of ``rel_types`` is
     solved on the driver: their measured row count is non-zero and within
     the broadcast gate (``broadcastable``). ``element_rows`` counts each
-    table once per graph, so only a graph's first call runs count jobs.
-    ``LARGE_REGIME`` (gate 0) sends every loop to its Spark rounds."""
+    table once per graph, so only a graph's first call runs count jobs,
+    and the solve reads the relationships from the graph's
+    ``driver_projection``, collected on its first solve over them.
+    ``LARGE_REGIME`` (gate 0) sends every loop to its Spark rounds, so it
+    never fills the projection."""
     n = graph.element_rows(graph.matching_rel_tables(rel_types))
     return 0 < n and _broadcastable(n)
+
+
+def _hops(edges: pa.Table, direction: str) -> pa.Table:
+    """``edges``' (src, dst, ...) rows oriented hop-wise: ``out`` as
+    stored, ``in`` swapped, otherwise both orientations concatenated
+    (``_mirror``'s rows)."""
+    if direction == "out":
+        return edges
+    names = edges.column_names
+    back = edges.rename_columns(["dst", "src", *names[2:]]).select(names)
+    if direction == "in":
+        return back
+    # one side's column may be declared non-null and the other not
+    return pa.concat_tables([edges, back], promote_options="default")
+
+
+def _graph_edges(graph: PropertyGraph, rel_types, direction="out", weight=None, extra_ids=()):
+    """``_DriverEdges`` of ``graph``'s relationships of ``rel_types`` from
+    its ``driver_projection``, oriented by ``direction`` (``_hops``); the
+    caller has checked ``_fits_driver``."""
+    spark = graph.matching_rel_tables(rel_types)[0].df.sparkSession
+    edges = _hops(graph.driver_projection(rel_types, weight), direction)
+    return _DriverEdges(spark, edges, extra_ids)
 
 
 def _csr(n: int, key, *cols):
@@ -318,16 +347,17 @@ def _peel_on_driver(g: _DriverEdges, k: int, waves: int):
     return alive & (deg >= k), deg
 
 
-def _trails_on_driver(step: DataFrame, sources: DataFrame, lo: int, hi, single: bool, names):
+def _trails_on_driver(hops: pa.Table, sources: DataFrame, lo: int, hi, single: bool, names):
     """The per-path shortestPath / allShortestPaths rounds of
     ``Planner._plan_shortest_path`` (minimum length ``lo`` 0 or 1, at most
     ``hi`` hops, ``None``: until the frontier drains) in numpy, round for
     round: a frame of ``(src, ids, end)`` rows named ``names``, one per
     shortest trail from an id of ``sources`` (its only column) over the
-    hop-oriented ``step`` (_near, _far, _rid); None when they do not fit
-    the driver.
+    hop-oriented relationships ``hops`` (src, dst, rid) already on the
+    driver; None when they do not fit the driver.
 
-    One collect of each frame (``_DriverEdges``). A round expands every
+    One collect of the distinct sources (``_DriverEdges`` maps them with
+    the relationships). A round expands every
     frontier row over the CSR rows of its end node, drops the rows whose
     relationship id is already in their list (trail semantics), keeps in
     ``single`` mode the lexicographically least list per (src, end) pair
@@ -340,12 +370,9 @@ def _trails_on_driver(step: DataFrame, sources: DataFrame, lo: int, hi, single: 
     many pairs, or long paths, over few edges cannot exhaust the driver's
     memory."""
     seeds = sources.toArrow().column(0).drop_null().to_numpy()
-    g = _DriverEdges(
-        step.select(F.col("_near").alias("src"), F.col("_far").alias("dst"), "_rid"),
-        extra_ids=seeds,
-    )
+    g = _DriverEdges(sources.sparkSession, hops, extra_ids=seeds)
     n = len(g.ids)
-    start, far, rid = _csr(n, g.src, g.dst, g.cols["_rid"])
+    start, far, rid = _csr(n, g.src, g.dst, g.cols["rid"])
     f_src = f_end = np.unique(g.extra)
     f_ids = np.empty((len(f_src), 0), dtype=rid.dtype)
     levels = [(f_src, f_ids, f_end) if lo == 0 else (f_src[:0], f_ids[:0], f_end[:0])]
@@ -379,11 +406,11 @@ def _trails_on_driver(step: DataFrame, sources: DataFrame, lo: int, hi, single: 
         np.concatenate([m.ravel() for m in lists]),
     )
     src_c, ids_c, end_c = names
-    node = step.schema["_near"].dataType
+    node = from_arrow_type(hops.schema.field("src").type)
     schema = T.StructType(
         [
             T.StructField(src_c, node),
-            T.StructField(ids_c, T.ArrayType(step.schema["_rid"].dataType)),
+            T.StructField(ids_c, T.ArrayType(from_arrow_type(hops.schema.field("rid").type))),
             T.StructField(end_c, node),
         ]
     )
@@ -395,7 +422,8 @@ def _trails_on_driver(step: DataFrame, sources: DataFrame, lo: int, hi, single: 
 
 def _components_on_driver(edges: DataFrame):
     """(id, comp) over a canonical (src, dst) edge frame small enough to
-    collect (``_DriverEdges``), solved in numpy, where comp is the
+    collect (one ``toArrow()`` into ``_DriverEdges``), solved in numpy,
+    where comp is the
     minimum id of each component; returns ``(frame, rows)``.
 
     The dense indices sort like the ids, so the minimum index of a
@@ -410,7 +438,7 @@ def _components_on_driver(edges: DataFrame):
     core) the hooking took 5 iterations and 0.19 s of CPU after a 0.25 s
     ``np.unique``; min-label propagation with a pointer jump per iteration
     took 20 iterations and 0.51 s."""
-    g = _DriverEdges(edges)
+    g = _DriverEdges(edges.sparkSession, edges.toArrow())
     a, b = g.src, g.dst
     lbl = np.arange(len(g.ids))
     while len(a):
@@ -599,9 +627,7 @@ def bfs_distances(
     work is proportional to the frontier, never the visited set.
     """
     rounds = itertools.count() if max_hops is None else range(max_hops)
-    dist = _relax(
-        graph, _edges(graph, rel_types, undirected=undirected), source_ids, rel_types, rounds
-    )
+    dist = _relax(graph, source_ids, rel_types, rounds, undirected=undirected)
     return dist.select("id", F.col("dist").cast("long").alias("dist"))
 
 
@@ -671,9 +697,10 @@ def k_core(
     vertices that are alive with degree >= k after the last wave.
 
     When the graph's measured edge count fits the broadcast gate
-    (``_fits_driver``), one collect (``_DriverEdges``) and a numpy kernel
-    (``_peel_on_driver``) replay the waves on the driver, so a call runs
-    one Spark job instead of one or more per wave.
+    (``_fits_driver``), a numpy kernel (``_peel_on_driver``) replays the
+    waves on the driver over the graph's ``driver_projection``
+    (``_graph_edges``), so the graph's first call runs one collect job
+    and a later one runs none, instead of one or more per wave.
 
     Above the gate, the waves are Spark rounds. Work per round is
     proportional to remaining edges, which only shrinks; every per-round
@@ -689,13 +716,12 @@ def k_core(
     """
     if k < 1:
         raise ValueError("k must be >= 1")
-    e0 = _edges(graph, rel_types)
     if _fits_driver(graph, rel_types):
-        g = _DriverEdges(e0)
+        g = _graph_edges(graph, rel_types)
         keep, deg = _peel_on_driver(g, k, max_iterations)
         return g.frame("id long, degree long", id=g.ids[keep], degree=deg[keep])
     canon = (
-        e0.select(
+        _edges(graph, rel_types).select(
             F.least("src", "dst").alias("src"), F.greatest("src", "dst").alias("dst")
         )
         .filter(F.col("src") != F.col("dst"))
@@ -814,26 +840,25 @@ def sssp(
     when no node improves. ``max_iterations`` caps the rounds; a capped
     result holds the distances after the last round.
     """
-    return _relax(
-        graph,
-        _edges(graph, rel_types, weight=weight_prop),
-        sources,
-        rel_types,
-        range(max_iterations),
-    )
+    return _relax(graph, sources, rel_types, range(max_iterations), weight=weight_prop)
 
 
-def _relax(graph: PropertyGraph, e: DataFrame, sources, rel_types, rounds) -> DataFrame:
-    """(id long, dist double) of ``sssp``'s frontier loop over the edge
-    frame ``e`` of ``graph``'s ``rel_types`` relationships — (src, dst)
-    and, if present, a ``w`` weight column (else every edge weighs 1.0) —
-    from the ``sources`` ids, for at most the rounds of the iterable
-    ``rounds``. ``sssp`` and ``bfs_distances`` both run it.
+def _relax(
+    graph: PropertyGraph, sources, rel_types, rounds, weight=None, undirected=False
+) -> DataFrame:
+    """(id long, dist double) of ``sssp``'s frontier loop over ``graph``'s
+    ``rel_types`` relationships, both orientations of each when
+    ``undirected``, weighted by the ``weight`` property where the tables
+    have it (else every edge weighs 1.0), from the ``sources`` ids, for at
+    most the rounds of the iterable ``rounds``. ``sssp`` and
+    ``bfs_distances`` both run it.
 
     When the graph's measured edge count fits the broadcast gate
-    (``_fits_driver``), one collect (``_DriverEdges``) and a numpy kernel
-    over a CSR replay the rounds on the driver (``_relax_on_driver``), so
-    a call runs one Spark job instead of one per round.
+    (``_fits_driver``), a numpy kernel over a CSR replays the rounds on
+    the driver (``_relax_on_driver``) over the graph's
+    ``driver_projection`` (``_graph_edges``), so the graph's first call
+    runs one collect job and a later one runs none, instead of one per
+    round.
 
     Above the gate, the rounds are Spark jobs. Work per round is
     O(frontier-out-edges). ``settled`` is the union of the seeds and every
@@ -850,10 +875,13 @@ def _relax(graph: PropertyGraph, e: DataFrame, sources, rel_types, rounds) -> Da
     """
     seeds = sorted({int(s) for s in sources})
     if _fits_driver(graph, rel_types):
-        g = _DriverEdges(e, extra_ids=seeds)
+        g = _graph_edges(
+            graph, rel_types, "both" if undirected else "out", weight, extra_ids=seeds
+        )
         w = g.cols.get("w", np.ones(len(g.src)))
         dist, reached = _relax_on_driver(g, w, rounds)
         return g.frame("id long, dist double", id=g.ids[reached], dist=dist[reached])
+    e = _edges(graph, rel_types, undirected=undirected, weight=weight)
     w = F.col("w") if "w" in e.columns else F.lit(1.0)
     edges, _, drop_edges = _static_loop_frame(e, "src")
     frontier = _local_frame(

@@ -49,6 +49,7 @@ from cypher_for_apache_spark_spark.materialize import (
 )
 from cypher_for_apache_spark_spark.operators.algorithms import (
     _fits_driver,
+    _hops,
     _mirror,
     _trails_on_driver,
 )
@@ -1587,12 +1588,16 @@ class Planner:
 
         Where the rounds run: with minimum length 0 or 1, when the graph's
         measured relationship rows of the pattern's types fit the
-        broadcast gate (``algorithms._fits_driver``), the step and the
-        distinct sources are collected once and a numpy kernel replays the
-        rounds on the driver (``algorithms._trails_on_driver``); it gives
-        up, and the Spark rounds run, when the paths it would hold exceed
-        the same gate. Otherwise the rounds are unrolled into Spark joins
-        (``_shortest_rounds``). Minimum length >= 2 (which Neo4j itself
+        broadcast gate (``algorithms._fits_driver``), a numpy kernel
+        replays the rounds on the driver (``algorithms._trails_on_driver``)
+        from the distinct sources, collected per call, over the step's
+        relationships: the graph's ``driver_projection``, collected on its
+        first driver solve over those types, or, for a pattern with an
+        inline property map, the filtered step, collected per call (so the
+        projections a graph keeps are bounded by its schema, never by
+        parameter values). The kernel gives up, and the Spark rounds run,
+        when the paths it would hold exceed the same gate. Otherwise the
+        rounds are unrolled into Spark joins (``_shortest_rounds``). Minimum length >= 2 (which Neo4j itself
         rejects) has no sound per-pair pruning below ``lo``: its shortest
         trail per pair is a filter over all trails of length ``lo..hi``
         (``_trails``) — in 'all' mode the rows of the pair's least length,
@@ -1647,8 +1652,16 @@ class Planner:
                     .drop(least)
                 )
         elif step is not None and _fits_driver(self.graph, rel.types):
+            if rel.props is None:
+                hops = _hops(self.graph.driver_projection(rel.types), rel.direction)
+            else:
+                hops = step.select(
+                    F.col("_near").alias("src"),
+                    F.col("_far").alias("dst"),
+                    F.col("_rid").alias("rid"),
+                ).toArrow()
             allrows = _trails_on_driver(
-                step, srcs, lo, hi, single, (src_c, ids_col, end_c)
+                hops, srcs, lo, hi, single, (src_c, ids_col, end_c)
             )
         if allrows is None:
             allrows = self._shortest_rounds(
@@ -2612,8 +2625,15 @@ class Planner:
         chained joins, unbounded ones run a driver-paced fixpoint until
         the frontier drains. Termination is guaranteed on any finite graph
         because relationship isomorphism strictly grows the id list. An
-        empty range gives an empty frame of the same columns and types."""
+        empty range gives an empty frame of the same columns and types.
+
+        When the step is joined more than once, the starts are
+        materialized too: every level derives from them, so lazy starts
+        would recompute the incoming record's joins once per level."""
         start_c, ids_c, end_c = cols
+        joined = step is not None and (hi is None or hi >= max(lo, 1))
+        if joined and (hi is None or hi > 1):
+            starts, _ = materialize_count(starts)
         zsel = [
             F.col(start_c),
             F.array().cast("array<long>").alias(ids_c),
@@ -2624,7 +2644,7 @@ class Planner:
             zsel.append(F.array().cast("array<boolean>").alias(path[1]))
         zero = starts.select(*zsel)
         levels: List[DataFrame] = [zero] if lo == 0 else []
-        if step is not None and (hi is None or hi >= max(lo, 1)):
+        if joined:
             first, extend = self._trail_hops(step, hi, cols, path)
             cur = first(starts)
             if lo <= 1:

@@ -1,15 +1,19 @@
 """``sssp``, ``bfs_distances`` and ``k_core`` solve on the driver when the
 graph's measured edge count fits the broadcast gate.
 
-Each case runs the operator twice: by default, where the edges are
-collected once (``_DriverEdges``) and a numpy kernel replays the Spark
-loop round for round, and under ``LARGE_REGIME`` (the ``forced`` fixture of
+Each case runs the operator twice: by default, where a numpy kernel
+replays the Spark loop round for round over the edges on the driver
+(``_DriverEdges``), and under ``LARGE_REGIME`` (the ``forced`` fixture of
 ``test_large_regime.py``), where the Spark rounds run. The rows must be
 equal, capped runs included, and the driver path must run by default and
-never under the forced regime. Job-group pins on the sf0.001 TPC-H graph
-check that a warm call of the registry entries runs a constant handful of
-Spark jobs instead of one or more per round, and that bfs's Spark rounds
-end without ``sssp``'s min-per-id checkpoint.
+never under the forced regime. The edges come from the graph's
+``driver_projection``: collected on the graph's first driver solve over
+those relationship tables, then read by every later solve of any
+operator, which collects nothing and runs no Spark job; another graph
+object never reads an entry, and the forced regime never adds one.
+Job-group pins on the sf0.001 TPC-H graph check that a
+warm call of the registry entries runs only the caller's action, and
+that bfs's Spark rounds end without ``sssp``'s min-per-id checkpoint.
 """
 
 import itertools
@@ -17,6 +21,7 @@ import random
 
 import pytest
 
+from cypher_for_apache_spark_spark.graph import PropertyGraph
 from cypher_for_apache_spark_spark.operators import algorithms as alg
 from cypher_for_apache_spark_spark.sources import edgelist
 from test_large_regime import forced  # noqa: F401  (fixture: the at-scale regime)
@@ -71,10 +76,10 @@ def _driver_then_forced(request, monkeypatch, case, run):
     """Rows of ``run()`` by default and under the forced regime, which
     must be equal; checks which path each took."""
     collects = []
-    _spy(monkeypatch, "_DriverEdges", collects, "collect")
+    _spy(monkeypatch, "_DriverEdges", collects, "driver")
     default = _rows(run())
-    # an empty edge set has nothing to collect and takes the Spark loop
-    assert collects == (["collect"] if _CASES[case] else [])
+    # an empty edge set has nothing to solve and takes the Spark loop
+    assert collects == (["driver"] if _CASES[case] else [])
     collects.clear()
     request.getfixturevalue("forced")
     assert _rows(run()) == default
@@ -138,6 +143,73 @@ def test_sssp_null_weight_is_one(graphs):
     assert rows == {1: 0.0, 2: 1.0, 3: 1.0, 4: 2.0}
 
 
+def edge_collects(spark, monkeypatch):
+    """From now on, record every relationship frame collected through
+    ``toArrow()`` (the projection's and a filtered step's, whose first
+    column is ``src``; a sources collect has one column)."""
+    calls = []
+    cls = type(spark.range(1))
+    real = cls.toArrow
+
+    def spy(df):
+        if df.columns[0] == "src":
+            calls.append(df.columns)
+        return real(df)
+
+    monkeypatch.setattr(cls, "toArrow", spy)
+    return calls
+
+
+def run_jobs(spark, run):
+    """``run()`` and the Spark jobs it ran."""
+    sc = spark.sparkContext
+    group = f"driver-loop-jobs-{next(_groups)}"
+    sc.setJobGroup(group, group)
+    try:
+        out = run()
+    finally:
+        sc.setJobGroup(None, None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+_SOLVES = {
+    "sssp": lambda g: alg.sssp(g, _sources("star"), weight_prop="w"),
+    "bfs": lambda g: alg.bfs_distances(g, _sources("star")),
+    "bfs_undirected": lambda g: alg.bfs_distances(g, _sources("star"), undirected=True),
+    "k_core": lambda g: alg.k_core(g, k=2),
+}
+
+
+@pytest.mark.parametrize("solve", sorted(_SOLVES))
+def test_later_solves_read_the_projection(spark, request, monkeypatch, graphs, solve):
+    """A second driver solve on a graph reads the graph's projection: no
+    collect, no Spark job, no new entry, the Spark rounds' rows. The
+    forced regime, on another graph object over the same tables, never
+    fills that graph's projection."""
+    g = graphs["star"]
+    _rows(_SOLVES[solve](g))
+    entries = dict(g._projections)
+    collects = edge_collects(spark, monkeypatch)
+    rows, jobs = run_jobs(spark, lambda: _rows(_SOLVES[solve](g)))
+    assert collects == [] and jobs == 0 and g._projections == entries
+    # one entry per weight property asked for: none, and sssp's "w"
+    assert len(entries) <= 2
+    request.getfixturevalue("forced")
+    other = PropertyGraph(g.node_tables.values(), g.all_rel_tables())
+    assert _rows(_SOLVES[solve](other)) == rows
+    assert other._projections == {}
+
+
+def test_projection_is_per_graph(graphs):
+    """A graph over other tables (ids shifted into another id space)
+    never reads another graph's projection."""
+    g = graphs["chain"]
+    rows = _rows(alg.bfs_distances(g, [0]))
+    shift = 1 << 55
+    prefixed = g.with_prefixed_ids(1)
+    assert _rows(alg.bfs_distances(prefixed, [shift])) == [(shift + i, d) for i, d in rows]
+
+
 _groups = itertools.count()
 
 
@@ -147,23 +219,17 @@ def warm_jobs(spark, entry):
     import __spark_entry__ as E
 
     query = E.queries()[entry]
-    # the first call loads the graph and counts each relationship table
-    # once (element_rows)
+    # the first call loads the graph, counts each relationship table once
+    # (element_rows) and collects the driver projection
     query(spark, SF_DIR).collect()
-    sc = spark.sparkContext
-    group = f"driver-loop-jobs-{next(_groups)}"
-    sc.setJobGroup(group, group)
-    try:
-        query(spark, SF_DIR).collect()
-    finally:
-        sc.setJobGroup(None, None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
+    return run_jobs(spark, lambda: query(spark, SF_DIR).collect())[1]
 
 
 @pytest.mark.parametrize("entry", ["sssp_customer_parts", "k_core_tpch"])
 def test_registry_entry_job_count(spark, entry):
-    # a warm call collects the edges once and runs the caller's action
-    assert warm_jobs(spark, entry) <= 3
+    # a warm call reads the graph's projection and returns a local frame,
+    # whose collect runs no job (one collect job before the projection)
+    assert warm_jobs(spark, entry) == 0
 
 
 @pytest.mark.parametrize("entry", ["bfs_region_reach", "call_bfs_region"])

@@ -1,22 +1,26 @@
 """shortestPath / allShortestPaths solve on the driver when the pattern's
 relationships fit the broadcast gate.
 
-Each case plans the query twice: by default, where the step and the
-sources are collected once and a numpy kernel replays the Spark rounds
-(``algorithms._trails_on_driver``), and with ``BROADCAST_ROW_LIMIT`` at 0,
-where the rounds are Spark joins. The collected rows, relationship-id
-lists included, must be equal, and each run must have taken the path it
-was meant to. A row-cap case sets the gate between the fixture's edge
-count and its path count, so the kernel gives up and the Spark rounds run.
-A pin on the sf0.001 TPC-H graph checks that a warm call of
-``shortest_path_orders`` checkpoints no round.
+Each case plans the query twice: by default, where a numpy kernel replays
+the Spark rounds (``algorithms._trails_on_driver``) from the distinct
+sources, collected per call, over the graph's ``driver_projection`` of
+the pattern's relationships, collected on the graph's first driver solve
+over them, and with ``BROADCAST_ROW_LIMIT`` at 0, where the rounds are
+Spark joins. The collected rows, relationship-id lists included, must be
+equal, and each run must have taken the path it was meant to. A second
+call collects no relationships; a pattern with an inline property map
+collects its filtered step per call and adds no projection entry. A
+row-cap case sets the gate between the fixture's edge count and its path
+count, so the kernel gives up and the Spark rounds run. A pin on the
+sf0.001 TPC-H graph checks that a warm call of ``shortest_path_orders``
+checkpoints no round.
 """
 
 import pytest
 
 from cypher_for_apache_spark_spark import materialize
 from cypher_for_apache_spark_spark.plans import planner as planner_mod
-from test_driver_loops import warm_jobs
+from test_driver_loops import edge_collects, warm_jobs
 
 
 @pytest.fixture(scope="module")
@@ -24,15 +28,16 @@ def g(session, spark):
     #  0 ─▶ 1 ─▶ 3 ─▶ 7       diamond 0→3 through 1 and 2, and a 3-hop
     #  ├─▶ 2 ═══▶ 3           path through 4 and 5; 2→3 twice (parallel)
     #  └─▶ 4 ─▶ 5 ─▶ 3        6 has a self loop, 8 is isolated
-    #  6 ─▶ 6                 F: one direct edge 0→3
+    #  6 ─▶ 6                 F: one direct edge 0→3; E's w groups
     nodes = {"N": spark.createDataFrame([(i, f"n{i}") for i in range(9)], "id long, name string")}
     rels = {
         "E": spark.createDataFrame(
             [
-                (100, 0, 1), (101, 0, 2), (102, 1, 3), (103, 2, 3), (109, 2, 3),
-                (104, 0, 4), (105, 4, 5), (106, 5, 3), (107, 6, 6), (108, 3, 7),
+                (100, 0, 1, 1), (101, 0, 2, 1), (102, 1, 3, 1), (103, 2, 3, 2),
+                (109, 2, 3, 2), (104, 0, 4, 3), (105, 4, 5, 3), (106, 5, 3, 3),
+                (107, 6, 6, 1), (108, 3, 7, 2),
             ],
-            "id long, src long, dst long",
+            "id long, src long, dst long, w long",
         ),
         "F": spark.createDataFrame([(200, 0, 3)], "id long, src long, dst long"),
     }
@@ -116,6 +121,37 @@ def test_ties_are_broken_and_kept(g):
     ]
 
 
+@pytest.mark.parametrize("case", ["ties", "undirected"])
+def test_second_call_reads_the_projection(g, spark, monkeypatch, case):
+    """After a first call, a shortestPath over the same relationship types
+    reads the graph's projection: no relationship collect, no new entry,
+    and the rows of the Spark rounds."""
+    q = _query(case, "shortestPath")
+    g.cypher(q).df.collect()
+    entries = dict(g._projections)
+    collects = edge_collects(spark, monkeypatch)
+    calls = _spy_kernel(monkeypatch)
+    driver = _rows(g.cypher(q).df)
+    assert calls == [True] and collects == [] and g._projections == entries
+    monkeypatch.setattr(materialize, "BROADCAST_ROW_LIMIT", 0)
+    assert _rows(g.cypher(q).df) == driver
+
+
+def test_inline_map_step_adds_no_projection(g, spark, monkeypatch):
+    """A pattern with an inline property map collects its filtered step on
+    each call: three parameter values add no projection entry, and each
+    call's rows are those of the Spark rounds."""
+    q = "MATCH shortestPath((a:N)-[r:E*1..3 {w: $w}]->(b:N)) RETURN a.name, b.name, r AS ids"
+    entries = dict(g._projections)
+    collects = edge_collects(spark, monkeypatch)
+    calls = _spy_kernel(monkeypatch)
+    driver = [_rows(g.cypher(q, {"w": w}).df) for w in (1, 2, 3)]
+    assert all(driver) and calls == [True] * 3 and len(collects) == 3
+    assert g._projections == entries
+    monkeypatch.setattr(materialize, "BROADCAST_ROW_LIMIT", 0)
+    assert [_rows(g.cypher(q, {"w": w}).df) for w in (1, 2, 3)] == driver
+
+
 @pytest.mark.parametrize("fn", ["shortestPath", "allShortestPaths"])
 def test_row_cap_falls_back_to_spark_rounds(g, monkeypatch, fn):
     """With the gate at the E table's 10 rows, the relationships fit (and
@@ -133,8 +169,9 @@ def test_row_cap_falls_back_to_spark_rounds(g, monkeypatch, fn):
 
 
 def test_shortest_path_orders_checkpoints_no_round(spark, monkeypatch):
-    """A warm call collects the step and the sources and runs the
-    caller's action: 7 jobs, where the Spark rounds ran 21."""
+    """A warm call reads the graph's projection, collects the sources and
+    runs the caller's action: 6 jobs, where the Spark rounds ran 21 (and 7
+    when each call collected the step)."""
     rounds = []
     real = planner_mod.materialize_count
 
@@ -143,7 +180,7 @@ def test_shortest_path_orders_checkpoints_no_round(spark, monkeypatch):
         return real(df)
 
     monkeypatch.setattr(planner_mod, "materialize_count", spy)
-    assert warm_jobs(spark, "shortest_path_orders") <= 7
+    assert warm_jobs(spark, "shortest_path_orders") == 6
     assert rounds == []
 
 

@@ -238,6 +238,23 @@ def test_var_length_bound_target_must_be_node(team_graph):
         )
 
 
+def test_var_length_reads_its_record_once(team_graph):
+    """Every level of a bounded var-length expand starts from the
+    incoming record's source ids. Materialized once, the record's joins
+    and scans sit once in the optimized plan (17 leaves); derived lazily,
+    every level held its own copy of them (29 leaves)."""
+    import re
+
+    r = run(
+        team_graph,
+        "MATCH (a:German {name: 'Stefan'})-[:KNOWS]->(m) "
+        "MATCH (a)-[:KNOWS*1..3]->(b) RETURN b.name AS name",
+    )
+    plan = r.df._jdf.queryExecution().optimizedPlan().toString()
+    assert len(re.findall(r"\b(?:LocalRelation|LogicalRDD)\b", plan)) == 17
+    assert sorted(m["name"] for m in r.to_maps()) == ["Martin", "Mats", "Max"]
+
+
 def test_labels_function(team_graph):
     r = run(team_graph, "MATCH (n {name: 'Mats'}) RETURN labels(n) AS l")
     assert r.to_maps()[0]["l"] == ["Person", "Swede"]
